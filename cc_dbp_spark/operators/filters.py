@@ -93,7 +93,9 @@ def build_bloom_df(seen_df, spec: BloomSpec, hash_col: str = "url_hash"):
     """
     from pyspark.sql import functions as F
 
-    def _build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # the grouped/cogrouped kernels in this module carry no type hints:
+    # applyInPandas warns on every call when it finds partial ones
+    def _build(key, pdf):
         bm = spec.build_bitmap(pdf[hash_col].to_numpy(dtype=np.int64))
         return pd.DataFrame({"pid": [key[0]], "bitmap": [bm]})
 
@@ -120,7 +122,7 @@ def prune_with_bloom(candidates_df, bloom_df, spec: BloomSpec, hash_col: str = "
     out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in cand.schema.fields)
     out_schema += ", maybe_seen boolean"
 
-    def _probe(key, cand_pdf: pd.DataFrame, bloom_pdf: pd.DataFrame) -> pd.DataFrame:
+    def _probe(key, cand_pdf, bloom_pdf):
         if len(cand_pdf) == 0:
             return cand_pdf.assign(maybe_seen=pd.Series([], dtype=bool))
         if len(bloom_pdf) == 0:
@@ -154,7 +156,7 @@ def update_bloom_df(prev_bloom_df, new_seen_df, spec: BloomSpec,
     fresh = build_bloom_df(new_seen_df, spec, hash_col=hash_col)
     both = prev_bloom_df.unionByName(fresh)
 
-    def _or(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _or(key, pdf):
         acc = np.frombuffer(pdf["bitmap"].iloc[0], dtype=np.uint8)
         for b in pdf["bitmap"].iloc[1:]:
             acc = acc | np.frombuffer(b, dtype=np.uint8)
@@ -164,7 +166,9 @@ def update_bloom_df(prev_bloom_df, new_seen_df, spec: BloomSpec,
 
 
 def empty_bloom_df(spark):
-    return spark.createDataFrame([], "pid int, bitmap binary")
+    from cc_dbp_spark.session import empty_df
+
+    return empty_df(spark, "pid int, bitmap binary")
 
 
 # The live probe broadcast, one STRONG slot (app_id, Broadcast). Strong
@@ -266,7 +270,7 @@ def build_cuckoo_df(seen_df, capacity_per_partition: int, num_partitions: int = 
     to parquet, reload, cogroup-probe). Returns (pid int, table binary)."""
     from pyspark.sql import functions as F
 
-    def _build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _build(key, pdf):
         cf = CuckooFilter(capacity_per_partition)
         failed = cf.insert(pdf[hash_col].to_numpy(dtype=np.int64))
         # overflow would create FALSE NEGATIVES (seen url reported
@@ -298,7 +302,7 @@ def update_cuckoo_df(prev_cuckoo_df, new_seen_df, capacity_per_partition: int,
         "pid", F.pmod(F.col(hash_col), F.lit(num_partitions)).cast("int")
     ).select("pid", hash_col)
 
-    def _upd(key, prev_pdf: pd.DataFrame, new_pdf: pd.DataFrame) -> pd.DataFrame:
+    def _upd(key, prev_pdf, new_pdf):
         if len(prev_pdf):
             cf = CuckooFilter.from_bytes(prev_pdf["table"].iloc[0])
             sat = bool(prev_pdf["saturated"].iloc[0])
@@ -318,7 +322,9 @@ def update_cuckoo_df(prev_cuckoo_df, new_seen_df, capacity_per_partition: int,
 
 
 def empty_cuckoo_df(spark):
-    return spark.createDataFrame([], "pid int, table binary, saturated boolean")
+    from cc_dbp_spark.session import empty_df
+
+    return empty_df(spark, "pid int, table binary, saturated boolean")
 
 
 def prune_with_cuckoo(candidates_df, cuckoo_df, num_partitions: int = 16,
@@ -337,7 +343,7 @@ def prune_with_cuckoo(candidates_df, cuckoo_df, num_partitions: int = 16,
     out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in cand.schema.fields)
     out_schema += ", maybe_seen boolean"
 
-    def _probe(key, cand_pdf: pd.DataFrame, ck_pdf: pd.DataFrame) -> pd.DataFrame:
+    def _probe(key, cand_pdf, ck_pdf):
         if len(cand_pdf) == 0:
             return cand_pdf.assign(maybe_seen=pd.Series([], dtype=bool))
         if len(ck_pdf) == 0:

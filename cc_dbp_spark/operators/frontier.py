@@ -1,8 +1,18 @@
-"""URL-frontier + fetch scheduler — one scheduling round as one
-declarative DataFrame job (the north-rule pipeline):
+"""URL-frontier + fetch scheduler — one scheduling round as declarative
+DataFrame ops (the north-rule pipeline):
 
     canonicalize -> membership-test -> dedupe -> politeness-bucket
     -> top-k per host -> fetch batch -> outlinks -> state update
+
+A round is not one Spark job. Under AQE, ``localCheckpoint(eager=False)``
+runs the shuffle and broadcast stages upstream of it when it is called,
+so every checkpoint is a driver barrier and every exchange its own small
+job. A first round on 4 cores runs about 18 jobs: :func:`run_round`
+checkpoints the flagged rows, the per-host rank, ONE per-host table
+(audit, credit and fetch-order offsets all derive from it) and the
+fetched rows; :func:`advance_round_state` checkpoints the credit and
+filter tables and runs one count job. Every other output is a narrow
+projection of those checkpoints.
 
 Semantics are defined by the pure-Python oracle
 (:mod:`cc_dbp_spark.oracle.scheduler`); differential tests assert the
@@ -61,6 +71,7 @@ from cc_dbp_spark.functions.priority import priority_score
 from cc_dbp_spark.functions import urlnorm
 from cc_dbp_spark.functions.urlnorm import host_col, pathq_col, with_canonical
 from cc_dbp_spark.operators import filters as flt
+from cc_dbp_spark.session import empty_df
 
 
 @dataclasses.dataclass
@@ -96,6 +107,7 @@ class CrawlConfig:
 
 
 FRONTIER_SCHEMA = "url string, host string, depth int, link_count bigint, round_added int"
+FRONTIER_COLS = ("url", "host", "depth", "link_count", "round_added")
 SEEN_SCHEMA = "url string, url_hash bigint, round_seen int"
 CREDIT_SCHEMA = "host string, credit double"
 
@@ -212,10 +224,12 @@ def _score_and_local_topk(max_buffer_rows: int = 2_000_000):
 
 
 def empty_state(spark: SparkSession) -> dict[str, DataFrame]:
+    """Round-0 state as empty relations the optimizer can see, so a first
+    round plans no scans of them and folds their joins and unions away."""
     return {
-        "frontier": spark.createDataFrame([], FRONTIER_SCHEMA),
-        "seen": spark.createDataFrame([], SEEN_SCHEMA),
-        "credit": spark.createDataFrame([], CREDIT_SCHEMA),
+        "frontier": empty_df(spark, FRONTIER_SCHEMA),
+        "seen": empty_df(spark, SEEN_SCHEMA),
+        "credit": empty_df(spark, CREDIT_SCHEMA),
     }
 
 
@@ -569,8 +583,11 @@ def _fused_schedule(
     is dedupe-invariant, and salting never changes the schedule (it only
     balances partitions — test_salted_topk_equals_plain).
 
-    Returns (flagged, budgets, scheduled, hot): flagged is checkpointed
-    with the legacy columns + (tie, salt, priority, k, delay, r1).
+    Returns (flagged, budgets, scheduled, deferred): flagged is checkpointed
+    with the legacy columns + (tie, salt, priority, k, delay, credit0,
+    r1), where credit0 is the host's credit after this round's accrual;
+    deferred holds the allowed rows that were not scheduled, in the
+    frontier's columns.
     """
     spark = candidates.sparkSession
     canon = with_canonical(candidates, "url", out="url").select("url", "depth")
@@ -657,8 +674,9 @@ def _fused_schedule(
     # (skip the canonicalizer, estimate from a sample) are free; the
     # hash sample is partition-layout-independent, so the estimate is
     # stable across runs and cluster sizes. The hot table stays a
-    # DataFrame consumed via a broadcast join — no driver collect, no
-    # separate Spark job: the whole round remains ONE action.
+    # DataFrame consumed via a broadcast join, not a driver collect; its
+    # aggregate and broadcast are two of the small jobs that run when
+    # `flagged` is checkpointed (see run_round).
     _S = 8
     hot_src = (
         candidates.select("url")
@@ -718,9 +736,12 @@ def _fused_schedule(
     )
     flagged = (
         dedup.withColumn("priority", priority_col("depth", "link_count"))
-        .join(F.broadcast(budgets.select("host", "k", "delay")), "host", "left")
+        .join(F.broadcast(budgets.select("host", "k", "delay", "credit0")), "host", "left")
         .withColumn("k", F.coalesce(F.col("k"), F.lit(default_k)))
         .withColumn("delay", F.coalesce(F.col("delay"), F.lit(default_delay)))
+        .withColumn(
+            "credit0", F.coalesce(F.col("credit0"), F.lit(float(cfg.round_budget_s)))
+        )
         .withColumn("r1", F.row_number().over(w1))
     )
     if cfg.cache_flagged:
@@ -742,17 +763,29 @@ def _fused_schedule(
     # per-(host, salt) top-k survivors (bounded by num_splits * k per
     # host), and for unsalted hosts it reproduces r1 exactly — one plan
     # for both regimes, no driver-side branch on hot detection.
-    pre1 = flagged.filter(
-        ~F.col("denied") & (F.col("k") > 0) & (F.col("r1") <= F.col("k"))
-    )
+    allowed = ~F.col("denied")
+    in_split_topk = (F.col("k") > 0) & (F.col("r1") <= F.col("k"))
     order = [F.col("priority").desc(), F.col("tie").asc(), F.col("url").asc()]
     w2 = Window.partitionBy("host").orderBy(*order)
-    scheduled = (
-        pre1.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= F.col("k"))
+    ranked = (
+        flagged.filter(allowed & in_split_topk)
+        .withColumn("rank", F.row_number().over(w2))
         .drop("r1", "salt")
     )
-    return flagged, budgets, scheduled, True
+    if cfg.cache_flagged:
+        # O(schedule) rows, read by both outputs below: materialized
+        # once, they make the next frontier a narrow union of checkpoints
+        ranked = ranked.localCheckpoint(eager=False)
+    scheduled = ranked.filter(F.col("rank") <= F.col("k"))
+    # the allowed rows left for later rounds, without an anti-join of the
+    # frontier against the schedule: rows outside their split's top-k,
+    # plus split top-k rows that lost the per-host rank (hot hosts only)
+    deferred = (
+        flagged.filter(allowed & ~in_split_topk)
+        .select(*FRONTIER_COLS)
+        .unionByName(ranked.filter(F.col("rank") > F.col("k")).select(*FRONTIER_COLS))
+    )
+    return flagged, budgets, scheduled, deferred
 
 
 
@@ -789,66 +822,56 @@ def run_round(
     if frontier_nonempty is None:
         frontier_nonempty = not frontier.isEmpty()
 
-    # single-shuffle fused round (differential-tested against the
-    # reference composition _merge_candidates + _robots_flag +
-    # _topk_per_host, and against the pure-Python oracle)
-    flagged, budgets, scheduled, _ = _fused_schedule(
+    # Round jobs. Under AQE, localCheckpoint(eager=False) runs the shuffle
+    # and broadcast stages upstream of it when it is CALLED; only the
+    # final stage waits for the first action. Every checkpoint is
+    # therefore a driver barrier. The round keeps four: `flagged` (inside
+    # _fused_schedule: hot-host and budget aggregates, robots broadcast,
+    # the (host, salt) shuffle), `ranked` (the per-host rank), the
+    # per-host table and `fetched` (offsets windows, docs broadcast).
+    # Every other output is a narrow projection of them.
+    # A schedule-throughput-only caller (cache_flagged=False) consumes
+    # one output, so its round stays a single unplanned DAG.
+    flagged, _, scheduled, deferred = _fused_schedule(
         candidates, frontier, seen, robots, credit, rnd, cfg,
         seen_nonempty, frontier_nonempty,
         filter_df=state.get("filter"),
     )
     _mark("flagged_ckpt")
 
-    # intra-round branch checkpoints serve callers that consume SEVERAL
-    # round outputs (each lazy checkpoint both caches for reuse and
-    # truncates the branch's physical-planning tree). A
-    # schedule-throughput-only caller (cache_flagged=False) consumes one
-    # output, so the round stays a single unplanned DAG until its one
-    # action — no cache writes, one planning pass.
     def ck(df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=False) if cfg.cache_flagged else df
 
-    allowed = flagged.select(
-        "url", "host", "depth", "link_count", "round_added", "denied"
-    ).filter(~F.col("denied")).drop("denied")
-    # ONE per-host stats pass feeds denial audit and the per-host
-    # candidate counts in the round audit (tiny table: a row per active
-    # host) — every extra aggregation over `flagged` is a full scan, so
-    # they're fused.
-    host_stats = (
+    # ONE per-host aggregate feeds every O(hosts) output: the audit, the
+    # credit update and the fetch-order offsets. Its host set is the
+    # round's active set (hosts with allowed or denied rows), which is
+    # where the oracle accrues credit. scheduled = min(allowed, k) is
+    # exact because the round takes each host's top-k allowed rows.
+    hosts = ck(
         flagged.groupBy("host")
         .agg(
-            F.count(F.when(~F.col("denied"), 1)).alias("n"),
+            F.count(F.when(~F.col("denied"), 1)).alias("candidates"),
             F.count(F.when(F.col("denied"), 1)).alias("denied"),
+            F.first("k").alias("k"),
+            F.first("delay").alias("delay"),
+            F.first("credit0").alias("credit0"),
+        )
+        .withColumn(
+            "scheduled",
+            F.least(F.col("candidates"), F.greatest(F.col("k"), F.lit(0)).cast("bigint")),
         )
     )
-    host_stats = ck(host_stats)
-    _mark("host_stats_ckpt")
-    cand_per_host = host_stats.select("host", "n")
-    denied_counts = host_stats.filter(F.col("denied") > 0).select("host", "denied")
-
-    # scheduled is multi-consumer in EVERY mode (offsets broadcast +
-    # fetch batch + per-host stats) and only O(schedule) rows — always
-    # checkpoint it, or the offsets broadcast subtree re-runs the whole
-    # frontier pipeline a second time
-    scheduled = scheduled.localCheckpoint(eager=False)
-    _mark("topk_ckpt")
+    _mark("hosts_ckpt")
 
     # global deterministic crawl order: host ASC, per-host rank ASC.
-    # position = host_offset + rank - 1, with offsets from a cumulative
-    # sum over the tiny per-host scheduled counts — fully parallel, no
-    # single-partition window over the whole batch.
-    sched_per_host = ck(scheduled.groupBy("host").agg(
-        F.count("*").alias("scheduled"), F.first("delay").alias("delay_s")
-    ))
-    _mark("sched_per_host_ckpt")
-    # two-level cumulative sum over per-host scheduled counts: level 1
-    # partitions by the 2-char host prefix (a true prefix, so global
-    # host-ASC order == (bucket ASC, host ASC)); level 2 runs over the
-    # per-bucket totals, a table bounded by the prefix alphabet (~2k
-    # rows at ANY frontier scale), so no window anywhere spans an
-    # unbounded single partition.
-    bkts = sched_per_host.withColumn("bkt", F.substring("host", 1, 2))
+    # position = host_offset + rank - 1, with offsets from a two-level
+    # cumulative sum over the per-host scheduled counts: level 1 runs
+    # within the 2-char host prefix (a true prefix, so global host-ASC
+    # order == (bucket ASC, host ASC)); level 2 over the per-bucket
+    # totals, a table bounded by the prefix alphabet (~2k rows at ANY
+    # frontier scale), so no window spans an unbounded single partition.
+    # The bucket totals aggregate the level-1 output, which is already
+    # partitioned by bucket, so they add no shuffle.
     w_in = (
         Window.partitionBy("bkt")
         .orderBy(F.col("host").asc())
@@ -863,42 +886,38 @@ def run_round(
         .orderBy(F.col("bkt").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow - 1)
     )
+    within = hosts.select(
+        "host", "scheduled", F.substring("host", 1, 2).alias("bkt")
+    ).withColumn("within", F.coalesce(F.sum("scheduled").over(w_in), F.lit(0)))
     bkt_off = (
-        bkts.groupBy("bkt")
+        within.groupBy("bkt")
         .agg(F.sum("scheduled").alias("btot"))
         .select("bkt", F.coalesce(F.sum("btot").over(w_bkt), F.lit(0)).alias("bkt_off"))
     )
-    offsets = (
-        bkts.withColumn(
-            "within", F.coalesce(F.sum("scheduled").over(w_in), F.lit(0))
-        )
-        .join(F.broadcast(bkt_off), "bkt")
-        .select("host", (F.col("bkt_off") + F.col("within")).alias("host_offset"))
-    )
-    _mark("offsets_plan")
-    fetch_batch = scheduled.join(F.broadcast(offsets), "host").select(
-        F.lit(rnd).alias("round"),
-        (F.col("host_offset") + F.col("rank") - 1).cast("int").alias("position"),
-        "url",
-        "host",
-        "depth",
-        "link_count",
-        "priority",
-        "rank",
+    offsets = within.join(F.broadcast(bkt_off), "bkt").select(
+        "host", (F.col("bkt_off") + F.col("within")).alias("host_offset")
     )
 
     # fetch = join against the documents table (sandbox stand-in for the
     # WARC fetch stage S3; real deployment swaps this seam for an HTTP
     # mapInPandas with retry columns, SaveCommonCrawlBase.java:90-202)
-    fetched = (
-        fetch_batch.alias("b")
+    fetched = ck(
+        scheduled.join(F.broadcast(offsets), "host")
+        .select(
+            F.lit(rnd).alias("round"),
+            (F.col("host_offset") + F.col("rank") - 1).cast("int").alias("position"),
+            "url", "host", "depth", "link_count", "priority", "rank",
+        )
+        .alias("b")
         .join(docs.alias("d"), F.col("b.url") == F.col("d.doc_id"), "left")
         .select("b.*", F.col("d.spans").alias("spans"))
-        .withColumn("fetch_status", F.when(F.col("spans").isNotNull(), "fetched").otherwise("miss"))
+        .withColumn(
+            "fetch_status",
+            F.when(F.col("spans").isNotNull(), "fetched").otherwise("miss"),
+        )
     )
-    _mark("fetched_plan")
-    fetched = ck(fetched)
     _mark("fetched_ckpt")
+    fetch_batch = fetched.drop("spans", "fetch_status")
 
     outlinks = (
         fetched.filter(F.col("fetch_status") == "fetched")
@@ -912,67 +931,43 @@ def run_round(
             "url", F.xxhash64(F.col("url")).alias("url_hash"), F.lit(rnd).alias("round_seen")
         )
     )
-    new_frontier = allowed.join(fetch_batch.select("url"), "url", "left_anti")
-
     # filter-snapshot update: O(newly scheduled urls) per round. With no
-    # carried snapshot (fresh start / legacy resume) seed it from the full
-    # updated seen set once; every later round is incremental.
+    # carried snapshot (fresh start / legacy resume) build it from the
+    # full updated seen set once; every later round is incremental.
     new_filter = None
     if cfg.use_bloom:
         prev = state.get("filter")
-        newly = (
-            fetch_batch.select(F.xxhash64(F.col("url")).alias("url_hash"))
-            if prev is not None
-            else new_seen.select("url_hash")
-        )
-        if cfg.filter_kind == "cuckoo":
-            per_part = max(1024, cfg.bloom_capacity // cfg.bloom_partitions)
-            new_filter = flt.update_cuckoo_df(
-                prev if prev is not None else flt.empty_cuckoo_df(spark),
-                newly, per_part, cfg.bloom_partitions,
+        per_part = max(1024, cfg.bloom_capacity // cfg.bloom_partitions)
+        spec = flt.BloomSpec(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_partitions)
+        if prev is None:
+            seen_hashes = new_seen.select("url_hash")
+            new_filter = (
+                flt.build_cuckoo_df(seen_hashes, per_part, cfg.bloom_partitions)
+                if cfg.filter_kind == "cuckoo"
+                else flt.build_bloom_df(seen_hashes, spec)
             )
         else:
-            spec = flt.BloomSpec(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_partitions)
-            new_filter = flt.update_bloom_df(
-                prev if prev is not None else flt.empty_bloom_df(spark), newly, spec
+            newly = fetch_batch.select(F.xxhash64(F.col("url")).alias("url_hash"))
+            new_filter = (
+                flt.update_cuckoo_df(prev, newly, per_part, cfg.bloom_partitions)
+                if cfg.filter_kind == "cuckoo"
+                else flt.update_bloom_df(prev, newly, spec)
             )
 
-    # credit accrues for the ACTIVE host set (hosts with candidates this
-    # round, = host_stats' host set); budgets only carries the hosts with
-    # non-default state, so defaults coalesce in here exactly as they do
-    # at the schedule join.
-    new_credit_active = (
-        host_stats.select("host")
-        .join(F.broadcast(budgets.select("host", "credit0", "delay")), "host", "left")
-        .join(sched_per_host.select("host", "scheduled"), "host", "left")
-        .select(
-            "host",
-            (
-                F.coalesce(F.col("credit0"), F.lit(float(cfg.round_budget_s)))
-                - F.coalesce(F.col("scheduled"), F.lit(0))
-                * F.coalesce(F.col("delay"), F.lit(float(cfg.default_crawl_delay_s)))
-            ).alias("credit"),
-        )
+    new_credit_active = hosts.select(
+        "host", (F.col("credit0") - F.col("scheduled") * F.col("delay")).alias("credit")
     )
     new_credit = credit.join(new_credit_active.select("host"), "host", "left_anti").unionByName(
         new_credit_active
     )
 
-    audit = (
-        cand_per_host.withColumnRenamed("n", "candidates")
-        .join(denied_counts, "host", "full_outer")
-        .join(sched_per_host.select("host", "scheduled"), "host", "full_outer")
-        .select(
-            F.lit(rnd).alias("round"),
-            "host",
-            F.coalesce(F.col("candidates"), F.lit(0)).alias("candidates"),
-            F.coalesce(F.col("denied"), F.lit(0)).alias("denied"),
-            F.coalesce(F.col("scheduled"), F.lit(0)).alias("scheduled"),
-            (
-                F.coalesce(F.col("candidates"), F.lit(0))
-                - F.coalesce(F.col("scheduled"), F.lit(0))
-            ).alias("deferred"),
-        )
+    audit = hosts.select(
+        F.lit(rnd).alias("round"),
+        "host",
+        "candidates",
+        "denied",
+        "scheduled",
+        (F.col("candidates") - F.col("scheduled")).alias("deferred"),
     )
 
     # per-partition lineage: which partition of the materialized fetch
@@ -992,7 +987,7 @@ def run_round(
     )
 
     return {
-        "frontier": new_frontier,
+        "frontier": deferred,
         "seen": new_seen,
         "credit": new_credit,
         "filter": new_filter,
@@ -1009,7 +1004,6 @@ def run_round(
 def advance_round_state(
     out: dict,
     n_seen_prev: int,
-    extra_counts: dict[str, DataFrame] | None = None,
     materialize_all_state: bool = False,
 ) -> tuple[DataFrame, DataFrame, dict, dict]:
     """Shared round-state bookkeeping for the batch round loop
@@ -1017,42 +1011,42 @@ def advance_round_state(
     (:class:`cc_dbp_spark.streaming.ingest.StreamingCrawl`) — one
     implementation so the two loops cannot drift.
 
-    Lazy-localCheckpoints the round's outputs and materializes them in
-    ONE fused tagged-union count job (three separate driver barriers
-    otherwise: batch count, outlink count, frontier emptiness probe).
-    Returns ``(batch, outlinks, new_state, counts)``; ``counts`` maps
-    'sched'/'out'/'frontier' (+ any ``extra_counts`` keys) to row
-    counts, and ``new_state`` carries n_seen / seen_nonempty /
-    frontier_nonempty forward.
+    Materializes the round in ONE fused tagged-union count job, which
+    yields the batch and outlink counts and the frontier emptiness probe
+    together. Returns ``(batch, outlinks, new_state, counts)``;
+    ``counts`` maps 'sched'/'out'/'frontier' to row counts, and
+    ``new_state`` carries n_seen / seen_nonempty / frontier_nonempty
+    forward.
 
-    ``materialize_all_state=True`` additionally folds seen/credit/filter
-    into the count job — required when the round's inputs are NOT
-    replayable later (a streaming micro-batch relation); the batch loop
-    leaves them lazy (they materialize inside the next round's first
-    job, and parquet inputs replay).
+    Only the two wide state outputs are checkpointed: credit (an
+    anti-join against the carried table) and the filter snapshot
+    (grouped UDFs). Under AQE each ``localCheckpoint(eager=False)`` runs
+    its upstream shuffle stages when it is called, so each one is a
+    barrier. Every other output is a narrow projection of the round's
+    own checkpoints (and of the carried seen set): batch, outlinks and
+    seen of `fetched`, frontier of `flagged` and `ranked`. This count
+    materializes them.
+
+    ``materialize_all_state=True`` additionally folds credit/filter into
+    the count job — required when the round's inputs are NOT replayable
+    later (a streaming micro-batch relation); the batch loop leaves them
+    lazy (they materialize inside the next round's first job, and parquet
+    inputs replay).
     """
-    batch = out["fetch_batch"].localCheckpoint(eager=False)
-    outlinks = out["outlinks"].localCheckpoint(eager=False)
-    new_state = {
-        k: out[k].localCheckpoint(eager=False) for k in ("frontier", "seen", "credit")
-    }
-    if out.get("filter") is not None:
-        new_state["filter"] = out["filter"].localCheckpoint(eager=False)
+    batch, outlinks = out["fetch_batch"], out["outlinks"]
+    new_state = {"frontier": out["frontier"], "seen": out["seen"]}
+    for k in ("credit", "filter"):
+        if out.get(k) is not None:
+            new_state[k] = out[k].localCheckpoint(eager=False)
     union = (
         batch.select(F.lit("sched").alias("k"))
         .unionByName(outlinks.select(F.lit("out").alias("k")))
         .unionByName(new_state["frontier"].select(F.lit("frontier").alias("k")))
     )
     if materialize_all_state:
-        union = union.unionByName(
-            new_state["seen"].select(F.lit("seen").alias("k"))
-        ).unionByName(new_state["credit"].select(F.lit("credit").alias("k")))
-        if new_state.get("filter") is not None:
-            union = union.unionByName(
-                new_state["filter"].select(F.lit("filter").alias("k"))
-            )
-    for name, df in (extra_counts or {}).items():
-        union = union.unionByName(df.select(F.lit(name).alias("k")))
+        for k in ("credit", "filter"):
+            if new_state.get(k) is not None:
+                union = union.unionByName(new_state[k].select(F.lit(k).alias("k")))
     counts = dict(
         (r["k"], r["n"])
         for r in union.groupBy("k").agg(F.count("*").alias("n")).collect()
@@ -1146,33 +1140,29 @@ class CrawlDriver:
             out = run_round(
                 self.spark, candidates, state, self.robots, self.docs, rnd, self.cfg
             )
-            # truncate state lineage every round — without this the
-            # logical plan grows per round and analysis dominates
-            # runtime. ALL checkpoints are lazy; advance_round_state's
-            # ONE fused count job materializes batch + outlinks +
-            # frontier together (localCheckpoint persists their
-            # partitions on first compute), yielding n_sched, n_out,
-            # and the frontier emptiness probe from a single per-round
-            # barrier — the round-2 loop spent three driver barriers on
-            # the same information.
+            # advance_round_state checkpoints the wide state tables,
+            # which truncates their lineage (without it the logical plan
+            # grows per round and analysis dominates runtime), then runs
+            # ONE fused count job for n_sched, n_out and the frontier
+            # emptiness probe. The checkpoints are not free: under AQE
+            # each call runs its upstream shuffle stages (see run_round).
             batch, candidates, state, counts = advance_round_state(
                 out, state.get("n_seen", 0)
             )
             n_sched = counts.get("sched", 0)
             n_out = counts.get("out", 0)
-            out["fetch_batch"] = batch
-            # _ckpt must write the MATERIALIZED checkpoints, not the
-            # pre-checkpoint plans (whose frontier anti-join / seen
-            # union would otherwise execute a second time per round
-            # just to feed the parquet writer)
-            for k in ("frontier", "seen", "credit"):
-                out[k] = state[k]
-            if state.get("filter") is not None:
-                out["filter"] = state["filter"]
+            # _ckpt must write the checkpointed state tables, not the
+            # pre-checkpoint plans (which would run a second time per
+            # round just to feed the parquet writer)
+            for k in ("credit", "filter"):
+                if state.get(k) is not None:
+                    out[k] = state[k]
             self._ckpt(rnd, out, candidates, n_seen=state["n_seen"])
+            # batch, audit and emitted project the round's checkpointed
+            # per-host table and fetched rows: no checkpoint of their own
             batches.append(batch)
-            audits.append(out["audit"].localCheckpoint(eager=False))
-            emitted.append(out["emitted"].localCheckpoint(eager=False))
+            audits.append(out["audit"])
+            emitted.append(out["emitted"])
             if n_sched == 0 and n_out == 0:
                 break
         # rounds complete: drop the final round's probe broadcast (the
@@ -1183,25 +1173,22 @@ class CrawlDriver:
 
         if not batches:
             # resume target already complete: nothing left to schedule
-            empty_sched = self.spark.createDataFrame(
-                [],
-                "round int, position int, url string, host string, depth int, "
-                "link_count bigint, priority double, rank int",
-            )
-            empty_audit = self.spark.createDataFrame(
-                [],
-                "round int, host string, candidates bigint, denied bigint, "
-                "scheduled bigint, deferred bigint",
-            )
-            empty_emitted = self.spark.createDataFrame(
-                [],
-                "round int, position int, url string, spans array<struct<"
-                "kind:string,text:string,media_ref:string,offset:int>>",
-            )
             return {
-                "schedule": empty_sched,
-                "audit": empty_audit,
-                "emitted": empty_emitted,
+                "schedule": empty_df(
+                    self.spark,
+                    "round int, position int, url string, host string, depth int, "
+                    "link_count bigint, priority double, rank int",
+                ),
+                "audit": empty_df(
+                    self.spark,
+                    "round int, host string, candidates bigint, denied bigint, "
+                    "scheduled bigint, deferred bigint",
+                ),
+                "emitted": empty_df(
+                    self.spark,
+                    "round int, position int, url string, spans array<struct<"
+                    "kind:string,text:string,media_ref:string,offset:int>>",
+                ),
                 "state": state,
             }
 

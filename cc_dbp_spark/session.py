@@ -11,7 +11,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -58,6 +58,23 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def empty_df(spark: SparkSession, schema: str) -> DataFrame:
+    """An empty DataFrame of ``schema`` that the optimizer can see is
+    empty: its optimized plan is ``LocalRelation <empty>``, so unions drop
+    it and joins against it fold away at planning time.
+    ``spark.createDataFrame([], schema)`` is instead an opaque Python-RDD
+    scan, which every plan over it must schedule and run."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    fields = StructType.fromDDL(schema).fields
+    return (
+        spark.range(1)
+        .select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in fields])
+        .where(F.lit(False))
+    )
 
 
 def clear_persisted(spark: SparkSession) -> int:

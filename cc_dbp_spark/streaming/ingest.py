@@ -93,21 +93,20 @@ class StreamingCrawl:
             self.spark, cand, self.state, self.robots, self.docs,
             int(batch_id), self.cfg,
         )
-        audit = out["audit"].localCheckpoint(eager=False)
         # shared bookkeeping with CrawlDriver.run (advance_round_state):
         # ONE fused count barrier; materialize_all_state because
         # everything derived from the micro-batch must materialize
         # INSIDE this call (the micro-batch relation is not guaranteed
-        # replayable after the trigger)
+        # replayable after the trigger). The audit projects the round's
+        # per-host table, which run_round materializes itself.
         batch, outlinks, new_state, _ = fr.advance_round_state(
-            out, self._n_seen, extra_counts={"audit": audit},
-            materialize_all_state=True,
+            out, self._n_seen, materialize_all_state=True,
         )
         self._carried_outlinks = outlinks
         self._n_seen = new_state["n_seen"]
         self.state = new_state
         self.rounds.append(batch)
-        self.audits.append(audit)
+        self.audits.append(out["audit"])
 
     def run_available_now(self, src_dir: str, checkpoint_dir: str):
         """Drain every candidate file currently in src_dir (one round

@@ -34,8 +34,8 @@ confidence sweeps:
   ``"auto"`` == ``None`` == a tight int cap, value-exact top-k over
   6 skewed corpora (half the vectors in one tight cluster).
 
-All three were run green in the round-5 closing session (recorded in
-COVERAGE.md).
+All eight differentials above were run green in the round-5 closing
+session (recorded in COVERAGE.md).
 """
 import os
 import random

@@ -220,3 +220,23 @@ def test_release_probe_broadcast_drops_slot_and_is_idempotent(spark):
     assert flt._last_probe_broadcast is None
     flt.release_probe_broadcast()  # idempotent
     assert flagged.filter("maybe_seen").count() == 40  # lazy plan survives
+
+
+def test_grouped_filter_kernels_raise_no_warnings(spark):
+    """The applyInPandas kernels carry no partial type hints, so building,
+    updating and probing either filter warns about nothing (a partial
+    hint makes PySpark warn that it cannot infer the eval type)."""
+    import warnings
+
+    from cc_dbp_spark.operators import filters as flt
+
+    spec = BloomSpec(capacity=4_000, fpr=0.01, num_partitions=4)
+    df = spark.createDataFrame([(int(h),) for h in _hashes(500, 21)], "url_hash bigint")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        bloom = flt.update_bloom_df(flt.empty_bloom_df(spark), df, spec)
+        cuckoo = flt.build_cuckoo_df(df, 1024, 4)
+        cuckoo = flt.update_cuckoo_df(cuckoo, df, 1024, 4)
+        _, maybe_b = flt.prune_with_bloom(df, bloom, spec)
+        _, maybe_c = flt.prune_with_cuckoo(df, cuckoo, 4)
+        assert maybe_b.count() == maybe_c.count() == 500

@@ -83,6 +83,50 @@ def test_audit_consistency(oracle_result, spark_result):
     assert got == want
 
 
+def test_credit_matches_oracle(oracle_result, spark_result):
+    """The carried politeness credit, host by host: the round derives it
+    from its per-host table as credit0 - scheduled * delay."""
+    got = {r["host"]: r["credit"] for r in spark_result["state"]["credit"].collect()}
+    assert got == oracle_result.credit
+
+
+# jobs of one first fixture round (run_round + advance_round_state), as
+# Spark's status tracker counts them: every exchange is its own job under
+# AQE, and a localCheckpoint runs its upstream exchanges when called. The
+# count is deterministic for a fixed plan and input, so the bound has no
+# margin: one re-added branch aggregate or checkpoint adds a job.
+ROUND0_JOBS = 18
+
+
+def test_round_job_count_and_visible_empty_state(spark, fixture_dir):
+    """A re-added branch checkpoint or extra aggregate shows up as extra
+    jobs; the empty round-0 state must stay visible to the optimizer
+    (an opaque empty scan would be planned and run every round 0)."""
+    from cc_dbp_spark.operators import filters as flt
+
+    empties = {**fr.empty_state(spark), "bloom": flt.empty_bloom_df(spark),
+               "cuckoo": flt.empty_cuckoo_df(spark)}
+    for name, df in empties.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation <empty>"), (name, plan)
+
+    docs = spark.read.parquet(str(fixture_dir / "documents_spans.parquet"))
+    seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
+    robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
+    cfg = fr.CrawlConfig(round_budget_s=3.0, max_rounds=1,
+                         bloom_capacity=1 << 14, bloom_partitions=4)
+    sc = spark.sparkContext
+    group = "test-round0-job-count"
+    sc.setJobGroup(group, "one fixture crawl round")
+    try:
+        res = fr.CrawlDriver(spark, robots, docs, cfg).run(seeds)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert res["schedule"].count() > 0
+    assert n_jobs <= ROUND0_JOBS, n_jobs
+
+
 def test_denied_host_never_scheduled(spark_result):
     # host44 is deny-all in the fixtures
     n = (
