@@ -32,8 +32,9 @@ Scale design (10^10-URL frontier, SURVEY.md §7):
   snapshots -> resumable from any round (the reference's output-exists
   resume, ``spark/.../RelexBuildDataset.java:72-93``).
 
-Python appears only in Arrow-vectorized UDFs (priority kernel, parity
-draws); every other expression is JVM/codegen.
+Python in the round runs only in the seen-filter kernels (the grouped
+and broadcast bloom/cuckoo UDFs of :mod:`.filters`); priority, tie draw
+and salt are native columns, and every other expression is JVM/codegen.
 
 Scale deployment notes (10^10 frontier, 1000 executors):
 * per-round costs are O(candidates) + O(bloom "maybe" confirm): the
@@ -61,13 +62,10 @@ import dataclasses
 import json
 import pathlib
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cc_dbp_spark.functions import parity
-from cc_dbp_spark.functions.priority import priority_score
 from cc_dbp_spark.functions import urlnorm
 from cc_dbp_spark.functions.urlnorm import host_col, pathq_col, with_canonical
 from cc_dbp_spark.operators import filters as flt
@@ -91,19 +89,6 @@ class CrawlConfig:
     bloom_broadcast_max_bytes: int = 64 << 20
     hot_host_threshold: int = 10_000  # counts above this get salted top-k
     hot_host_cap: int = 5_000  # target rows per salt split
-    # map-side bounded top-k prune (NBest pattern) before the rank shuffle:
-    # wins when the shuffle is network-bound (real cluster) or the
-    # frontier >> schedule; on a single box the extra Arrow pass over the
-    # full frontier costs more than the smaller sort saves, so default off
-    local_topk_prune: bool = False
-    # cache the post-dedupe ranked table inside the round. True (the
-    # production default) serves the three consumers of a full round —
-    # audit stats, schedule, next-frontier update — from one
-    # materialization. Schedule-throughput-only callers (the bench's
-    # scheduling-rate metric; any caller that ignores audit/frontier
-    # outputs) set False so the single consuming job streams straight
-    # through with no frontier-sized cache write at all.
-    cache_flagged: bool = True
 
 
 FRONTIER_SCHEMA = "url string, host string, depth int, link_count bigint, round_added int"
@@ -114,10 +99,6 @@ CREDIT_SCHEMA = "host string, credit double"
 # round-invariant placeholder for "added this round" inside the heavy
 # scheduling stage (see _fused_schedule); always sorts above real rounds
 _ROUND_SENTINEL = 2147483647
-CAND_SCHEMA = "url string, depth int"
-
-
-_udf_cache: dict[str, object] = {}
 
 
 def priority_col(depth, link_count):
@@ -131,98 +112,6 @@ def priority_col(depth, link_count):
     )
 
 
-def _tie_salt_udf():
-    """Fused (tie draw, hot-host salt) in ONE Arrow runner: a stage with
-    two chained pandas UDFs needs two Python workers per task slot — the
-    cold-start storm of the second pool dominated the whole round."""
-    if "tie_salt" not in _udf_cache:
-        @F.pandas_udf("tie double, salt int")
-        def fn(url: pd.Series, num_splits: pd.Series) -> pd.DataFrame:
-            u = url.fillna("")
-            tie = parity.pseudo_random_from_string(u)
-            ns = num_splits.fillna(1).to_numpy(dtype=np.int64)
-            salt = np.zeros(len(u), dtype=np.int32)
-            hot = ns > 1
-            if hot.any():
-                salt[hot] = parity.group_salt(u[hot], ns[hot]).astype(np.int32)
-            return pd.DataFrame({"tie": tie, "salt": salt})
-
-        _udf_cache["tie_salt"] = fn
-    return _udf_cache["tie_salt"]
-
-
-_PRUNE_SCHEMA = (
-    "url string, host string, depth int, link_count bigint, k int, "
-    "delay double, priority double, tie double, salt int"
-)
-_PRUNE_SORT_COLS = ["host", "salt", "priority", "tie", "url"]
-_PRUNE_SORT_ASC = [True, True, False, True, True]
-
-
-def _score_and_local_topk(max_buffer_rows: int = 2_000_000):
-    """mapInPandas kernel: per Arrow batch compute (priority, tie, salt)
-    vectorized, then keep only each partition's LOCAL top-k per
-    (host, salt) — the reference's bounded-heap NBest pattern (T1,
-    ``util/.../NBest.java:28-70``) as a map-side combiner.
-
-    The global top-k per group is a subset of every partition's local
-    top-k, so the downstream exact rank window shuffles O(groups * k)
-    rows instead of the whole frontier — at 10^10 URLs that is the
-    difference between sorting the frontier and sorting the schedule.
-    Priority/tie come from the SAME numpy kernels the oracle uses, so
-    ordering parity is bit-exact by construction.
-    """
-
-    def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Prunability first: when no (host, salt) group exceeds its k —
-        # the common case once rows spread across partitions (rows/host/
-        # partition < k) — the sort below would keep every row, so skip
-        # it. The group-size probe is ~10x cheaper than the 5-column sort.
-        grp = pdf.groupby(["host", "salt"], sort=False)
-        if (grp["k"].transform("size").to_numpy() <= pdf["k"].to_numpy()).all():
-            return pdf
-        pdf = pdf.sort_values(_PRUNE_SORT_COLS, ascending=_PRUNE_SORT_ASC, kind="mergesort")
-        keep = pdf.groupby(["host", "salt"], sort=False).cumcount() < pdf["k"].to_numpy()
-        return pdf[keep.to_numpy()]
-
-    def fn(batches):
-        buf: list[pd.DataFrame] = []
-        buffered = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            u = pdf["url"].fillna("")
-            ns = pdf["num_splits"].fillna(1).to_numpy(dtype=np.int64)
-            salt = np.zeros(len(pdf), dtype=np.int32)
-            hot = ns > 1
-            if hot.any():
-                salt[hot] = parity.group_salt(u[hot], ns[hot]).astype(np.int32)
-            out = pd.DataFrame(
-                {
-                    "url": u,
-                    "host": pdf["host"],
-                    "depth": pdf["depth"],
-                    "link_count": pdf["link_count"],
-                    "k": pdf["k"],
-                    "delay": pdf["delay"],
-                    "priority": priority_score(
-                        pdf["depth"].to_numpy(), pdf["link_count"].to_numpy()
-                    ),
-                    "tie": parity.pseudo_random_from_string(u),
-                    "salt": salt,
-                }
-            )
-            buf.append(out)
-            buffered += len(out)
-            if buffered > max_buffer_rows:
-                merged = prune(pd.concat(buf, ignore_index=True))
-                buf, buffered = [merged], len(merged)
-        if buf:
-            yield prune(pd.concat(buf, ignore_index=True))
-
-    return fn
-
-
 def empty_state(spark: SparkSession) -> dict[str, DataFrame]:
     """Round-0 state as empty relations the optimizer can see, so a first
     round plans no scans of them and folds their joins and unions away."""
@@ -231,76 +120,6 @@ def empty_state(spark: SparkSession) -> dict[str, DataFrame]:
         "seen": empty_df(spark, SEEN_SCHEMA),
         "credit": empty_df(spark, CREDIT_SCHEMA),
     }
-
-
-def _merge_candidates(
-    candidates: DataFrame,
-    frontier: DataFrame,
-    seen: DataFrame,
-    rnd: int,
-    cfg: CrawlConfig,
-    seen_nonempty: bool | None = None,
-    frontier_nonempty: bool | None = None,
-) -> DataFrame:
-    """canonicalize + aggregate + seen-prune + merge into frontier."""
-    canon = with_canonical(candidates, "url", out="url").select("url", "depth")
-    lc = F.lit(0).cast("bigint") if rnd == 0 else F.count("*").cast("bigint")
-    agg = canon.groupBy("url").agg(F.min("depth").alias("depth"), lc.alias("link_count"))
-    agg = agg.withColumn("url_hash", F.xxhash64(F.col("url")))
-
-    if seen_nonempty is None:
-        seen_nonempty = not seen.isEmpty()
-    # membership test: approximate filter prunes, exact anti-join confirms
-    if cfg.use_bloom and seen_nonempty:
-        if cfg.filter_kind == "cuckoo":
-            per_part = max(1024, cfg.bloom_capacity // cfg.bloom_partitions)
-            ck = flt.build_cuckoo_df(seen, per_part, cfg.bloom_partitions)
-            definitely_new, maybe = flt.prune_with_cuckoo(
-                agg, ck, cfg.bloom_partitions
-            )
-        else:
-            spec = flt.BloomSpec(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_partitions)
-            bloom = build_bloom(seen, spec)
-            definitely_new, maybe = flt.prune_with_bloom(agg, bloom, spec)
-        confirmed_new = maybe.join(seen.select("url"), "url", "left_anti")
-        new_urls = definitely_new.unionByName(confirmed_new)
-    elif seen_nonempty:
-        new_urls = agg.join(seen.select("url"), "url", "left_anti")
-    else:
-        # known-empty seen set (round 0): the anti-join would sort-merge
-        # the whole candidate set against nothing
-        new_urls = agg
-    new_urls = new_urls.drop("url_hash")
-
-    if frontier_nonempty is None:
-        frontier_nonempty = not frontier.isEmpty()
-    if not frontier_nonempty:
-        # fresh frontier (round 0 / post-drain): the full_outer merge
-        # below cannot broadcast and would sort-merge the whole candidate
-        # set against an empty side — skip it
-        merged = new_urls.select(
-            "url", "depth", "link_count", F.lit(rnd).alias("round_added")
-        )
-    else:
-        merged = (
-            frontier.select("url", "depth", "link_count", "round_added")
-            .alias("f")
-            .join(new_urls.alias("a"), "url", "full_outer")
-            .select(
-                F.col("url"),
-                F.least(F.col("f.depth"), F.col("a.depth")).alias("depth"),
-                (
-                    F.coalesce(F.col("f.link_count"), F.lit(0))
-                    + F.coalesce(F.col("a.link_count"), F.lit(0))
-                ).alias("link_count"),
-                F.coalesce(F.col("f.round_added"), F.lit(rnd)).alias("round_added"),
-            )
-        )
-    return merged.withColumn("host", host_col(F.col("url")))
-
-
-def build_bloom(seen: DataFrame, spec: flt.BloomSpec) -> DataFrame:
-    return flt.build_bloom_df(seen, spec)
 
 
 def _with_denied(df: DataFrame, robots: DataFrame) -> DataFrame:
@@ -366,15 +185,6 @@ def _with_denied(df: DataFrame, robots: DataFrame) -> DataFrame:
     return j.withColumn("denied", denied_expr).select(*cols, "denied")
 
 
-def _robots_flag(merged: DataFrame, robots: DataFrame) -> DataFrame:
-    """Frontier rows + a ``denied`` flag, returned as ONE DataFrame so the
-    caller can checkpoint the (expensive) upstream once and derive
-    allowed/denied by cheap narrow filters."""
-    return _with_denied(
-        merged.select("url", "host", "depth", "link_count", "round_added"), robots
-    )
-
-
 def _raw_host_col(url: Column) -> Column:
     """Cheap native host approximation straight off the RAW url (no
     canonicalization): lowercased authority, port stripped. Used ONLY
@@ -385,39 +195,6 @@ def _raw_host_col(url: Column) -> Column:
     after = F.substring_index(u, "://", -1)  # full string when no scheme
     hp = F.substring_index(F.substring_index(after, "/", 1), "?", 1)
     return F.lower(F.substring_index(hp, ":", 1))
-
-
-def _budget_cols(
-    hosts: DataFrame, credit: DataFrame, robots: DataFrame, cfg: CrawlConfig,
-    credit_alias: str, broadcast_robots: bool,
-) -> DataFrame:
-    """ONE implementation of the budget math (credit coalesce + crawl-
-    delay validation + k = floor(credit/delay)) shared by the state-table
-    and fused-stats derivations — two hand-maintained copies would let
-    the fused path desynchronize from the reference composition the
-    differential tests compare against."""
-    rb = robots.select("host", "crawl_delay_s")
-    if broadcast_robots:
-        rb = F.broadcast(rb)
-    return (
-        hosts.join(credit, "host", "left")
-        .join(rb, "host", "left")
-        .select(
-            "host",
-            (F.coalesce(F.col("credit"), F.lit(0.0)) + F.lit(cfg.round_budget_s)).alias(
-                credit_alias
-            ),
-            F.when(
-                F.col("crawl_delay_s").isNull()
-                | F.isnan("crawl_delay_s")  # NaN evades <=0; robots.py
-                | (F.col("crawl_delay_s") <= 0),  # rejects it, external
-                F.lit(cfg.default_crawl_delay_s),  # tables might not
-            )
-            .otherwise(F.col("crawl_delay_s"))
-            .alias("delay"),
-        )
-        .withColumn("k", F.floor(F.col(credit_alias) / F.col("delay")).cast("int"))
-    )
 
 
 def _budgets_from_state(
@@ -432,112 +209,24 @@ def _budgets_from_state(
     hosts = credit.select("host").unionByName(
         robots.select("host")
     ).distinct()
-    return _budget_cols(hosts, credit, robots, cfg, "credit0", broadcast_robots=False)
-
-
-def _host_budgets_from_stats(
-    host_stats: DataFrame, credit: DataFrame, robots: DataFrame, cfg: CrawlConfig
-) -> DataFrame:
-    """Like :func:`_budgets_from_state` but over the fused per-host stats
-    table's host set (which IS the active set: hosts with candidates or
-    denials this round)."""
-    return _budget_cols(
-        host_stats.select("host"), credit, robots, cfg, "credit",
-        broadcast_robots=True,
-    )
-
-
-def _topk_per_host(
-    allowed: DataFrame,
-    budgets: DataFrame,
-    cfg: CrawlConfig,
-    host_counts: DataFrame | None = None,
-) -> DataFrame:
-    """Priority top-k per host with hot-host salting (gsplits pattern).
-
-    Returns scheduled rows with a per-host rank. Two-phase:
-    phase 1 pre-prunes each (host, salt) split to its own top-k so the
-    final per-host window never sees more than num_splits*k rows of a
-    hot host; phase 2 is the exact per-host rank. Identical output to a
-    single-phase window (each global top-k row ranks <= k in its split).
-
-    host_counts: optional pre-computed (host, n) — callers that already
-    aggregate per-host counts (audit) pass it in so the detection pass
-    isn't a second full scan of `allowed`.
-    """
-    # LEFT join + defaults: budgets carries only hosts with non-default
-    # state (credit/robots); everyone else gets the default politeness
-    # budget — the same coalesce the fused path applies, and the
-    # contract _budgets_from_state documents. An inner join here would
-    # silently drop unknown hosts from the schedule.
-    default_k = int(cfg.round_budget_s / cfg.default_crawl_delay_s)
-    eligible = (
-        allowed.join(budgets.select("host", "k", "delay"), "host", "left")
-        .withColumn("k", F.coalesce(F.col("k"), F.lit(default_k)))
-        .withColumn(
-            "delay", F.coalesce(F.col("delay"), F.lit(float(cfg.default_crawl_delay_s)))
-        )
-        .filter(F.col("k") > 0)
-    )
-
-    # hot-host detection on pre-UDF columns (counting must not pay the
-    # tie Python stage); salting by allowed-count is equivalent to
-    # eligible-count — splitting a non-hot host never changes its top-k
-    if host_counts is None:
-        host_counts = allowed.groupBy("host").agg(F.count("*").alias("n"))
-    hot = host_counts.filter(F.col("n") > cfg.hot_host_threshold).withColumn(
-        "num_splits", F.ceil(F.col("n") / F.lit(cfg.hot_host_cap)).cast("int")
-    )
-    order = [F.col("priority").desc(), F.col("tie").asc(), F.col("url").asc()]
-
-    # host_counts is tiny (one row per host) — collect instead of
-    # isEmpty() so detection costs one job over the agg, not a full
-    # extra pass over `allowed`
-    hot_rows = hot.select("host", "num_splits").collect()
-
-    spark = allowed.sparkSession
-    if hot_rows:
-        hot_df = spark.createDataFrame(hot_rows, "host string, num_splits int")
-        src = eligible.join(F.broadcast(hot_df), "host", "left")
-    else:
-        src = eligible.withColumn("num_splits", F.lit(None).cast("int"))
-    src = src.select("url", "host", "depth", "link_count", "k", "delay", "num_splits")
-
-    if cfg.local_topk_prune:
-        # ONE Arrow pass scores (priority/tie/salt, numpy kernels shared
-        # with the oracle) AND map-side-prunes to each partition's local
-        # top-k per (host, salt) — the exact-rank windows below only see
-        # O(groups * k) rows, never the full frontier
-        pruned = src.mapInPandas(_score_and_local_topk(), _PRUNE_SCHEMA)
-    else:
-        # native priority + ONE fused Arrow runner for (tie, salt); the
-        # rank windows sort the full eligible set (fine until the
-        # frontier >> schedule or shuffle becomes network-bound)
-        pruned = (
-            src.withColumn("priority", priority_col("depth", "link_count"))
-            .withColumn("ts", _tie_salt_udf()(F.col("url"), F.col("num_splits")))
-            .select(
-                "url", "host", "depth", "link_count", "k", "delay",
-                "priority", F.col("ts.tie").alias("tie"), F.col("ts.salt").alias("salt"),
-            )
-        )
-
-    if not hot_rows:
-        w = Window.partitionBy("host").orderBy(*order)
-        return (
-            pruned.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= F.col("k"))
-            .drop("salt")
-        )
-
-    # phase 1: salted exact rank (D5 salt, RelexMention.java:127-132)
-    w1 = Window.partitionBy("host", "salt").orderBy(*order)
-    pre = pruned.withColumn("r1", F.row_number().over(w1)).filter(F.col("r1") <= F.col("k"))
-    w2 = Window.partitionBy("host").orderBy(*order)
     return (
-        pre.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= F.col("k"))
-        .drop("r1", "salt")
+        hosts.join(credit, "host", "left")
+        .join(robots.select("host", "crawl_delay_s"), "host", "left")
+        .select(
+            "host",
+            (F.coalesce(F.col("credit"), F.lit(0.0)) + F.lit(cfg.round_budget_s)).alias(
+                "credit0"
+            ),
+            F.when(
+                F.col("crawl_delay_s").isNull()
+                | F.isnan("crawl_delay_s")  # NaN evades <=0; robots.py
+                | (F.col("crawl_delay_s") <= 0),  # rejects it, external
+                F.lit(cfg.default_crawl_delay_s),  # tables might not
+            )
+            .otherwise(F.col("crawl_delay_s"))
+            .alias("delay"),
+        )
+        .withColumn("k", F.floor(F.col("credit0") / F.col("delay")).cast("int"))
     )
 
 
@@ -552,7 +241,7 @@ def _fused_schedule(
     seen_nonempty: bool,
     frontier_nonempty: bool,
     filter_df: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, bool]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Single-shuffle scheduling round:
     canonicalize -> seen-prune -> union frontier -> robots-flag ->
     tie/salt -> repartition(host, salt) -> in-partition merge-dedupe ->
@@ -563,13 +252,11 @@ def _fused_schedule(
     completes each politeness group, so the url merge-dedupe runs as an
     exchange-free hash aggregation and the salted rank window follows in
     the same stage (HashPartitioning(host, salt) satisfies both
-    operators' clustering requirement). The reference composition
-    (:func:`_merge_candidates` + :func:`_robots_flag` +
-    :func:`_topk_per_host`) pays a url-keyed aggregation shuffle, a
-    full-outer merge shuffle, AND a window shuffle over the same rows;
-    at frontier scale this is the difference between shuffling the
-    frontier once and three times per round. Differential-tested against
-    the reference composition and the pure-Python oracle.
+    operators' clustering requirement): the frontier is shuffled once
+    per round, not once per url merge, robots flag and rank window.
+    Differential-tested against the pure-Python oracle's one-round
+    :func:`cc_dbp_spark.oracle.scheduler.step` (flagged rows, schedule
+    and carried frontier).
 
     The carried frontier merges through the same aggregation: frontier
     rows contribute their accumulated link_count / earliest round_added,
@@ -583,13 +270,12 @@ def _fused_schedule(
     is dedupe-invariant, and salting never changes the schedule (it only
     balances partitions — test_salted_topk_equals_plain).
 
-    Returns (flagged, budgets, scheduled, deferred): flagged is checkpointed
+    Returns (flagged, scheduled, deferred): flagged is checkpointed
     with the legacy columns + (tie, salt, priority, k, delay, credit0,
     r1), where credit0 is the host's credit after this round's accrual;
     deferred holds the allowed rows that were not scheduled, in the
     frontier's columns.
     """
-    spark = candidates.sparkSession
     canon = with_canonical(candidates, "url", out="url").select("url", "depth")
     canon = canon.withColumn("host", host_col(F.col("url")))
 
@@ -744,14 +430,9 @@ def _fused_schedule(
         )
         .withColumn("r1", F.row_number().over(w1))
     )
-    if cfg.cache_flagged:
-        flagged = flagged.localCheckpoint(eager=False)
+    flagged = flagged.localCheckpoint(eager=False)
     # resolve the round sentinel AFTER the checkpoint: this narrow
-    # projection is the only per-round generated code on the heavy path.
-    # (Without cache_flagged there is no checkpoint and the projection
-    # fuses back into the heavy stage — fine, because the throughput
-    # callers that disable the cache run a single round per JVM and pay
-    # no repeated recompile.)
+    # projection is the only per-round generated code on the heavy path
     flagged = flagged.withColumn(
         "round_added",
         F.when(F.col("round_added") == _ROUND_SENTINEL, F.lit(rnd)).otherwise(
@@ -772,10 +453,9 @@ def _fused_schedule(
         .withColumn("rank", F.row_number().over(w2))
         .drop("r1", "salt")
     )
-    if cfg.cache_flagged:
-        # O(schedule) rows, read by both outputs below: materialized
-        # once, they make the next frontier a narrow union of checkpoints
-        ranked = ranked.localCheckpoint(eager=False)
+    # O(schedule) rows, read by both outputs below: materialized once,
+    # they make the next frontier a narrow union of checkpoints
+    ranked = ranked.localCheckpoint(eager=False)
     scheduled = ranked.filter(F.col("rank") <= F.col("k"))
     # the allowed rows left for later rounds, without an anti-join of the
     # frontier against the schedule: rows outside their split's top-k,
@@ -785,8 +465,7 @@ def _fused_schedule(
         .select(*FRONTIER_COLS)
         .unionByName(ranked.filter(F.col("rank") > F.col("k")).select(*FRONTIER_COLS))
     )
-    return flagged, budgets, scheduled, deferred
-
+    return flagged, scheduled, deferred
 
 
 def run_round(
@@ -803,16 +482,6 @@ def run_round(
     docs: the interleaved documents table
     (doc_id string, spans array<struct<kind,text,media_ref,offset>>).
     """
-    import os
-    import time as _time
-
-    _prof = os.environ.get("CCDBP_PROFILE") == "1"
-    _t0 = _time.time()
-
-    def _mark(label: str) -> None:
-        if _prof:
-            print(f"[round {rnd}] {label}: {_time.time() - _t0:.2f}s cum", flush=True)
-
     frontier, seen, credit = state["frontier"], state["seen"], state["credit"]
 
     seen_nonempty = state.get("seen_nonempty")
@@ -830,24 +499,18 @@ def run_round(
     # the (host, salt) shuffle), `ranked` (the per-host rank), the
     # per-host table and `fetched` (offsets windows, docs broadcast).
     # Every other output is a narrow projection of them.
-    # A schedule-throughput-only caller (cache_flagged=False) consumes
-    # one output, so its round stays a single unplanned DAG.
-    flagged, _, scheduled, deferred = _fused_schedule(
+    flagged, scheduled, deferred = _fused_schedule(
         candidates, frontier, seen, robots, credit, rnd, cfg,
         seen_nonempty, frontier_nonempty,
         filter_df=state.get("filter"),
     )
-    _mark("flagged_ckpt")
-
-    def ck(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False) if cfg.cache_flagged else df
 
     # ONE per-host aggregate feeds every O(hosts) output: the audit, the
     # credit update and the fetch-order offsets. Its host set is the
     # round's active set (hosts with allowed or denied rows), which is
     # where the oracle accrues credit. scheduled = min(allowed, k) is
     # exact because the round takes each host's top-k allowed rows.
-    hosts = ck(
+    hosts = (
         flagged.groupBy("host")
         .agg(
             F.count(F.when(~F.col("denied"), 1)).alias("candidates"),
@@ -860,8 +523,7 @@ def run_round(
             "scheduled",
             F.least(F.col("candidates"), F.greatest(F.col("k"), F.lit(0)).cast("bigint")),
         )
-    )
-    _mark("hosts_ckpt")
+    ).localCheckpoint(eager=False)
 
     # global deterministic crawl order: host ASC, per-host rank ASC.
     # position = host_offset + rank - 1, with offsets from a two-level
@@ -901,7 +563,7 @@ def run_round(
     # fetch = join against the documents table (sandbox stand-in for the
     # WARC fetch stage S3; real deployment swaps this seam for an HTTP
     # mapInPandas with retry columns, SaveCommonCrawlBase.java:90-202)
-    fetched = ck(
+    fetched = (
         scheduled.join(F.broadcast(offsets), "host")
         .select(
             F.lit(rnd).alias("round"),
@@ -915,8 +577,7 @@ def run_round(
             "fetch_status",
             F.when(F.col("spans").isNotNull(), "fetched").otherwise("miss"),
         )
-    )
-    _mark("fetched_ckpt")
+    ).localCheckpoint(eager=False)
     fetch_batch = fetched.drop("spans", "fetch_status")
 
     outlinks = (

@@ -6,9 +6,9 @@ vectors in ``tools/golden_vectors.tsv``); this module widens those
 same checks by 1-2 orders of magnitude (~7 min total) for pre-release
 confidence sweeps:
 
-* the fused single-shuffle scheduling round vs the reference
-  composition over 38 MORE random frontier/robots/credit configs
-  (seeds 0-39 minus the suite's pinned 3/17);
+* the fused single-shuffle scheduling round vs the oracle's one-round
+  step over 38 MORE random frontier/robots/credit configs (seeds 0-39
+  minus the suite's pinned 3/17);
 * the indexed gazetteer matcher vs the naive oracle over 2000 random
   entry-set/text trials (50 RNG seeds x 40 trials);
 * the deterministic-draw parity kernels vs the LIVE JVM over 5000

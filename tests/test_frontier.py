@@ -222,61 +222,71 @@ def test_resume_equals_straight_run(spark, fixture_dir, tmp_path_factory):
     assert resumed["state"]["n_seen"] == straight["state"]["n_seen"] == len(want_seen)
 
 
-def test_fused_round_equals_reference_composition(spark, fixture_dir):
-    """The single-shuffle fused round must produce the same flagged set
-    and schedule as the reference composition (_merge_candidates +
-    _robots_flag + _topk_per_host) on a carried frontier + seen state
+def _assert_fused_round_equals_oracle_step(
+    spark, raw, frontier_rows, seen_urls, robots, credit_rows, rnd, cfg
+):
+    """Run the fused Spark round and the oracle's one-round ``step`` on the
+    same carried (frontier, seen, credit) state and candidates; the
+    flagged rows, the schedule with its per-host rank, and the carried
+    frontier left behind must all match."""
+    cand = spark.createDataFrame(raw, "url string, depth int")
+    # seen rows keep run_round's invariant url_hash = xxhash64(url): the
+    # membership filters are built from it
+    seen = spark.createDataFrame(
+        [(u, 0) for u in seen_urls], "url string, round_seen int"
+    ).select("url", F.xxhash64("url").alias("url_hash"), "round_seen")
+    flagged, scheduled, deferred = fr._fused_schedule(
+        cand,
+        spark.createDataFrame(frontier_rows, fr.FRONTIER_SCHEMA),
+        seen,
+        robots,
+        spark.createDataFrame(credit_rows, fr.CREDIT_SCHEMA),
+        rnd, cfg,
+        seen_nonempty=True, frontier_nonempty=True,
+    )
+
+    st = orc.OracleState(
+        frontier={
+            u: {"depth": d, "link_count": lc, "round_added": ra}
+            for u, _, d, lc, ra in frontier_rows
+        },
+        seen={u: 0 for u in seen_urls},
+        credit=dict(credit_rows),
+    )
+    want = orc.step(
+        st, raw, rnd, {r["host"]: r.asDict() for r in robots.collect()},
+        orc.CrawlConfig(round_budget_s=cfg.round_budget_s,
+                        default_crawl_delay_s=cfg.default_crawl_delay_s),
+    )
+
+    def rows(df, *cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    assert rows(
+        flagged, "url", "host", "depth", "link_count", "round_added", "denied"
+    ) == sorted(want.flagged)
+    assert rows(scheduled, "url", "host", "rank") == sorted(want.scheduled)
+    assert rows(deferred, *fr.FRONTIER_COLS) == sorted(want.frontier)
+
+
+def test_fused_round_equals_oracle_step(spark, fixture_dir):
+    """The single-shuffle fused round on a carried frontier + seen state
+    must give the oracle's flagged set, schedule and carried frontier
     (the fast-vs-naive differential pattern)."""
     seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
     robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
     cfg = fr.CrawlConfig(round_budget_s=3.0, use_bloom=False)
-    rnd = 2
     # synthetic mid-crawl state: some urls already seen, some carried over
-    cand = seeds.select("url", F.lit(2).cast("int").alias("depth"))
-    canon = cand.selectExpr("url", "depth").limit(200)
-    frontier_rows = spark.createDataFrame(
-        [
-            ("http://host3.example.com/carried/1", "host3.example.com", 1, 4, 1),
-            ("http://host7.example.com/carried/2", "host7.example.com", 2, 2, 0),
-        ],
-        fr.FRONTIER_SCHEMA,
-    )
+    raw = [(r["url"], 2) for r in seeds.select("url").limit(200).collect()]
+    frontier_rows = [
+        ("http://host3.example.com/carried/1", "host3.example.com", 1, 4, 1),
+        ("http://host7.example.com/carried/2", "host7.example.com", 2, 2, 0),
+    ]
     # seen urls must be canonical (the round tests canonical candidates)
-    seen_rows = spark.createDataFrame(
-        [(canonicalize_py(r["url"]), 0, 0) for r in canon.limit(30).collect()],
-        fr.SEEN_SCHEMA,
-    )
-    credit = spark.createDataFrame([("host3.example.com", 1.5)], fr.CREDIT_SCHEMA)
-
-    flagged, budgets, scheduled, _ = fr._fused_schedule(
-        canon, frontier_rows, seen_rows, robots, credit, rnd, cfg,
-        seen_nonempty=True, frontier_nonempty=True,
-    )
-
-    merged = fr._merge_candidates(
-        canon, frontier_rows, seen_rows, rnd, cfg,
-        seen_nonempty=True, frontier_nonempty=True,
-    )
-    ref_flagged = fr._robots_flag(merged, robots)
-    ref_allowed = ref_flagged.filter(~F.col("denied")).drop("denied")
-    host_stats = ref_flagged.groupBy("host").agg(
-        F.count(F.when(~F.col("denied"), 1)).alias("n"),
-        F.count(F.when(F.col("denied"), 1)).alias("denied"),
-    )
-    ref_budgets = fr._host_budgets_from_stats(host_stats, credit, robots, cfg)
-    ref_sched = fr._topk_per_host(ref_allowed, ref_budgets, cfg)
-
-    key = lambda rows: sorted(
-        (r["url"], r["host"], r["depth"], r["link_count"], r["round_added"], r["denied"])
-        for r in rows
-    )
-    assert key(
-        flagged.select("url", "host", "depth", "link_count", "round_added", "denied").collect()
-    ) == key(ref_flagged.collect())
-
-    skey = lambda rows: sorted((r["url"], r["host"], r["rank"]) for r in rows)
-    assert skey(scheduled.select("url", "host", "rank").collect()) == skey(
-        ref_sched.select("url", "host", "rank").collect()
+    seen_urls = [canonicalize_py(u) for u, _ in raw[:30]]
+    _assert_fused_round_equals_oracle_step(
+        spark, raw, frontier_rows, seen_urls, robots,
+        [("host3.example.com", 1.5)], 2, cfg,
     )
 
 
@@ -319,9 +329,9 @@ def test_resume_restores_filter_snapshot(spark, fixture_dir, tmp_path_factory):
 
 @pytest.mark.parametrize("seed", [3, 17])
 def test_fused_randomized_differential(spark, seed):
-    """Randomized fast-vs-naive: fused single-shuffle round == reference
-    composition over random frontiers, seen sets, robots, credits, and
-    hot-host settings."""
+    """Randomized fast-vs-naive: fused single-shuffle round == the
+    oracle's one-round step over random frontiers, seen sets, robots,
+    credits, filter settings and hot-host settings."""
     import random
 
     rng = random.Random(seed)
@@ -333,19 +343,12 @@ def test_fused_randomized_differential(spark, seed):
         frag = "#x" if rng.random() < 0.2 else ""
         port = ":80" if rng.random() < 0.2 else ""
         raw.append((f"http://{h.upper()}{port}{path}{frag}", rng.randint(0, 4)))
-    cand = spark.createDataFrame(raw, "url string, depth int")
     canon_urls = sorted({canonicalize_py(u) for u, _ in raw})
     seen_urls = rng.sample(canon_urls, k=len(canon_urls) // 5)
-    seen_rows = spark.createDataFrame(
-        [(u, 0, 0) for u in seen_urls], fr.SEEN_SCHEMA
-    )
-    frontier_rows = spark.createDataFrame(
-        [
-            (f"http://{h}/carried/{i}", h, rng.randint(0, 3), rng.randint(0, 9), 0)
-            for i, h in enumerate(rng.sample(hosts, k=min(3, len(hosts))))
-        ],
-        fr.FRONTIER_SCHEMA,
-    )
+    frontier_rows = [
+        (f"http://{h}/carried/{i}", h, rng.randint(0, 3), rng.randint(0, 9), 0)
+        for i, h in enumerate(rng.sample(hosts, k=min(3, len(hosts))))
+    ]
     robots = spark.createDataFrame(
         [
             (h, [f"/p{rng.randint(0, 40)}"], [], float(rng.choice([0.5, 1.0, 4.0])))
@@ -353,10 +356,7 @@ def test_fused_randomized_differential(spark, seed):
         ],
         "host string, deny_prefixes array<string>, allow_prefixes array<string>, crawl_delay_s double",
     )
-    credit = spark.createDataFrame(
-        [(h, rng.uniform(0, 3)) for h in rng.sample(hosts, k=len(hosts) // 3)],
-        fr.CREDIT_SCHEMA,
-    )
+    credit_rows = [(h, rng.uniform(0, 3)) for h in rng.sample(hosts, k=len(hosts) // 3)]
     cfg = fr.CrawlConfig(
         round_budget_s=rng.choice([2.0, 5.0]),
         use_bloom=rng.random() < 0.5,
@@ -365,35 +365,8 @@ def test_fused_randomized_differential(spark, seed):
         hot_host_cap=5,
     )
     rnd = rng.randint(1, 3)
-
-    flagged, budgets, scheduled, _ = fr._fused_schedule(
-        cand, frontier_rows, seen_rows, robots, credit, rnd, cfg,
-        seen_nonempty=True, frontier_nonempty=True,
-    )
-    merged = fr._merge_candidates(
-        cand, frontier_rows, seen_rows, rnd, cfg,
-        seen_nonempty=True, frontier_nonempty=True,
-    )
-    ref_flagged = fr._robots_flag(merged, robots)
-    host_stats = ref_flagged.groupBy("host").agg(
-        F.count(F.when(~F.col("denied"), 1)).alias("n"),
-        F.count(F.when(F.col("denied"), 1)).alias("denied"),
-    )
-    ref_budgets = fr._host_budgets_from_stats(host_stats, credit, robots, cfg)
-    ref_sched = fr._topk_per_host(
-        ref_flagged.filter(~F.col("denied")).drop("denied"), ref_budgets, cfg
-    )
-
-    key = lambda rows: sorted(
-        (r["url"], r["host"], r["depth"], r["link_count"], r["round_added"], r["denied"])
-        for r in rows
-    )
-    assert key(
-        flagged.select("url", "host", "depth", "link_count", "round_added", "denied").collect()
-    ) == key(ref_flagged.collect())
-    skey = lambda rows: sorted((r["url"], r["host"], r["rank"]) for r in rows)
-    assert skey(scheduled.select("url", "host", "rank").collect()) == skey(
-        ref_sched.select("url", "host", "rank").collect()
+    _assert_fused_round_equals_oracle_step(
+        spark, raw, frontier_rows, seen_urls, robots, credit_rows, rnd, cfg
     )
 
 

@@ -102,7 +102,7 @@ def main() -> None:
     )
     credit = spark.createDataFrame([], fr.CREDIT_SCHEMA)
     audit_cfg = fr.CrawlConfig(use_bloom=False, round_budget_s=50.0)
-    flagged, _, scheduled, _ = fr._fused_schedule(
+    _, scheduled, _ = fr._fused_schedule(
         cand, None, None, robots, credit, 0, audit_cfg,
         seen_nonempty=False, frontier_nonempty=False,
     )
