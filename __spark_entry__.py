@@ -356,9 +356,8 @@ def q_crawl_round_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    cfg = frontier.CrawlConfig(round_budget_s=1e9, use_bloom=False)
+    cfg = frontier.CrawlConfig(round_budget_s=1e9, filter_kind="none")
     state = frontier.empty_state(spark)
-    state["seen_nonempty"] = False
     out = frontier.run_round(spark, candidates, state, robots, docs_spans, 0, cfg)
     return out["fetch_batch"].select("url", "host", "depth", "link_count")
 
@@ -376,7 +375,7 @@ def q_crawl_multiround(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(str(fd / "documents_spans.parquet"))
     seeds = spark.read.parquet(str(fd / "seeds.parquet"))
     robots = spark.read.parquet(str(fd / "robots_rules.parquet"))
-    cfg = frontier.CrawlConfig(round_budget_s=10.0, max_rounds=3, use_bloom=True)
+    cfg = frontier.CrawlConfig(round_budget_s=10.0, max_rounds=3, filter_kind="bloom")
     drv = frontier.CrawlDriver(spark, robots, docs, cfg)
     out = drv.run(seeds)
     return out["schedule"].select("round", "position", "url", "host", "depth")
@@ -419,11 +418,11 @@ def q_crawl_stream_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.utime(os.path.join(src, "batch_1.parquet"),
                  (1_700_000_060, 1_700_000_060))
 
-        cfg = frontier.CrawlConfig(round_budget_s=10.0, use_bloom=True)
+        cfg = frontier.CrawlConfig(round_budget_s=10.0, filter_kind="bloom")
         sc = ingest.StreamingCrawl(spark, robots, docs, cfg)
         sched = sc.run_available_now(src, os.path.join(tmp, "ckpt"))
-        # schedules are already materialized inside each micro-batch
-        # (advance_round_state materialize_all_state); the eager
+        # each micro-batch's candidates are checkpointed eagerly and its
+        # schedule is materialized by the round's count job; the eager
         # checkpoint of the tiny budget-capped result makes the returned
         # DF provably independent of the temp candidate/checkpoint files
         # removed below, so repeated gate/bench invocations leave nothing

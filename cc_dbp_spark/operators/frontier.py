@@ -77,8 +77,8 @@ class CrawlConfig:
     round_budget_s: float = 10.0
     default_crawl_delay_s: float = 1.0
     max_rounds: int = 10
-    use_bloom: bool = True
-    filter_kind: str = "bloom"  # "bloom" | "cuckoo" (both advisory/prune-only)
+    # seen-set pre-check: "bloom" | "cuckoo" (advisory, prune-only) | "none"
+    filter_kind: str = "bloom"
     bloom_capacity: int = 1 << 20
     bloom_fpr: float = 0.01
     bloom_partitions: int = 16
@@ -89,6 +89,10 @@ class CrawlConfig:
     bloom_broadcast_max_bytes: int = 64 << 20
     hot_host_threshold: int = 10_000  # counts above this get salted top-k
     hot_host_cap: int = 5_000  # target rows per salt split
+
+    def __post_init__(self):
+        if self.filter_kind not in ("bloom", "cuckoo", "none"):
+            raise ValueError(f"unknown filter_kind {self.filter_kind!r}")
 
 
 FRONTIER_SCHEMA = "url string, host string, depth int, link_count bigint, round_added int"
@@ -112,13 +116,22 @@ def priority_col(depth, link_count):
     )
 
 
-def empty_state(spark: SparkSession) -> dict[str, DataFrame]:
+def empty_state(spark: SparkSession) -> dict:
     """Round-0 state as empty relations the optimizer can see, so a first
-    round plans no scans of them and folds their joins and unions away."""
+    round plans no scans of them and folds their joins and unions away.
+
+    Every round state carries the same keys: the ``frontier``, ``seen``
+    and ``credit`` tables, the seen-filter snapshot ``filter`` (``None``
+    until a round builds one) and the row counts ``n_seen`` and
+    ``n_frontier``, from which a round knows which of its tables are
+    empty without running a job."""
     return {
         "frontier": empty_df(spark, FRONTIER_SCHEMA),
         "seen": empty_df(spark, SEEN_SCHEMA),
         "credit": empty_df(spark, CREDIT_SCHEMA),
+        "filter": None,
+        "n_seen": 0,
+        "n_frontier": 0,
     }
 
 
@@ -262,9 +275,12 @@ def _fused_schedule(
     rows contribute their accumulated link_count / earliest round_added,
     candidate rows contribute 1 link each (0 in the seed round). The
     seen-set test applies to candidates only (frontier rows are unseen
-    by invariant): bloom/cuckoo filters prune, an exact anti-join over
-    the surviving "maybe" rows confirms — broadcast probe when the
+    by invariant). With a carried ``filter_df`` snapshot (of
+    ``cfg.filter_kind``) the filter prunes and an exact anti-join over
+    the surviving "maybe" rows confirms — broadcast bloom probe when the
     filter fits the broadcast budget (narrow), cogrouped otherwise.
+    Without one the exact anti-join runs alone: the filter is only a
+    pre-check, so the answer is the same.
 
     Hot-host detection uses RAW (pre-dedupe) counts: the active-host set
     is dedupe-invariant, and salting never changes the schedule (it only
@@ -293,42 +309,26 @@ def _fused_schedule(
         contrib.alias("lc_contrib"),
         F.lit(_ROUND_SENTINEL).alias("round_added"),
     )
-    if seen_nonempty:
+    if seen_nonempty and filter_df is None:
+        cand_rows = cand_rows.join(seen.select("url"), "url", "left_anti")
+    elif seen_nonempty:
+        # filter_df: the incrementally-maintained snapshot (updated from
+        # newly-seen urls each round, O(new) not O(seen))
         cand_rows = cand_rows.withColumn("url_hash", F.xxhash64(F.col("url")))
-        if cfg.use_bloom:
-            # filter_df: the incrementally-maintained snapshot (built from
-            # newly-seen urls each round, O(new) not O(seen)); fall back to
-            # a full rebuild when no snapshot is carried (legacy resume)
-            if cfg.filter_kind == "cuckoo":
-                per_part = max(1024, cfg.bloom_capacity // cfg.bloom_partitions)
-                ck = (
-                    filter_df
-                    if filter_df is not None
-                    else flt.build_cuckoo_df(seen, per_part, cfg.bloom_partitions)
-                )
-                definitely_new, maybe = flt.prune_with_cuckoo(
-                    cand_rows, ck, cfg.bloom_partitions
-                )
-            else:
-                spec = flt.BloomSpec(
-                    cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_partitions
-                )
-                bloom = (
-                    filter_df
-                    if filter_df is not None
-                    else flt.build_bloom_df(seen, spec)
-                )
-                if flt.bloom_total_bytes(spec) <= cfg.bloom_broadcast_max_bytes:
-                    probed = flt.flag_with_broadcast_bloom(cand_rows, bloom, spec)
-                    definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-                    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-                else:
-                    definitely_new, maybe = flt.prune_with_bloom(cand_rows, bloom, spec)
-            confirmed_new = maybe.join(seen.select("url"), "url", "left_anti")
-            cand_rows = definitely_new.unionByName(confirmed_new)
+        if cfg.filter_kind == "cuckoo":
+            definitely_new, maybe = flt.prune_with_cuckoo(
+                cand_rows, filter_df, cfg.bloom_partitions
+            )
         else:
-            cand_rows = cand_rows.join(seen.select("url"), "url", "left_anti")
-        cand_rows = cand_rows.drop("url_hash")
+            spec = flt.BloomSpec(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_partitions)
+            if flt.bloom_total_bytes(spec) <= cfg.bloom_broadcast_max_bytes:
+                probed = flt.flag_with_broadcast_bloom(cand_rows, filter_df, spec)
+                definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
+                maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
+            else:
+                definitely_new, maybe = flt.prune_with_bloom(cand_rows, filter_df, spec)
+        confirmed_new = maybe.join(seen.select("url"), "url", "left_anti")
+        cand_rows = definitely_new.unionByName(confirmed_new).drop("url_hash")
 
     if frontier_nonempty:
         all_rows = frontier.select(
@@ -471,25 +471,20 @@ def _fused_schedule(
 def run_round(
     spark: SparkSession,
     candidates: DataFrame,
-    state: dict[str, DataFrame],
+    state: dict,
     robots: DataFrame,
     docs: DataFrame,
     rnd: int,
     cfg: CrawlConfig,
 ) -> dict:
-    """Execute one scheduling round; returns new state + outputs.
+    """Run one scheduling round over a complete round state (see
+    :func:`empty_state`, whose counts say which tables are empty);
+    returns the next state's tables + outputs.
 
     docs: the interleaved documents table
     (doc_id string, spans array<struct<kind,text,media_ref,offset>>).
     """
     frontier, seen, credit = state["frontier"], state["seen"], state["credit"]
-
-    seen_nonempty = state.get("seen_nonempty")
-    if seen_nonempty is None:
-        seen_nonempty = not seen.isEmpty()
-    frontier_nonempty = state.get("frontier_nonempty")
-    if frontier_nonempty is None:
-        frontier_nonempty = not frontier.isEmpty()
 
     # Round jobs. Under AQE, localCheckpoint(eager=False) runs the shuffle
     # and broadcast stages upstream of it when it is CALLED; only the
@@ -501,8 +496,8 @@ def run_round(
     # Every other output is a narrow projection of them.
     flagged, scheduled, deferred = _fused_schedule(
         candidates, frontier, seen, robots, credit, rnd, cfg,
-        seen_nonempty, frontier_nonempty,
-        filter_df=state.get("filter"),
+        state["n_seen"] > 0, state["n_frontier"] > 0,
+        filter_df=state["filter"],
     )
 
     # ONE per-host aggregate feeds every O(hosts) output: the audit, the
@@ -593,11 +588,12 @@ def run_round(
         )
     )
     # filter-snapshot update: O(newly scheduled urls) per round. With no
-    # carried snapshot (fresh start / legacy resume) build it from the
-    # full updated seen set once; every later round is incremental.
+    # carried snapshot (fresh start, or a resume from a checkpoint without
+    # one) build it from the updated seen set once; every later round is
+    # incremental.
     new_filter = None
-    if cfg.use_bloom:
-        prev = state.get("filter")
+    if cfg.filter_kind != "none":
+        prev = state["filter"]
         per_part = max(1024, cfg.bloom_capacity // cfg.bloom_partitions)
         spec = flt.BloomSpec(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_partitions)
         if prev is None:
@@ -662,66 +658,50 @@ def run_round(
     }
 
 
-def advance_round_state(
-    out: dict,
-    n_seen_prev: int,
-    materialize_all_state: bool = False,
-) -> tuple[DataFrame, DataFrame, dict, dict]:
-    """Shared round-state bookkeeping for the batch round loop
-    (:meth:`CrawlDriver.run`) and the streaming ingest seam
-    (:class:`cc_dbp_spark.streaming.ingest.StreamingCrawl`) — one
-    implementation so the two loops cannot drift.
-
-    Materializes the round in ONE fused tagged-union count job, which
-    yields the batch and outlink counts and the frontier emptiness probe
-    together. Returns ``(batch, outlinks, new_state, counts)``;
-    ``counts`` maps 'sched'/'out'/'frontier' to row counts, and
-    ``new_state`` carries n_seen / seen_nonempty / frontier_nonempty
-    forward.
+def advance_round_state(out: dict, n_seen_prev: int) -> tuple[dict, dict]:
+    """Turn a round's outputs (:func:`run_round`'s ``out``) into the next
+    complete round state (the keys of :func:`empty_state`). Returns
+    ``(new_state, counts)``; ``counts`` maps 'sched'/'out'/'frontier' to
+    row counts, and is missing a key whose count is 0.
 
     Only the two wide state outputs are checkpointed: credit (an
     anti-join against the carried table) and the filter snapshot
     (grouped UDFs). Under AQE each ``localCheckpoint(eager=False)`` runs
     its upstream shuffle stages when it is called, so each one is a
-    barrier. Every other output is a narrow projection of the round's
-    own checkpoints (and of the carried seen set): batch, outlinks and
-    seen of `fetched`, frontier of `flagged` and `ranked`. This count
-    materializes them.
-
-    ``materialize_all_state=True`` additionally folds credit/filter into
-    the count job — required when the round's inputs are NOT replayable
-    later (a streaming micro-batch relation); the batch loop leaves them
-    lazy (they materialize inside the next round's first job, and parquet
-    inputs replay).
+    barrier; their last stage runs in the next job that reads them.
+    Every other output is a narrow projection of the round's own
+    checkpoints (and of the carried seen set): batch, outlinks and seen
+    of `fetched`, frontier of `flagged` and `ranked`. ONE fused
+    tagged-union count job materializes them, and yields the batch,
+    outlink and frontier counts together.
     """
-    batch, outlinks = out["fetch_batch"], out["outlinks"]
-    new_state = {"frontier": out["frontier"], "seen": out["seen"]}
-    for k in ("credit", "filter"):
-        if out.get(k) is not None:
-            new_state[k] = out[k].localCheckpoint(eager=False)
+    new_state = {
+        "frontier": out["frontier"],
+        "seen": out["seen"],
+        "credit": out["credit"].localCheckpoint(eager=False),
+        "filter": None if out["filter"] is None else out["filter"].localCheckpoint(eager=False),
+    }
     union = (
-        batch.select(F.lit("sched").alias("k"))
-        .unionByName(outlinks.select(F.lit("out").alias("k")))
+        out["fetch_batch"].select(F.lit("sched").alias("k"))
+        .unionByName(out["outlinks"].select(F.lit("out").alias("k")))
         .unionByName(new_state["frontier"].select(F.lit("frontier").alias("k")))
     )
-    if materialize_all_state:
-        for k in ("credit", "filter"):
-            if new_state.get(k) is not None:
-                union = union.unionByName(new_state[k].select(F.lit(k).alias("k")))
     counts = dict(
         (r["k"], r["n"])
         for r in union.groupBy("k").agg(F.count("*").alias("n")).collect()
     )
-    n_seen = n_seen_prev + counts.get("sched", 0)
-    new_state["n_seen"] = n_seen
-    new_state["seen_nonempty"] = n_seen > 0
-    new_state["frontier_nonempty"] = counts.get("frontier", 0) > 0
-    return batch, outlinks, new_state, counts
+    new_state["n_seen"] = n_seen_prev + counts.get("sched", 0)
+    new_state["n_frontier"] = counts.get("frontier", 0)
+    return new_state, counts
 
 
 class CrawlDriver:
     """Round loop with parquet checkpointing + resume (the reference's
-    output-exists resume pattern, RelexBuildDataset.java:72-93)."""
+    output-exists resume pattern, RelexBuildDataset.java:72-93).
+
+    ``state`` is the carried round state; :meth:`step` advances it by one
+    round, for the batch loop (:meth:`run`) and the streaming seam
+    (:class:`cc_dbp_spark.streaming.ingest.StreamingCrawl`) alike."""
 
     def __init__(
         self,
@@ -736,24 +716,45 @@ class CrawlDriver:
         self.docs = docs
         self.cfg = cfg
         self.state_dir = pathlib.Path(state_dir) if state_dir else None
+        self.state = empty_state(spark)
 
-    def _ckpt(
-        self, rnd: int, out: dict, candidates_next: DataFrame, n_seen: int = 0
-    ) -> None:
+    def step(self, candidates: DataFrame, rnd: int) -> tuple[dict, dict]:
+        """Run round ``rnd`` over the carried state and the candidates;
+        returns ``(out, counts)`` (see :func:`run_round` and
+        :func:`advance_round_state`). ``out["outlinks"]`` are the next
+        round's candidates."""
+        # module globals, looked up per call so wrappers can time them
+        out = run_round(
+            self.spark, candidates, self.state, self.robots, self.docs, rnd, self.cfg
+        )
+        # the checkpoints of the wide state tables truncate their lineage
+        # (without them the logical plan grows per round and analysis
+        # dominates runtime)
+        self.state, counts = advance_round_state(out, self.state["n_seen"])
+        self._ckpt(rnd, out)
+        return out, counts
+
+    def _ckpt(self, rnd: int, out: dict) -> None:
+        """Write the round's state (the checkpointed tables of
+        ``self.state``, never the pre-checkpoint plans, which would run a
+        second time) and outputs, then the ``COMMIT`` marker."""
         if self.state_dir is None:
             return
         d = self.state_dir / f"round_{rnd:04d}"
         d.mkdir(parents=True, exist_ok=True)
-        for name in ("frontier", "seen", "credit", "audit", "fetch_batch", "lineage"):
-            out[name].write.mode("overwrite").parquet(str(d / name))
-        if out.get("filter") is not None:
-            # the north-rule filter snapshot: resume reloads it instead of
-            # rebuilding the membership filter from the full seen set
-            out["filter"].write.mode("overwrite").parquet(str(d / "filter"))
-        candidates_next.write.mode("overwrite").parquet(str(d / "next_candidates"))
-        # per-partition lineage: which spark partition wrote which rows;
-        # n_seen rides the commit marker so a resume restores the counter
-        (d / "COMMIT").write_text(json.dumps({"round": rnd, "n_seen": n_seen}))
+        st = self.state
+        tables = {k: st[k] for k in ("frontier", "seen", "credit", "filter")}
+        tables |= {k: out[k] for k in ("audit", "fetch_batch", "lineage")}
+        tables["next_candidates"] = out["outlinks"]
+        for name, df in tables.items():
+            # filter: None when cfg.filter_kind is "none"; resume reloads
+            # the snapshot instead of rebuilding it from the seen set
+            if df is not None:
+                df.write.mode("overwrite").parquet(str(d / name))
+        # the counters ride the commit marker so a resume restores them
+        (d / "COMMIT").write_text(json.dumps(
+            {"round": rnd, "n_seen": st["n_seen"], "n_frontier": st["n_frontier"]}
+        ))
 
     def latest_checkpoint(self) -> int | None:
         if self.state_dir is None or not self.state_dir.exists():
@@ -765,66 +766,44 @@ class CrawlDriver:
         )
         return done[-1] if done else None
 
-    def resume_state(self, rnd: int) -> tuple[dict[str, DataFrame], DataFrame]:
+    def resume_state(self, rnd: int) -> tuple[dict, DataFrame]:
         d = self.state_dir / f"round_{rnd:04d}"
         state = {
             name: self.spark.read.parquet(str(d / name))
             for name in ("frontier", "seen", "credit")
         }
-        if (d / "filter").exists():
-            state["filter"] = self.spark.read.parquet(str(d / "filter"))
+        state["filter"] = (
+            self.spark.read.parquet(str(d / "filter"))
+            if self.cfg.filter_kind != "none" and (d / "filter").exists()
+            else None
+        )
         commit = json.loads((d / "COMMIT").read_text())
-        # older checkpoints (pre-counter) fall back to counting the seen
-        # table once — without this the resumed run's n_seen restarts at
-        # 0 and the final state undercounts every pre-resume round
-        state["n_seen"] = commit.get("n_seen", None)
-        if state["n_seen"] is None:
-            state["n_seen"] = state["seen"].count()
+        for key, table in (("n_seen", "seen"), ("n_frontier", "frontier")):
+            # checkpoints written before a counter existed count its
+            # table once (a counter restarting at 0 would undercount)
+            state[key] = commit[key] if key in commit else state[table].count()
         return state, self.spark.read.parquet(str(d / "next_candidates"))
 
-    def run(self, seeds: DataFrame, start_round: int = 0, resume: bool = False):
+    def run(self, seeds: DataFrame, resume: bool = False):
         """Run rounds to completion; returns aggregate outputs dict."""
+        start = 0
         if resume and (last := self.latest_checkpoint()) is not None:
-            state, candidates = self.resume_state(last)
-            state["seen_nonempty"] = state["n_seen"] > 0
-            # frontier_nonempty stays unset: run_round probes it once
-            start_round = last + 1
+            self.state, candidates = self.resume_state(last)
+            start = last + 1
         else:
-            state = empty_state(self.spark)
-            state["seen_nonempty"] = False
-            state["frontier_nonempty"] = False
-            state["n_seen"] = 0
+            self.state = empty_state(self.spark)
             candidates = seeds.select("url", F.col("depth").cast("int"))
 
         batches, audits, emitted = [], [], []
-        for rnd in range(start_round, self.cfg.max_rounds):
-            out = run_round(
-                self.spark, candidates, state, self.robots, self.docs, rnd, self.cfg
-            )
-            # advance_round_state checkpoints the wide state tables,
-            # which truncates their lineage (without it the logical plan
-            # grows per round and analysis dominates runtime), then runs
-            # ONE fused count job for n_sched, n_out and the frontier
-            # emptiness probe. The checkpoints are not free: under AQE
-            # each call runs its upstream shuffle stages (see run_round).
-            batch, candidates, state, counts = advance_round_state(
-                out, state.get("n_seen", 0)
-            )
-            n_sched = counts.get("sched", 0)
-            n_out = counts.get("out", 0)
-            # _ckpt must write the checkpointed state tables, not the
-            # pre-checkpoint plans (which would run a second time per
-            # round just to feed the parquet writer)
-            for k in ("credit", "filter"):
-                if state.get(k) is not None:
-                    out[k] = state[k]
-            self._ckpt(rnd, out, candidates, n_seen=state["n_seen"])
+        for rnd in range(start, self.cfg.max_rounds):
+            out, counts = self.step(candidates, rnd)
+            candidates = out["outlinks"]
             # batch, audit and emitted project the round's checkpointed
             # per-host table and fetched rows: no checkpoint of their own
-            batches.append(batch)
+            batches.append(out["fetch_batch"])
             audits.append(out["audit"])
             emitted.append(out["emitted"])
-            if n_sched == 0 and n_out == 0:
+            if counts.get("sched", 0) == 0 and counts.get("out", 0) == 0:
                 break
         # rounds complete: drop the final round's probe broadcast (the
         # per-round rotation only releases the PREVIOUS round; lazy
@@ -850,12 +829,12 @@ class CrawlDriver:
                     "round int, position int, url string, spans array<struct<"
                     "kind:string,text:string,media_ref:string,offset:int>>",
                 ),
-                "state": state,
+                "state": self.state,
             }
 
         return {
             "schedule": functools.reduce(DataFrame.unionByName, batches),
             "audit": functools.reduce(DataFrame.unionByName, audits),
             "emitted": functools.reduce(DataFrame.unionByName, emitted),
-            "state": state,
+            "state": self.state,
         }

@@ -6,19 +6,22 @@ module adds the continuously-arriving-candidates surface the north
 star's deployment implies: seed lists and externally-discovered URLs
 land as files, `readStream` picks them up, and **each micro-batch is
 one scheduling round** via ``foreachBatch`` — the same
-:func:`frontier.run_round`, the same carried frontier/seen/credit/
-filter state, the same audit rows. Outlinks extracted in a round are
-merged into the NEXT round's candidates (internal feedback), unioned
-with whatever new external candidates the stream delivered.
+:meth:`frontier.CrawlDriver.step` the batch loop runs, over the same
+carried round state, with the same audit rows. Outlinks extracted in a
+round are merged into the NEXT round's candidates (internal feedback),
+unioned with whatever new external candidates the stream delivered.
 
 This keeps the engine's semantics single-sourced: the streaming seam
 contains no scheduling logic of its own, so the batch oracles (pure-
 Python scheduler, DuckDB multiround CTE) keep covering the behavior;
 tests assert stream-vs-batch round parity directly.
 
-At scale the same shape runs against a real file/Kafka source with a
-checkpointLocation; state snapshots ride CrawlDriver's parquet/Iceberg
-scheme exactly as in batch mode.
+A micro-batch relation cannot be replayed after its trigger, so the
+seam checkpoints each micro-batch's candidates eagerly: nothing the
+round leaves lazy (its state tables, schedule and audit) reads the
+micro-batch relation again. The carried state lives in driver memory
+only: this seam writes no state snapshots and cannot resume (a
+restartable crawl runs ``CrawlDriver.run`` with a state dir).
 """
 
 from __future__ import annotations
@@ -45,11 +48,11 @@ def read_candidate_stream(
 
 
 class StreamingCrawl:
-    """foreachBatch bridge: micro-batch -> scheduling round.
+    """foreachBatch bridge: micro-batch -> one :meth:`CrawlDriver.step`.
 
-    Carries the same state dict :class:`frontier.CrawlDriver` carries
-    between rounds; collects per-round schedules (bounded: schedules
-    are budget-capped rows, not frontier-sized)."""
+    The round state is its ``driver.state`` (a CrawlDriver with no state
+    dir); collects per-round schedules (bounded: schedules are
+    budget-capped rows, not frontier-sized)."""
 
     def __init__(
         self,
@@ -59,13 +62,7 @@ class StreamingCrawl:
         cfg: fr.CrawlConfig,
     ):
         self.spark = spark
-        self.robots = robots
-        self.docs = docs
-        self.cfg = cfg
-        self.state = fr.empty_state(spark)
-        self.state["seen_nonempty"] = False
-        self.state["frontier_nonempty"] = False
-        self._n_seen = 0
+        self.driver = fr.CrawlDriver(spark, robots, docs, cfg)
         self._carried_outlinks: DataFrame | None = None
         self.rounds: list[DataFrame] = []
         self.audits: list[DataFrame] = []
@@ -75,8 +72,8 @@ class StreamingCrawl:
         # skipped batch: fail LOUDLY on any out-of-order/retried
         # batch_id instead of silently crawling against wrong state
         # (a restartable deployment persists state via CrawlDriver's
-        # parquet/Iceberg snapshots and resumes the BATCH loop; this
-        # seam is the continuous-ingest surface, not the recovery one)
+        # parquet snapshots and resumes the BATCH loop; this seam is the
+        # continuous-ingest surface, not the recovery one)
         if int(batch_id) != len(self.rounds):
             raise RuntimeError(
                 f"StreamingCrawl got micro-batch {batch_id} but has "
@@ -86,26 +83,14 @@ class StreamingCrawl:
                 "fresh StreamingCrawl), or resume via CrawlDriver's "
                 "parquet state snapshots"
             )
-        cand = batch_df.select("url", F.col("depth").cast("int"))
+        # eager: the micro-batch relation is not replayable after the
+        # trigger, and the round's lazy outputs read its candidates
+        cand = batch_df.select("url", F.col("depth").cast("int")).localCheckpoint(eager=True)
         if self._carried_outlinks is not None:
             cand = cand.unionByName(self._carried_outlinks)
-        out = fr.run_round(
-            self.spark, cand, self.state, self.robots, self.docs,
-            int(batch_id), self.cfg,
-        )
-        # shared bookkeeping with CrawlDriver.run (advance_round_state):
-        # ONE fused count barrier; materialize_all_state because
-        # everything derived from the micro-batch must materialize
-        # INSIDE this call (the micro-batch relation is not guaranteed
-        # replayable after the trigger). The audit projects the round's
-        # per-host table, which run_round materializes itself.
-        batch, outlinks, new_state, _ = fr.advance_round_state(
-            out, self._n_seen, materialize_all_state=True,
-        )
-        self._carried_outlinks = outlinks
-        self._n_seen = new_state["n_seen"]
-        self.state = new_state
-        self.rounds.append(batch)
+        out, _ = self.driver.step(cand, int(batch_id))
+        self._carried_outlinks = out["outlinks"]
+        self.rounds.append(out["fetch_batch"])
         self.audits.append(out["audit"])
 
     def run_available_now(self, src_dir: str, checkpoint_dir: str):

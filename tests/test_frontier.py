@@ -26,7 +26,7 @@ def spark_result(spark, fixture_dir):
     docs = spark.read.parquet(str(fixture_dir / "documents_spans.parquet"))
     seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
     robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
-    cfg = fr.CrawlConfig(round_budget_s=3.0, max_rounds=4, use_bloom=True,
+    cfg = fr.CrawlConfig(round_budget_s=3.0, max_rounds=4, filter_kind="bloom",
                          bloom_capacity=1 << 14, bloom_partitions=4)
     driver = fr.CrawlDriver(spark, robots, docs, cfg)
     return driver.run(seeds)
@@ -102,10 +102,12 @@ def test_round_job_count_and_visible_empty_state(spark, fixture_dir):
     """A re-added branch checkpoint or extra aggregate shows up as extra
     jobs; the empty round-0 state must stay visible to the optimizer
     (an opaque empty scan would be planned and run every round 0)."""
+    from pyspark.sql import DataFrame
+
     from cc_dbp_spark.operators import filters as flt
 
-    empties = {**fr.empty_state(spark), "bloom": flt.empty_bloom_df(spark),
-               "cuckoo": flt.empty_cuckoo_df(spark)}
+    empties = {k: v for k, v in fr.empty_state(spark).items() if isinstance(v, DataFrame)}
+    empties |= {"bloom": flt.empty_bloom_df(spark), "cuckoo": flt.empty_cuckoo_df(spark)}
     for name, df in empties.items():
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert plan.startswith("LocalRelation <empty>"), (name, plan)
@@ -152,7 +154,7 @@ def test_salted_topk_equals_plain(spark, fixture_dir):
     docs = spark.read.parquet(str(fixture_dir / "documents_spans.parquet"))
     seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
     robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
-    base = dict(round_budget_s=3.0, max_rounds=2, use_bloom=False)
+    base = dict(round_budget_s=3.0, max_rounds=2, filter_kind="none")
     plain = fr.CrawlDriver(
         spark, robots, docs, fr.CrawlConfig(**base, hot_host_threshold=10**9)
     ).run(seeds)
@@ -172,7 +174,7 @@ def test_cuckoo_filter_path_matches_oracle(spark, fixture_dir, oracle_result):
     seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
     robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
     cfg = fr.CrawlConfig(
-        round_budget_s=3.0, max_rounds=4, use_bloom=True,
+        round_budget_s=3.0, max_rounds=4,
         filter_kind="cuckoo", bloom_capacity=1 << 14, bloom_partitions=4,
     )
     res = fr.CrawlDriver(spark, robots, docs, cfg).run(seeds)
@@ -194,7 +196,7 @@ def test_resume_equals_straight_run(spark, fixture_dir, tmp_path_factory):
     seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
     robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
     straight = fr.CrawlDriver(
-        spark, robots, docs, fr.CrawlConfig(round_budget_s=3.0, max_rounds=4, use_bloom=False)
+        spark, robots, docs, fr.CrawlConfig(round_budget_s=3.0, max_rounds=4, filter_kind="none")
     ).run(seeds)
     want_seen = {
         (r["url"], r["round_seen"]) for r in straight["state"]["seen"].collect()
@@ -204,22 +206,25 @@ def test_resume_equals_straight_run(spark, fixture_dir, tmp_path_factory):
     # run only 2 rounds, checkpointing
     d1 = fr.CrawlDriver(
         spark, robots, docs,
-        fr.CrawlConfig(round_budget_s=3.0, max_rounds=2, use_bloom=False),
+        fr.CrawlConfig(round_budget_s=3.0, max_rounds=2, filter_kind="none"),
         state_dir=ckpt,
     )
     d1.run(seeds)
     # resume to 4 rounds from checkpoint
     d2 = fr.CrawlDriver(
         spark, robots, docs,
-        fr.CrawlConfig(round_budget_s=3.0, max_rounds=4, use_bloom=False),
+        fr.CrawlConfig(round_budget_s=3.0, max_rounds=4, filter_kind="none"),
         state_dir=ckpt,
     )
     resumed = d2.run(seeds, resume=True)
     got_seen = {(r["url"], r["round_seen"]) for r in resumed["state"]["seen"].collect()}
     assert got_seen == want_seen
     # the n_seen counter survives the resume (it used to restart at 0,
-    # undercounting every pre-resume round in the returned state)
+    # undercounting every pre-resume round in the returned state), and
+    # so does n_frontier, which tells the next round the frontier's size
     assert resumed["state"]["n_seen"] == straight["state"]["n_seen"] == len(want_seen)
+    n_frontier = straight["state"]["frontier"].count()
+    assert resumed["state"]["n_frontier"] == straight["state"]["n_frontier"] == n_frontier
 
 
 def _assert_fused_round_equals_oracle_step(
@@ -228,13 +233,23 @@ def _assert_fused_round_equals_oracle_step(
     """Run the fused Spark round and the oracle's one-round ``step`` on the
     same carried (frontier, seen, credit) state and candidates; the
     flagged rows, the schedule with its per-host rank, and the carried
-    frontier left behind must all match."""
+    frontier left behind must all match. A config with a filter carries
+    a snapshot of the seen rows, so the round probes it."""
+    from cc_dbp_spark.operators import filters as flt
+
     cand = spark.createDataFrame(raw, "url string, depth int")
     # seen rows keep run_round's invariant url_hash = xxhash64(url): the
     # membership filters are built from it
     seen = spark.createDataFrame(
         [(u, 0) for u in seen_urls], "url string, round_seen int"
     ).select("url", F.xxhash64("url").alias("url_hash"), "round_seen")
+    filter_df = None
+    if cfg.filter_kind == "bloom":
+        spec = flt.BloomSpec(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_partitions)
+        filter_df = flt.build_bloom_df(seen.select("url_hash"), spec)
+    elif cfg.filter_kind == "cuckoo":
+        per_part = max(1024, cfg.bloom_capacity // cfg.bloom_partitions)
+        filter_df = flt.build_cuckoo_df(seen.select("url_hash"), per_part, cfg.bloom_partitions)
     flagged, scheduled, deferred = fr._fused_schedule(
         cand,
         spark.createDataFrame(frontier_rows, fr.FRONTIER_SCHEMA),
@@ -243,6 +258,7 @@ def _assert_fused_round_equals_oracle_step(
         spark.createDataFrame(credit_rows, fr.CREDIT_SCHEMA),
         rnd, cfg,
         seen_nonempty=True, frontier_nonempty=True,
+        filter_df=filter_df,
     )
 
     st = orc.OracleState(
@@ -275,7 +291,7 @@ def test_fused_round_equals_oracle_step(spark, fixture_dir):
     (the fast-vs-naive differential pattern)."""
     seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
     robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
-    cfg = fr.CrawlConfig(round_budget_s=3.0, use_bloom=False)
+    cfg = fr.CrawlConfig(round_budget_s=3.0, filter_kind="none")
     # synthetic mid-crawl state: some urls already seen, some carried over
     raw = [(r["url"], 2) for r in seeds.select("url").limit(200).collect()]
     frontier_rows = [
@@ -297,7 +313,7 @@ def test_resume_restores_filter_snapshot(spark, fixture_dir, tmp_path_factory):
     docs = spark.read.parquet(str(fixture_dir / "documents_spans.parquet"))
     seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
     robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
-    base = dict(round_budget_s=3.0, use_bloom=True, bloom_capacity=1 << 14,
+    base = dict(round_budget_s=3.0, filter_kind="bloom", bloom_capacity=1 << 14,
                 bloom_partitions=4)
     straight = fr.CrawlDriver(
         spark, robots, docs, fr.CrawlConfig(**base, max_rounds=4)
@@ -325,6 +341,13 @@ def test_resume_restores_filter_snapshot(spark, fixture_dir, tmp_path_factory):
     got_seen = {(r["url"], r["round_seen"]) for r in resumed["state"]["seen"].collect()}
     assert got == [w for w in want if w[0] >= 2]
     assert got_seen == want_seen
+
+
+def test_unknown_filter_kind_raises():
+    """A misspelt filter kind must not quietly run another filter."""
+    for kind in ("Cuckoo", "bloom ", ""):
+        with pytest.raises(ValueError, match="filter_kind"):
+            fr.CrawlConfig(filter_kind=kind)
 
 
 @pytest.mark.parametrize("seed", [3, 17])
@@ -359,7 +382,7 @@ def test_fused_randomized_differential(spark, seed):
     credit_rows = [(h, rng.uniform(0, 3)) for h in rng.sample(hosts, k=len(hosts) // 3)]
     cfg = fr.CrawlConfig(
         round_budget_s=rng.choice([2.0, 5.0]),
-        use_bloom=rng.random() < 0.5,
+        filter_kind="bloom" if rng.random() < 0.5 else "none",
         bloom_capacity=1 << 12, bloom_partitions=4,
         hot_host_threshold=rng.choice([10, 10**9]),
         hot_host_cap=5,
@@ -381,14 +404,11 @@ def test_bucketed_seen_state_equals_plain(spark, fixture_dir, tmp_path_factory):
     docs = spark.read.parquet(str(fixture_dir / "documents_spans.parquet"))
     seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
     robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
-    cfg = fr.CrawlConfig(round_budget_s=3.0, use_bloom=False)
+    cfg = fr.CrawlConfig(round_budget_s=3.0, filter_kind="none")
 
-    st = fr.empty_state(spark)
-    st["seen_nonempty"] = False
-    st["frontier_nonempty"] = False
     out0 = fr.run_round(
-        spark, seeds.select("url", F.col("depth").cast("int")), st, robots,
-        docs, 0, cfg,
+        spark, seeds.select("url", F.col("depth").cast("int")),
+        fr.empty_state(spark), robots, docs, 0, cfg,
     )
     seen = out0["seen"].localCheckpoint(eager=True)
     frontier1 = out0["frontier"].localCheckpoint(eager=True)
@@ -396,10 +416,11 @@ def test_bucketed_seen_state_equals_plain(spark, fixture_dir, tmp_path_factory):
     carried = {
         "frontier": frontier1,
         "credit": out0["credit"].localCheckpoint(eager=True),
-        "seen_nonempty": seen.count() > 0,
-        "frontier_nonempty": frontier1.count() > 0,
+        "filter": None,
+        "n_seen": seen.count(),
+        "n_frontier": frontier1.count(),
     }
-    assert carried["seen_nonempty"]  # the anti-join path must be live
+    assert carried["n_seen"] > 0  # the anti-join path must be live
 
     def round1(seen_df):
         out = fr.run_round(

@@ -182,9 +182,13 @@ def test_bucketed_seen_anti_join_shuffles_only_candidates(spark, tmp_path):
 def test_streaming_crawl_rounds_match_batch(spark, tmp_path):
     """Streaming ingest seam: candidate files drained one-per-trigger,
     each micro-batch = one scheduling round via foreachBatch, outlinks
-    feeding the next round — the concatenated schedule equals driving
-    frontier.run_round by hand over the same candidate batches."""
+    feeding the next round — the concatenated schedule and the carried
+    state equal driving frontier.run_round by hand over the same
+    candidate batches. Nothing read after the stream ends may replay a
+    micro-batch: the candidate files and the stream checkpoint are
+    deleted before the results are collected."""
     import os
+    import shutil
     import time as _time
 
     from pyspark.sql import functions as F
@@ -214,41 +218,40 @@ def test_streaming_crawl_rounds_match_batch(spark, tmp_path):
         os.utime(p, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
         _time.sleep(0.01)
 
-    cfg = fr.CrawlConfig(round_budget_s=3.0, use_bloom=True)
+    cfg = fr.CrawlConfig(round_budget_s=3.0, filter_kind="bloom")
     sc = ingest.StreamingCrawl(spark, robots, docs, cfg)
     sched = sc.run_available_now(str(src), str(tmp_path / "ckpt"))
+    shutil.rmtree(src)
+    shutil.rmtree(tmp_path / "ckpt")
     got = [
         (r["round"], r["position"], r["url"])
         for r in sched.orderBy("round", "position").collect()
     ]
     assert len(sc.rounds) == 3
 
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    tables = ("seen", "credit", "frontier")
+    got_state = {k: rows(sc.driver.state[k]) for k in tables}
+
     # batch twin: same candidate batches + outlink feedback by hand
     state = fr.empty_state(spark)
-    state["seen_nonempty"] = False
-    state["frontier_nonempty"] = False
-    want, carried, n_seen = [], None, 0
+    want, carried = [], None
     for rnd in range(3):
         cand = spark.createDataFrame(parts[rnd], ingest.CANDIDATE_SCHEMA)
         if carried is not None:
             cand = cand.unionByName(carried)
         out = fr.run_round(spark, cand, state, robots, docs, rnd, cfg)
-        batch = out["fetch_batch"].localCheckpoint(eager=True)
-        carried = out["outlinks"].localCheckpoint(eager=True)
-        state = {
-            k: out[k].localCheckpoint(eager=True)
-            for k in ("frontier", "seen", "credit")
-        }
-        if out.get("filter") is not None:
-            state["filter"] = out["filter"].localCheckpoint(eager=True)
-        n_seen += batch.count()
-        state["seen_nonempty"] = n_seen > 0
-        state["frontier_nonempty"] = state["frontier"].count() > 0
+        state, _ = fr.advance_round_state(out, state["n_seen"])
+        carried = out["outlinks"]
         want.extend(
             (r["round"], r["position"], r["url"])
-            for r in batch.orderBy("position").collect()
+            for r in out["fetch_batch"].orderBy("position").collect()
         )
     assert got == want and len(got) > 0
+    assert got_state == {k: rows(state[k]) for k in tables}
+    assert all(got_state.values())
 
 
 def test_sessionize_stream_multibatch_out_of_order(spark, tmp_path):

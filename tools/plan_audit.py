@@ -101,7 +101,7 @@ def main() -> None:
         "host string, deny_prefixes array<string>, allow_prefixes array<string>, crawl_delay_s double",
     )
     credit = spark.createDataFrame([], fr.CREDIT_SCHEMA)
-    audit_cfg = fr.CrawlConfig(use_bloom=False, round_budget_s=50.0)
+    audit_cfg = fr.CrawlConfig(filter_kind="none", round_budget_s=50.0)
     _, scheduled, _ = fr._fused_schedule(
         cand, None, None, robots, credit, 0, audit_cfg,
         seen_nonempty=False, frontier_nonempty=False,
