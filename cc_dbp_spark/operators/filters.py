@@ -12,20 +12,42 @@ becomes a partitioned filter + exact confirm:
 * state: one row per hash partition ``(pid, bitmap binary)``,
   snapshotted to parquet each round -> resumable.
 
+The crawl round decides nothing about the filter: it carries a snapshot
+or ``None`` and calls :class:`SeenFilter`, which holds the kind and the
+sizing (from the ``CrawlConfig``), picks the probe and steps the
+snapshot. The bloom probe broadcasts the whole filter (narrow, no
+shuffle) while it fits :data:`BROADCAST_MAX_BYTES`; beyond that, and
+always for cuckoo, the probe is a cogrouped ``applyInPandas`` in which
+each partition's filter row meets its candidate group once. The probe
+broadcast stays in one module slot until :func:`release_probe_broadcast`,
+which ``CrawlDriver.step`` calls after each round's count job.
+
 All probe/build math is numpy over int64 ``xxhash64(url)`` columns —
-no per-row Python. At cluster scale the probe runs as a cogrouped
-``applyInPandas`` so each partition's bitmap is shipped once per
-candidate partition, never broadcast whole.
+no per-row Python.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import math
+import pathlib
 
 import numpy as np
 import pandas as pd
 
 _MIX = np.uint64(0xFF51AFD7ED558CCD)
+
+# the seen-filter kinds a CrawlConfig may name ("none": exact anti-join only)
+FILTER_KINDS = ("bloom", "cuckoo", "none")
+# whole-filter bytes up to which the bloom probe is a broadcast (bits for
+# 10^7 urls at 1% fpr ~ 12 MB); 10^10-scale filters are GBs and must meet
+# each candidate partition once, cogrouped, never be broadcast whole
+BROADCAST_MAX_BYTES = 64 << 20
+
+
+def _per_partition(capacity: int, num_partitions: int) -> int:
+    """Members each filter partition is sized for (bloom and cuckoo)."""
+    return max(1024, capacity // num_partitions)
 
 
 def _h2(h: np.ndarray) -> np.ndarray:
@@ -42,7 +64,7 @@ class BloomSpec:
 
     def __init__(self, capacity: int, fpr: float = 0.01, num_partitions: int = 16):
         self.num_partitions = num_partitions
-        per_part = max(1024, capacity // num_partitions)
+        per_part = _per_partition(capacity, num_partitions)
         bits = int(-per_part * math.log(fpr) / (math.log(2) ** 2))
         self.bits_per_partition = 1 << max(13, (bits - 1).bit_length())
         self.num_hashes = max(1, round(self.bits_per_partition / per_part * math.log(2)))
@@ -85,62 +107,76 @@ class BloomSpec:
         return hit.all(axis=1).astype(bool)
 
 
+def _with_pid(df, hash_col: str, num_partitions: int):
+    """``df`` + ``pid``, the filter partition of each row's hash."""
+    from pyspark.sql import functions as F
+
+    return df.withColumn("pid", F.pmod(F.col(hash_col), F.lit(num_partitions)).cast("int"))
+
+
 def build_bloom_df(seen_df, spec: BloomSpec, hash_col: str = "url_hash"):
     """Distributed bloom build: groupBy(pid) -> one bitmap row per partition.
 
     Returns DataFrame (pid int, bitmap binary). Partitions with no members
     are absent (probe treats absent as all-miss).
     """
-    from pyspark.sql import functions as F
-
     # the grouped/cogrouped kernels in this module carry no type hints:
     # applyInPandas warns on every call when it finds partial ones
     def _build(key, pdf):
         bm = spec.build_bitmap(pdf[hash_col].to_numpy(dtype=np.int64))
         return pd.DataFrame({"pid": [key[0]], "bitmap": [bm]})
 
-    with_pid = seen_df.withColumn(
-        "pid", F.pmod(F.col(hash_col), F.lit(spec.num_partitions)).cast("int")
-    )
+    with_pid = _with_pid(seen_df, hash_col, spec.num_partitions)
     return with_pid.groupBy("pid").applyInPandas(_build, "pid int, bitmap binary")
 
 
-def prune_with_bloom(candidates_df, bloom_df, spec: BloomSpec, hash_col: str = "url_hash"):
-    """Split candidates into (definitely_new, maybe_seen) via cogrouped probe.
-
-    Scale path: each partition's bitmap meets its candidate group exactly
-    once (cogroup on pid) — no whole-filter broadcast, no shuffle of the
-    seen table itself.
-    """
+def _split(flagged, cols):
+    """(definitely_new, maybe_seen) rows of a flagged frame, in ``cols``."""
     from pyspark.sql import functions as F
 
-    cols = candidates_df.columns
-    cand = candidates_df.withColumn(
-        "pid", F.pmod(F.col(hash_col), F.lit(spec.num_partitions)).cast("int")
+    return (
+        flagged.filter(~F.col("maybe_seen")).select(*cols),
+        flagged.filter(F.col("maybe_seen")).select(*cols),
     )
 
+
+def _prune_cogrouped(candidates_df, filter_df, num_partitions: int, hash_col: str, kernel):
+    """Split candidates into (definitely_new, maybe_seen) via a cogrouped
+    probe: each partition's filter row meets its candidate group exactly
+    once (cogroup on pid) — no whole-filter broadcast, no shuffle of the
+    seen table itself. ``kernel(hashes, filter_pdf)`` flags one
+    partition's hashes against its one filter row; a partition without
+    a row has no members, so its candidates are all new."""
+    cand = _with_pid(candidates_df, hash_col, num_partitions)
     out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in cand.schema.fields)
     out_schema += ", maybe_seen boolean"
 
-    def _probe(key, cand_pdf, bloom_pdf):
+    def _probe(key, cand_pdf, filter_pdf):
         if len(cand_pdf) == 0:
             return cand_pdf.assign(maybe_seen=pd.Series([], dtype=bool))
-        if len(bloom_pdf) == 0:
-            maybe = np.zeros(len(cand_pdf), dtype=bool)
+        hashes = cand_pdf[hash_col].to_numpy(dtype=np.int64)
+        if len(filter_pdf) == 0:
+            maybe = np.zeros(len(hashes), dtype=bool)
         else:
-            maybe = spec.probe(
-                cand_pdf[hash_col].to_numpy(dtype=np.int64), bloom_pdf["bitmap"].iloc[0]
-            )
+            maybe = kernel(hashes, filter_pdf)
         return cand_pdf.assign(maybe_seen=maybe)
 
     probed = (
         cand.groupBy("pid")
-        .cogroup(bloom_df.groupBy("pid"))
+        .cogroup(filter_df.groupBy("pid"))
         .applyInPandas(_probe, out_schema)
     )
-    new = probed.filter(~F.col("maybe_seen")).select(*cols)
-    maybe = probed.filter(F.col("maybe_seen")).select(*cols)
-    return new, maybe
+    return _split(probed, candidates_df.columns)
+
+
+def prune_with_bloom(candidates_df, bloom_df, spec: BloomSpec, hash_col: str = "url_hash"):
+    """Split candidates into (definitely_new, maybe_seen) via the
+    cogrouped bloom probe: the scale path, for bitmaps too large to
+    broadcast whole."""
+    return _prune_cogrouped(
+        candidates_df, bloom_df, spec.num_partitions, hash_col,
+        lambda hashes, pdf: spec.probe(hashes, pdf["bitmap"].iloc[0]),
+    )
 
 
 def update_bloom_df(prev_bloom_df, new_seen_df, spec: BloomSpec,
@@ -171,40 +207,29 @@ def empty_bloom_df(spark):
     return empty_df(spark, "pid int, bitmap binary")
 
 
-# The live probe broadcast, one STRONG slot (app_id, Broadcast). Strong
-# because the pandas UDF closure does not retain the Python Broadcast
-# wrapper after planning — a weakref dies the moment
-# flag_with_broadcast_bloom returns (measured), making the next round's
-# unpersist a no-op and leaving every round's executor copies pinned.
-# Tagged with applicationId (stable, never reused — id(sc) can collide
-# after GC) so a successor context never unpersists a predecessor's
-# broadcast; a stale entry from a dead context is simply dropped, which
-# frees its driver-side value. One slot bounds driver retention to
-# exactly the current round's filter, which must stay referenced anyway
-# to remain re-broadcastable for lazy re-execution.
-_last_probe_broadcast: tuple[str, object] | None = None
+# The round's probe broadcast, one STRONG slot. Strong because the
+# pandas UDF closure does not retain the Python Broadcast wrapper after
+# planning — a weakref dies the moment flag_with_broadcast_bloom returns
+# (measured), so its unpersist would be a no-op. CrawlDriver.step empties
+# it after every round; a module global only because callers outside a
+# round (perfbench's filter probe) release it by name.
+_last_probe_broadcast = None
 
 
 def release_probe_broadcast() -> None:
-    """Teardown for the probe-broadcast slot: unpersist the FINAL
-    round's executor copies and drop the driver-side reference (the
-    per-round rotation in :func:`flag_with_broadcast_bloom` only ever
-    releases the previous round, so without this a long-lived driver
-    pins the last filter — up to ~64 MB × (1 + executors) — until the
-    process exits). Safe to call at any point: ``unpersist`` keeps the
-    broadcast re-broadcastable from the driver JVM, so a still-lazy
-    plan that probes it simply re-ships the value on execution.
-    CrawlDriver.run and StreamingCrawl.run_available_now call this when
-    their rounds complete."""
+    """Unpersist the probe broadcast's executor copies and drop the
+    driver-side reference; a second call is a no-op. Safe at any point:
+    ``unpersist`` keeps the broadcast re-broadcastable from the driver
+    JVM, so a still-lazy plan that probes it re-ships the value on
+    execution. ``CrawlDriver.step`` calls this after the round's count
+    job, the barrier after which no plan of the round reads the probe."""
     global _last_probe_broadcast
-    if _last_probe_broadcast is None:
-        return
-    _, prev = _last_probe_broadcast
-    _last_probe_broadcast = None
-    try:
-        prev.unpersist(False)
-    except Exception:
-        pass  # context already shut down
+    prev, _last_probe_broadcast = _last_probe_broadcast, None
+    if prev is not None:
+        try:
+            prev.unpersist(False)
+        except Exception:
+            pass  # its context already shut down
 
 
 def flag_with_broadcast_bloom(candidates_df, bloom_df, spec: BloomSpec,
@@ -213,35 +238,19 @@ def flag_with_broadcast_bloom(candidates_df, bloom_df, spec: BloomSpec,
     """NARROW bloom probe: ship the whole partitioned filter to every task
     via a Spark broadcast and flag candidates in place — no shuffle at all.
 
-    Use when the filter fits the broadcast budget (bits for 10^7 urls at
-    1% fpr ~ 12 MB); the cogrouped :func:`prune_with_bloom` remains the
-    10^10-scale path where bitmaps are GBs and must meet each candidate
-    partition exactly once instead of being broadcast whole.
+    For filters within :data:`BROADCAST_MAX_BYTES`; the cogrouped
+    :func:`prune_with_bloom` remains the 10^10-scale path where bitmaps
+    are GBs and must meet each candidate partition exactly once instead
+    of being broadcast whole. The broadcast stays in the module slot
+    until :func:`release_probe_broadcast`.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import BooleanType
 
+    global _last_probe_broadcast
     sc = candidates_df.sparkSession.sparkContext
     parts = {int(r["pid"]): bytes(r["bitmap"]) for r in bloom_df.collect()}
-    bparts = sc.broadcast(parts)
-    # a multi-round loop calls this once per round with a fresh (up to
-    # ~64 MB) filter: release the PREVIOUS round's executor copies —
-    # its consumers were materialized by that round's checkpoint/count
-    # barrier, and unpersist (unlike destroy) stays re-broadcastable
-    # from the driver if some lazy plan does re-execute
-    global _last_probe_broadcast
-    app_id = sc.applicationId
-    if _last_probe_broadcast is not None:
-        prev_app, prev = _last_probe_broadcast
-        _last_probe_broadcast = None
-        if prev_app == app_id:
-            try:
-                prev.unpersist(False)
-            except Exception:
-                pass  # context shut down between rounds
-        # different app: the old context is gone — its executor copies
-        # died with it; dropping the strong ref frees the driver value
-    _last_probe_broadcast = (app_id, bparts)
+    bparts = _last_probe_broadcast = sc.broadcast(parts)
 
     @F.pandas_udf(BooleanType())
     def _probe(h: pd.Series) -> pd.Series:
@@ -258,18 +267,11 @@ def flag_with_broadcast_bloom(candidates_df, bloom_df, spec: BloomSpec,
     return candidates_df.withColumn(flag_col, _probe(F.col(hash_col)))
 
 
-def bloom_total_bytes(spec: BloomSpec) -> int:
-    """Whole-filter size if every partition bitmap were materialized."""
-    return spec.num_partitions * (spec.bits_per_partition // 8)
-
-
 def build_cuckoo_df(seen_df, capacity_per_partition: int, num_partitions: int = 16,
                     hash_col: str = "url_hash"):
     """Distributed partitioned cuckoo build: groupBy(pid) -> one serialized
     filter row per hash partition (same lifecycle as the bloom: snapshot
     to parquet, reload, cogroup-probe). Returns (pid int, table binary)."""
-    from pyspark.sql import functions as F
-
     def _build(key, pdf):
         cf = CuckooFilter(capacity_per_partition)
         failed = cf.insert(pdf[hash_col].to_numpy(dtype=np.int64))
@@ -281,10 +283,7 @@ def build_cuckoo_df(seen_df, capacity_per_partition: int, num_partitions: int = 
             {"pid": [key[0]], "table": [cf.to_bytes()], "saturated": [failed > 0]}
         )
 
-    with_pid = seen_df.withColumn(
-        "pid", F.pmod(F.col(hash_col), F.lit(num_partitions)).cast("int")
-    )
-    return with_pid.groupBy("pid").applyInPandas(
+    return _with_pid(seen_df, hash_col, num_partitions).groupBy("pid").applyInPandas(
         _build, "pid int, table binary, saturated boolean"
     )
 
@@ -296,11 +295,7 @@ def update_cuckoo_df(prev_cuckoo_df, new_seen_df, capacity_per_partition: int,
     A partition that ever overflows stays saturated (all probes "maybe",
     exact anti-join decides) — correctness never depends on the filter.
     """
-    from pyspark.sql import functions as F
-
-    new = new_seen_df.withColumn(
-        "pid", F.pmod(F.col(hash_col), F.lit(num_partitions)).cast("int")
-    ).select("pid", hash_col)
+    new = _with_pid(new_seen_df, hash_col, num_partitions).select("pid", hash_col)
 
     def _upd(key, prev_pdf, new_pdf):
         if len(prev_pdf):
@@ -334,37 +329,66 @@ def prune_with_cuckoo(candidates_df, cuckoo_df, num_partitions: int = 16,
     fall through to the exact anti-join, so the seen-set decision stays
     exact. Unlike bloom, the cuckoo filter also supports delete (URL
     re-crawl eviction) on the snapshot."""
-    from pyspark.sql import functions as F
-
-    cols = candidates_df.columns
-    cand = candidates_df.withColumn(
-        "pid", F.pmod(F.col(hash_col), F.lit(num_partitions)).cast("int")
-    )
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in cand.schema.fields)
-    out_schema += ", maybe_seen boolean"
-
-    def _probe(key, cand_pdf, ck_pdf):
-        if len(cand_pdf) == 0:
-            return cand_pdf.assign(maybe_seen=pd.Series([], dtype=bool))
-        if len(ck_pdf) == 0:
-            maybe = np.zeros(len(cand_pdf), dtype=bool)
-        elif bool(ck_pdf["saturated"].iloc[0]):
+    def _kernel(hashes, ck_pdf):
+        if bool(ck_pdf["saturated"].iloc[0]):
             # overflowed partition: filter may have dropped entries (false
             # negatives) -> everything goes to the exact anti-join
-            maybe = np.ones(len(cand_pdf), dtype=bool)
-        else:
-            cf = CuckooFilter.from_bytes(ck_pdf["table"].iloc[0])
-            maybe = cf.contains(cand_pdf[hash_col].to_numpy(dtype=np.int64))
-        return cand_pdf.assign(maybe_seen=maybe)
+            return np.ones(len(hashes), dtype=bool)
+        return CuckooFilter.from_bytes(ck_pdf["table"].iloc[0]).contains(hashes)
 
-    probed = (
-        cand.groupBy("pid")
-        .cogroup(cuckoo_df.groupBy("pid"))
-        .applyInPandas(_probe, out_schema)
-    )
-    new = probed.filter(~F.col("maybe_seen")).select(*cols)
-    maybe = probed.filter(F.col("maybe_seen")).select(*cols)
-    return new, maybe
+    return _prune_cogrouped(candidates_df, cuckoo_df, num_partitions, hash_col, _kernel)
+
+
+@dataclasses.dataclass(frozen=True)
+class SeenFilter:
+    """The seen filter as a crawl round uses it: its kind, its sizing,
+    its probe and its snapshot step. Built only from a ``CrawlConfig``
+    (:meth:`of`); the round carries its snapshot, or ``None``."""
+
+    kind: str
+    capacity: int
+    fpr: float
+    partitions: int
+
+    @classmethod
+    def of(cls, cfg) -> "SeenFilter":
+        return cls(cfg.filter_kind, cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_partitions)
+
+    def split(self, candidates_df, snapshot, hash_col: str = "url_hash"):
+        """(definitely_new, maybe_seen) candidates against ``snapshot``;
+        an exact anti-join must confirm the maybe rows. Bloom probes by
+        broadcast while the whole filter fits BROADCAST_MAX_BYTES."""
+        if self.kind == "cuckoo":
+            return prune_with_cuckoo(candidates_df, snapshot, self.partitions, hash_col)
+        spec = BloomSpec(self.capacity, self.fpr, self.partitions)
+        if spec.num_partitions * spec.bits_per_partition // 8 > BROADCAST_MAX_BYTES:
+            return prune_with_bloom(candidates_df, snapshot, spec, hash_col)
+        flagged = flag_with_broadcast_bloom(candidates_df, snapshot, spec, hash_col)
+        return _split(flagged, candidates_df.columns)
+
+    def advance(self, snapshot, seen_hashes, new_hashes):
+        """The snapshot after a round (``None`` for kind "none"): built
+        from ``seen_hashes``, the whole seen set, when the round carried
+        none; else ``snapshot`` updated from ``new_hashes``, the round's
+        newly scheduled urls — O(new), not O(seen)."""
+        if self.kind == "none":
+            return None
+        if self.kind == "cuckoo":
+            per_part = _per_partition(self.capacity, self.partitions)
+            if snapshot is None:
+                return build_cuckoo_df(seen_hashes, per_part, self.partitions)
+            return update_cuckoo_df(snapshot, new_hashes, per_part, self.partitions)
+        spec = BloomSpec(self.capacity, self.fpr, self.partitions)
+        if snapshot is None:
+            return build_bloom_df(seen_hashes, spec)
+        return update_bloom_df(snapshot, new_hashes, spec)
+
+    def load(self, spark, path):
+        """The snapshot checkpointed at ``path``; ``None`` when there is
+        none or the kind is "none"."""
+        if self.kind == "none" or not pathlib.Path(path).exists():
+            return None
+        return spark.read.parquet(str(path))
 
 
 # ------------------------------------------------------------------ cuckoo

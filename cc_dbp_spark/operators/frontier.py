@@ -12,7 +12,11 @@ checkpoints the flagged rows, the per-host rank, ONE per-host table
 (audit, credit and fetch-order offsets all derive from it) and the
 fetched rows; :func:`advance_round_state` checkpoints the credit and
 filter tables and runs one count job. Every other output is a narrow
-projection of those checkpoints.
+projection of those checkpoints. With a state dir,
+:meth:`CrawlDriver.step` then writes the carried frontier, credit and
+filter snapshot and the round's fetch batch, audit, lineage and next
+candidates: O(frontier + filter + round outputs) per round. The seen
+set is not written, since it is the union of the fetch batches.
 
 Semantics are defined by the pure-Python oracle
 (:mod:`cc_dbp_spark.oracle.scheduler`); differential tests assert the
@@ -21,14 +25,16 @@ schedule order, seen set, and emitted span sequences match exactly.
 Scale design (10^10-URL frontier, SURVEY.md §7):
 * everything is DataFrame ops — scans prune columns, filters push down,
   joins are broadcast where one side is per-host metadata;
-* the seen-set membership test is bloom-pruned (cogrouped partitioned
-  bitmaps, :mod:`.filters`) with an exact left-anti join confirming the
-  "maybe" subset, so the decision stays exact;
+* the seen-set membership test is pre-checked by a partitioned filter
+  (:class:`.filters.SeenFilter` owns its kind, sizing and probe; the
+  round carries only its snapshot) with an exact left-anti join
+  confirming the "maybe" subset, so the decision stays exact;
 * per-host top-k uses two-phase salted windows for hot hosts — the
   reference's gsplits skew pattern (detect ``RelexTsvDataset.java:100-118``,
   salt D5 ``RelexMention.java:127-132``) applied to hosts, because AQE
   does not fix skewed window/collect groups;
-* per-round state (frontier/seen/credit/audit) checkpoints to parquet
+* per-round state (frontier/credit/filter/audit, and the fetch batches
+  the seen set is rebuilt from) checkpoints to parquet
   snapshots -> resumable from any round (the reference's output-exists
   resume, ``spark/.../RelexBuildDataset.java:72-93``).
 
@@ -77,21 +83,17 @@ class CrawlConfig:
     round_budget_s: float = 10.0
     default_crawl_delay_s: float = 1.0
     max_rounds: int = 10
-    # seen-set pre-check: "bloom" | "cuckoo" (advisory, prune-only) | "none"
+    # seen-set pre-check, one of filters.FILTER_KINDS: "bloom" | "cuckoo"
+    # (advisory, prune-only) | "none"; filters.SeenFilter sizes and probes it
     filter_kind: str = "bloom"
     bloom_capacity: int = 1 << 20
     bloom_fpr: float = 0.01
     bloom_partitions: int = 16
-    # bloom probe strategy: whole-filter broadcast (narrow, no shuffle)
-    # while the bitmaps fit this budget; cogrouped probe beyond it
-    # (10^10-scale filters are GBs and must meet each candidate partition
-    # once, never be broadcast whole)
-    bloom_broadcast_max_bytes: int = 64 << 20
     hot_host_threshold: int = 10_000  # counts above this get salted top-k
     hot_host_cap: int = 5_000  # target rows per salt split
 
     def __post_init__(self):
-        if self.filter_kind not in ("bloom", "cuckoo", "none"):
+        if self.filter_kind not in flt.FILTER_KINDS:
             raise ValueError(f"unknown filter_kind {self.filter_kind!r}")
 
 
@@ -275,12 +277,11 @@ def _fused_schedule(
     rows contribute their accumulated link_count / earliest round_added,
     candidate rows contribute 1 link each (0 in the seed round). The
     seen-set test applies to candidates only (frontier rows are unseen
-    by invariant). With a carried ``filter_df`` snapshot (of
-    ``cfg.filter_kind``) the filter prunes and an exact anti-join over
-    the surviving "maybe" rows confirms — broadcast bloom probe when the
-    filter fits the broadcast budget (narrow), cogrouped otherwise.
-    Without one the exact anti-join runs alone: the filter is only a
-    pre-check, so the answer is the same.
+    by invariant). With a carried ``filter_df`` snapshot the filter
+    prunes (:class:`.filters.SeenFilter` picks the probe) and an exact
+    anti-join over the surviving "maybe" rows confirms. Without one the
+    exact anti-join runs alone: the filter is only a pre-check, so the
+    answer is the same.
 
     Hot-host detection uses RAW (pre-dedupe) counts: the active-host set
     is dedupe-invariant, and salting never changes the schedule (it only
@@ -315,18 +316,7 @@ def _fused_schedule(
         # filter_df: the incrementally-maintained snapshot (updated from
         # newly-seen urls each round, O(new) not O(seen))
         cand_rows = cand_rows.withColumn("url_hash", F.xxhash64(F.col("url")))
-        if cfg.filter_kind == "cuckoo":
-            definitely_new, maybe = flt.prune_with_cuckoo(
-                cand_rows, filter_df, cfg.bloom_partitions
-            )
-        else:
-            spec = flt.BloomSpec(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_partitions)
-            if flt.bloom_total_bytes(spec) <= cfg.bloom_broadcast_max_bytes:
-                probed = flt.flag_with_broadcast_bloom(cand_rows, filter_df, spec)
-                definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-                maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-            else:
-                definitely_new, maybe = flt.prune_with_bloom(cand_rows, filter_df, spec)
+        definitely_new, maybe = flt.SeenFilter.of(cfg).split(cand_rows, filter_df)
         confirmed_new = maybe.join(seen.select("url"), "url", "left_anti")
         cand_rows = definitely_new.unionByName(confirmed_new).drop("url_hash")
 
@@ -587,29 +577,15 @@ def run_round(
             "url", F.xxhash64(F.col("url")).alias("url_hash"), F.lit(rnd).alias("round_seen")
         )
     )
-    # filter-snapshot update: O(newly scheduled urls) per round. With no
+    # filter-snapshot step: O(newly scheduled urls) per round. With no
     # carried snapshot (fresh start, or a resume from a checkpoint without
-    # one) build it from the updated seen set once; every later round is
-    # incremental.
-    new_filter = None
-    if cfg.filter_kind != "none":
-        prev = state["filter"]
-        per_part = max(1024, cfg.bloom_capacity // cfg.bloom_partitions)
-        spec = flt.BloomSpec(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_partitions)
-        if prev is None:
-            seen_hashes = new_seen.select("url_hash")
-            new_filter = (
-                flt.build_cuckoo_df(seen_hashes, per_part, cfg.bloom_partitions)
-                if cfg.filter_kind == "cuckoo"
-                else flt.build_bloom_df(seen_hashes, spec)
-            )
-        else:
-            newly = fetch_batch.select(F.xxhash64(F.col("url")).alias("url_hash"))
-            new_filter = (
-                flt.update_cuckoo_df(prev, newly, per_part, cfg.bloom_partitions)
-                if cfg.filter_kind == "cuckoo"
-                else flt.update_bloom_df(prev, newly, spec)
-            )
+    # one) it is built from the updated seen set once; every later round
+    # is incremental.
+    new_filter = flt.SeenFilter.of(cfg).advance(
+        state["filter"],
+        new_seen.select("url_hash"),
+        fetch_batch.select(F.xxhash64(F.col("url")).alias("url_hash")),
+    )
 
     new_credit_active = hosts.select(
         "host", (F.col("credit0") - F.col("scheduled") * F.col("delay")).alias("credit")
@@ -731,24 +707,28 @@ class CrawlDriver:
         # (without them the logical plan grows per round and analysis
         # dominates runtime)
         self.state, counts = advance_round_state(out, self.state["n_seen"])
+        # the count job was the round's last read of its probe broadcast
+        flt.release_probe_broadcast()
         self._ckpt(rnd, out)
         return out, counts
 
     def _ckpt(self, rnd: int, out: dict) -> None:
         """Write the round's state (the checkpointed tables of
         ``self.state``, never the pre-checkpoint plans, which would run a
-        second time) and outputs, then the ``COMMIT`` marker."""
+        second time) and outputs, then the ``COMMIT`` marker. The seen
+        set is not written: it is the union of the rounds' ``fetch_batch``
+        tables, from which :meth:`resume_state` rebuilds it."""
         if self.state_dir is None:
             return
         d = self.state_dir / f"round_{rnd:04d}"
         d.mkdir(parents=True, exist_ok=True)
         st = self.state
-        tables = {k: st[k] for k in ("frontier", "seen", "credit", "filter")}
+        tables = {k: st[k] for k in ("frontier", "credit", "filter")}
         tables |= {k: out[k] for k in ("audit", "fetch_batch", "lineage")}
         tables["next_candidates"] = out["outlinks"]
         for name, df in tables.items():
-            # filter: None when cfg.filter_kind is "none"; resume reloads
-            # the snapshot instead of rebuilding it from the seen set
+            # filter: None without a filter; resume reloads the snapshot
+            # instead of rebuilding it from the seen set
             if df is not None:
                 df.write.mode("overwrite").parquet(str(d / name))
         # the counters ride the commit marker so a resume restores them
@@ -770,13 +750,14 @@ class CrawlDriver:
         d = self.state_dir / f"round_{rnd:04d}"
         state = {
             name: self.spark.read.parquet(str(d / name))
-            for name in ("frontier", "seen", "credit")
+            for name in ("frontier", "credit")
         }
-        state["filter"] = (
-            self.spark.read.parquet(str(d / "filter"))
-            if self.cfg.filter_kind != "none" and (d / "filter").exists()
-            else None
-        )
+        # a url is seen in the round that fetched it
+        state["seen"] = self.spark.read.parquet(*(
+            str(self.state_dir / f"round_{i:04d}" / "fetch_batch") for i in range(rnd + 1)
+        )).select("url", F.xxhash64(F.col("url")).alias("url_hash"),
+                  F.col("round").alias("round_seen"))
+        state["filter"] = flt.SeenFilter.of(self.cfg).load(self.spark, d / "filter")
         commit = json.loads((d / "COMMIT").read_text())
         for key, table in (("n_seen", "seen"), ("n_frontier", "frontier")):
             # checkpoints written before a counter existed count its
@@ -805,10 +786,6 @@ class CrawlDriver:
             emitted.append(out["emitted"])
             if counts.get("sched", 0) == 0 and counts.get("out", 0) == 0:
                 break
-        # rounds complete: drop the final round's probe broadcast (the
-        # per-round rotation only releases the PREVIOUS round; lazy
-        # consumers re-broadcast from the driver JVM if they execute)
-        flt.release_probe_broadcast()
         import functools
 
         if not batches:

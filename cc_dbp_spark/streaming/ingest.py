@@ -104,11 +104,6 @@ class StreamingCrawl:
             .start()
         )
         q.awaitTermination()
-        # stream drained: drop the final round's probe broadcast (same
-        # teardown CrawlDriver.run performs when its rounds complete)
-        from cc_dbp_spark.operators import filters as flt
-
-        flt.release_probe_broadcast()
         import functools
 
         if not self.rounds:

@@ -30,12 +30,16 @@ confidence sweeps:
 * ``simhash_near_dups`` (uncapped) vs brute-force popcount over 10
   random 64-bit code sets with planted near-dup clusters at
   max_hamming 1-3 — the block-rotation pigeonhole exactness claim;
+* ``simhash_near_dups`` capped (``max_bucket`` 2-8) over 6 code sets
+  whose planted clusters outgrow the cap — the star-link guarantee:
+  capped pairs are brute-force pairs, and every cluster member within
+  max_hamming of the cluster's min-id member pairs with it;
 * ``ivf_topk``'s hot-cell re-split result-identity claim: max_cell
   ``"auto"`` == ``None`` == a tight int cap, value-exact top-k over
   6 skewed corpora (half the vectors in one tight cluster).
 
-All eight differentials above were run green in the round-5 closing
-session (recorded in COVERAGE.md).
+The first eight differentials above were run green at the round-5
+close, and the capped SimHash case since (recorded in COVERAGE.md).
 """
 import os
 import random
@@ -182,6 +186,70 @@ def test_simhash_block_rotation_vs_brute_force_wide(spark):
             d = r.asDict()
             got.add(tuple(sorted(v for v in d.values() if isinstance(v, str))))
         assert got == want, (seed, maxh)
+
+
+def test_simhash_capped_star_link_vs_brute_force_wide(spark):
+    """The capped path (``max_bucket``) of ``simhash_near_dups``: planted
+    clusters larger than the cap overflow their block buckets, which
+    star-link to the bucket's min-id member instead of self-joining.
+    Every capped pair is a brute-force pair, and every member within
+    max_hamming of its cluster's min-id member pairs with that member."""
+    import itertools
+    from collections import Counter
+
+    from cc_dbp_spark.operators.dedup import simhash_near_dups
+
+    def to_i64(u):
+        return u - (1 << 64) if u >= (1 << 63) else u
+
+    def ham(a, b):
+        return bin(a ^ b).count("1")
+
+    for seed in range(6):
+        rng = random.Random(100 + seed)
+        maxh = rng.choice([1, 2, 3])
+        cap = rng.choice([2, 4, 8])
+        codes, clusters = {}, []
+        for c in range(rng.randint(2, 5)):
+            base = rng.getrandbits(64)
+            # ids sort the cluster's unmutated base first, and every
+            # cluster before the unclustered "s" codes
+            ids = [f"c{c:02d}_{j:03d}" for j in range(cap + rng.randint(4, 24))]
+            for j, d in enumerate(ids):
+                mut = base
+                for _ in range(rng.randint(0, maxh + 2) if j else 0):
+                    mut ^= 1 << rng.randrange(64)
+                codes[d] = mut
+            clusters.append(ids)
+        for i in range(rng.randint(10, 60)):
+            codes[f"s{i:03d}"] = rng.getrandbits(64)
+
+        # the block buckets simhash_near_dups joins on: some must overflow
+        nb, w = maxh + 1, 64 // (maxh + 1)
+        sizes = Counter(
+            (i, (c >> (i * w)) & ((1 << (w if i < nb - 1 else 64 - i * w)) - 1))
+            for c in codes.values() for i in range(nb)
+        )
+        assert max(sizes.values()) > cap, (seed, cap)
+
+        want = {
+            tuple(sorted((d1, d2)))
+            for (d1, c1), (d2, c2) in itertools.combinations(codes.items(), 2)
+            if ham(c1, c2) <= maxh
+        }
+        df = spark.createDataFrame(
+            [(d, to_i64(c)) for d, c in codes.items()], "doc_id string, simhash long"
+        )
+        got = {
+            (r["id_a"], r["id_b"])
+            for r in simhash_near_dups(df, max_hamming=maxh, max_bucket=cap).collect()
+        }
+        assert got <= want, (seed, sorted(got - want)[:5])
+        linked = {
+            (ids[0], d) for ids in clusters for d in ids[1:]
+            if ham(codes[ids[0]], codes[d]) <= maxh
+        }
+        assert linked <= got, (seed, sorted(linked - got)[:5])
 
 
 def test_ivf_cell_cap_result_identity_wide(spark):

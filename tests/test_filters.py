@@ -176,8 +176,9 @@ def test_broadcast_bloom_slot_survives_and_rotates(spark):
     (r5 review: a weakref dies the moment flag_with_broadcast_bloom
     returns — the pandas UDF closure does not retain the Python Broadcast
     wrapper — so the per-round unpersist was dead code and every round's
-    executor copies stayed pinned) and must rotate: the second round's
-    call unpersists round one's broadcast and installs its own."""
+    executor copies stayed pinned) and must rotate: a second call
+    installs its own broadcast, and the first call's lazy plan still
+    executes."""
     from cc_dbp_spark.operators import filters as flt
 
     spec = flt.BloomSpec(1 << 12, num_partitions=4)
@@ -187,24 +188,21 @@ def test_broadcast_bloom_slot_survives_and_rotates(spark):
 
     flt._last_probe_broadcast = None
     flagged1 = flt.flag_with_broadcast_bloom(cand, bloom, spec, hash_col="h")
-    slot1 = flt._last_probe_broadcast
-    assert slot1 is not None, "slot empty right after the call"
-    app_id, b1 = slot1
-    assert app_id == spark.sparkContext.applicationId
+    b1 = flt._last_probe_broadcast
+    assert b1 is not None, "slot empty right after the call"
     assert b1.value is not None  # strong ref: value alive after return
 
-    # round 2: slot rotates to the new broadcast; the old one got
-    # unpersisted but stays re-broadcastable, so round 1's LAZY plan
-    # still executes correctly afterwards
+    # round 2: slot rotates to the new broadcast, and round 1's LAZY
+    # plan still executes correctly afterwards
     flagged2 = flt.flag_with_broadcast_bloom(cand, bloom, spec, hash_col="h")
     slot2 = flt._last_probe_broadcast
-    assert slot2 is not None and slot2[1] is not b1
+    assert slot2 is not None and slot2 is not b1
     assert flagged2.filter("maybe_seen").count() == 40
     assert flagged1.filter("maybe_seen").count() == 40
 
 
 def test_release_probe_broadcast_drops_slot_and_is_idempotent(spark):
-    """Crawl-end teardown: the slot empties, the flagged plan still
+    """Round-end release: the slot empties, the flagged plan still
     executes afterwards (unpersist keeps the broadcast re-shippable
     from the driver JVM), and a second release is a no-op."""
     from cc_dbp_spark.operators import filters as flt

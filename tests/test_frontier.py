@@ -234,7 +234,8 @@ def _assert_fused_round_equals_oracle_step(
     same carried (frontier, seen, credit) state and candidates; the
     flagged rows, the schedule with its per-host rank, and the carried
     frontier left behind must all match. A config with a filter carries
-    a snapshot of the seen rows, so the round probes it."""
+    a snapshot of the seen rows, built through the filter seam, so the
+    round probes it."""
     from cc_dbp_spark.operators import filters as flt
 
     cand = spark.createDataFrame(raw, "url string, depth int")
@@ -243,13 +244,8 @@ def _assert_fused_round_equals_oracle_step(
     seen = spark.createDataFrame(
         [(u, 0) for u in seen_urls], "url string, round_seen int"
     ).select("url", F.xxhash64("url").alias("url_hash"), "round_seen")
-    filter_df = None
-    if cfg.filter_kind == "bloom":
-        spec = flt.BloomSpec(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_partitions)
-        filter_df = flt.build_bloom_df(seen.select("url_hash"), spec)
-    elif cfg.filter_kind == "cuckoo":
-        per_part = max(1024, cfg.bloom_capacity // cfg.bloom_partitions)
-        filter_df = flt.build_cuckoo_df(seen.select("url_hash"), per_part, cfg.bloom_partitions)
+    hashes = seen.select("url_hash")
+    filter_df = flt.SeenFilter.of(cfg).advance(None, hashes, hashes)
     flagged, scheduled, deferred = fr._fused_schedule(
         cand,
         spark.createDataFrame(frontier_rows, fr.FRONTIER_SCHEMA),
@@ -285,13 +281,29 @@ def _assert_fused_round_equals_oracle_step(
     assert rows(deferred, *fr.FRONTIER_COLS) == sorted(want.frontier)
 
 
-def test_fused_round_equals_oracle_step(spark, fixture_dir):
+@pytest.mark.parametrize("probe", ["none", "bloom-broadcast", "bloom-cogroup", "cuckoo"])
+def test_fused_round_equals_oracle_step(spark, fixture_dir, monkeypatch, probe):
     """The single-shuffle fused round on a carried frontier + seen state
     must give the oracle's flagged set, schedule and carried frontier
-    (the fast-vs-naive differential pattern)."""
+    (the fast-vs-naive differential pattern), whichever probe path the
+    filter seam takes: none, the broadcast or cogrouped bloom probe
+    (a zero broadcast budget forces cogrouped), or cuckoo."""
+    from cc_dbp_spark.operators import filters as flt
+
+    if probe == "bloom-cogroup":
+        monkeypatch.setattr(flt, "BROADCAST_MAX_BYTES", 0)
+    broadcasts = []
+    flag = flt.flag_with_broadcast_bloom
+
+    def counted_flag(*args, **kwargs):
+        broadcasts.append(probe)
+        return flag(*args, **kwargs)
+
+    monkeypatch.setattr(flt, "flag_with_broadcast_bloom", counted_flag)
     seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
     robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
-    cfg = fr.CrawlConfig(round_budget_s=3.0, filter_kind="none")
+    cfg = fr.CrawlConfig(round_budget_s=3.0, filter_kind=probe.split("-")[0],
+                         bloom_capacity=1 << 14, bloom_partitions=4)
     # synthetic mid-crawl state: some urls already seen, some carried over
     raw = [(r["url"], 2) for r in seeds.select("url").limit(200).collect()]
     frontier_rows = [
@@ -304,6 +316,46 @@ def test_fused_round_equals_oracle_step(spark, fixture_dir):
         spark, raw, frontier_rows, seen_urls, robots,
         [("host3.example.com", 1.5)], 2, cfg,
     )
+    flt.release_probe_broadcast()
+    assert len(broadcasts) == (probe == "bloom-broadcast")
+
+
+def test_probe_broadcast_released_after_every_step(spark, fixture_dir, oracle_result,
+                                                   monkeypatch):
+    """The round owns its probe broadcast: a multi-round bloom crawl
+    probes by broadcast, the slot is empty after every CrawlDriver.step,
+    and the crawl's lazily unioned schedule and emitted rows still
+    collect afterwards, equal to the oracle's."""
+    from cc_dbp_spark.operators import filters as flt
+
+    broadcasts, slots = [], []
+    flag, step = flt.flag_with_broadcast_bloom, fr.CrawlDriver.step
+
+    def counted_flag(*args, **kwargs):
+        broadcasts.append(1)
+        return flag(*args, **kwargs)
+
+    def checked_step(self, candidates, rnd):
+        res = step(self, candidates, rnd)
+        slots.append(flt._last_probe_broadcast)
+        return res
+
+    monkeypatch.setattr(flt, "flag_with_broadcast_bloom", counted_flag)
+    monkeypatch.setattr(fr.CrawlDriver, "step", checked_step)
+    docs = spark.read.parquet(str(fixture_dir / "documents_spans.parquet"))
+    seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
+    robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
+    cfg = fr.CrawlConfig(round_budget_s=3.0, max_rounds=3, filter_kind="bloom",
+                         bloom_capacity=1 << 14, bloom_partitions=4)
+    res = fr.CrawlDriver(spark, robots, docs, cfg).run(seeds)
+    assert broadcasts and len(slots) == 3 and all(s is None for s in slots), slots
+    got = [
+        (r["round"], r["position"], r["url"])
+        for r in res["schedule"].orderBy("round", "position").collect()
+    ]
+    assert got == [w for w in oracle_result.schedule_log if w[0] < 3]
+    emitted = {(r["round"], r["url"]) for r in res["emitted"].collect()}
+    assert emitted == {(rnd, u) for rnd, u, _ in oracle_result.emitted if rnd < 3}
 
 
 def test_resume_restores_filter_snapshot(spark, fixture_dir, tmp_path_factory):

@@ -14,7 +14,7 @@ import argparse
 
 from pyspark.sql import SparkSession
 
-from cc_dbp_spark.operators import frontier
+from cc_dbp_spark.operators import filters, frontier
 
 
 def main() -> None:
@@ -26,7 +26,7 @@ def main() -> None:
     ap.add_argument("--out", required=True, help="output dir for schedule/emitted/audit")
     ap.add_argument("--rounds", type=int, default=10)
     ap.add_argument("--budget-s", type=float, default=10.0)
-    ap.add_argument("--filter", choices=["bloom", "cuckoo"], default="bloom")
+    ap.add_argument("--filter", choices=filters.FILTER_KINDS, default="bloom")
     ap.add_argument("--resume", action="store_true")
     args = ap.parse_args()
 
