@@ -7,16 +7,21 @@ DataFrame ops (the north-rule pipeline):
 A round is not one Spark job. Under AQE, ``localCheckpoint(eager=False)``
 runs the shuffle and broadcast stages upstream of it when it is called,
 so every checkpoint is a driver barrier and every exchange its own small
-job. A first round on 4 cores runs about 18 jobs: :func:`run_round`
+job. A first round on 4 cores runs 16 jobs: :func:`run_round`
 checkpoints the flagged rows, the per-host rank, ONE per-host table
 (audit, credit and fetch-order offsets all derive from it) and the
 fetched rows; :func:`advance_round_state` checkpoints the credit and
 filter tables and runs one count job. Every other output is a narrow
 projection of those checkpoints. With a state dir,
 :meth:`CrawlDriver.step` then writes the carried frontier, credit and
-filter snapshot and the round's fetch batch, audit, lineage and next
+filter snapshot and the round's fetch batch, audit and next
 candidates: O(frontier + filter + round outputs) per round. The seen
 set is not written, since it is the union of the fetch batches.
+
+Politeness is one per-host table (:func:`_with_politeness`: robots
+rules, crawl delay, credit and the budget k), broadcast-joined once per
+round after the merge-dedupe, so the robots flag is evaluated once per
+unique url and does not ride the shuffle.
 
 Semantics are defined by the pure-Python oracle
 (:mod:`cc_dbp_spark.oracle.scheduler`); differential tests assert the
@@ -137,10 +142,21 @@ def empty_state(spark: SparkSession) -> dict:
     }
 
 
-def _with_denied(df: DataFrame, robots: DataFrame) -> DataFrame:
-    """df (must carry url + host) + a ``denied`` flag. Robots is per-host
-    metadata -> broadcast join; prefix tests are native array exists."""
-    cols = df.columns
+def _with_politeness(
+    df: DataFrame, robots: DataFrame, credit: DataFrame, cfg: CrawlConfig
+) -> DataFrame:
+    """df (must carry url + host) + the host's politeness: a ``denied``
+    flag, the crawl ``delay``, ``credit0`` (the carried credit after this
+    round's accrual) and the round budget ``k = floor(credit0 / delay)``.
+
+    ONE per-host table holds everything politeness reads: the translated
+    robots rules, the raw crawl delay and the carried credit, over the
+    hosts with a robots row or carried credit (a union + groupBy, so no
+    join of the two and no distinct). It is broadcast-joined once. Hosts
+    with no row get NULL rules, delay and credit, and the expressions
+    below turn those into the defaults, so every host's budget comes
+    from the one ``k`` expression (a bigint: unspent credit keeps
+    growing on a long crawl)."""
     # RFC-9309 longest-match: the most specific (longest, by pattern
     # octet length) matching rule among deny+allow decides; ties go to
     # allow; matching neither list (or no robots row at all) -> allowed.
@@ -172,13 +188,22 @@ def _with_denied(df: DataFrame, robots: DataFrame) -> DataFrame:
 
         return F.transform(F.col(col_name), to_struct)
 
-    rb = robots.select(
-        "host",
-        _like_rules("allow_prefixes").alias("__allow"),
-        _like_rules("deny_prefixes").alias("__deny"),
+    table = (
+        robots.select(
+            "host",
+            _like_rules("allow_prefixes").alias("__allow"),
+            _like_rules("deny_prefixes").alias("__deny"),
+            "crawl_delay_s",
+        )
+        .unionByName(credit.select("host", "credit"), allowMissingColumns=True)
+        .groupBy("host")
+        .agg(*(
+            F.first(c, ignorenulls=True).alias(c)
+            for c in ("__allow", "__deny", "crawl_delay_s", "credit")
+        ))
     )
     j = df.withColumn("__path", pathq_col(F.col("url"))).join(
-        F.broadcast(rb), "host", "left"
+        F.broadcast(table), "host", "left"
     )
 
     def longest(col_name: str):
@@ -196,8 +221,19 @@ def _with_denied(df: DataFrame, robots: DataFrame) -> DataFrame:
             F.lit(-1),
         )
 
-    denied_expr = longest("__deny") > longest("__allow")
-    return j.withColumn("denied", denied_expr).select(*cols, "denied")
+    delay = F.when(
+        F.col("crawl_delay_s").isNull()
+        | F.isnan("crawl_delay_s")  # NaN evades <=0; robots.py
+        | (F.col("crawl_delay_s") <= 0),  # rejects it, external
+        F.lit(float(cfg.default_crawl_delay_s)),  # tables might not
+    ).otherwise(F.col("crawl_delay_s"))
+    credit0 = F.coalesce(F.col("credit"), F.lit(0.0)) + F.lit(float(cfg.round_budget_s))
+    return j.select(
+        *df.columns,
+        (longest("__deny") > longest("__allow")).alias("denied"),
+        delay.alias("delay"),
+        credit0.alias("credit0"),
+    ).withColumn("k", F.floor(F.col("credit0") / F.col("delay")))
 
 
 def _raw_host_col(url: Column) -> Column:
@@ -210,39 +246,6 @@ def _raw_host_col(url: Column) -> Column:
     after = F.substring_index(u, "://", -1)  # full string when no scheme
     hp = F.substring_index(F.substring_index(after, "/", 1), "?", 1)
     return F.lower(F.substring_index(hp, ":", 1))
-
-
-def _budgets_from_state(
-    credit: DataFrame, robots: DataFrame, cfg: CrawlConfig
-) -> DataFrame:
-    """Per-host (credit0, delay, k) over the credit ∪ robots host set —
-    the only hosts whose budget differs from the defaults. Hosts absent
-    here use ``k = floor(round_budget/default_delay)`` via coalesce at
-    the join site, so the frontier never needs a budget-derivation scan:
-    budgets are a pure function of the (small) politeness state tables,
-    not of the 10^10-row candidate set."""
-    hosts = credit.select("host").unionByName(
-        robots.select("host")
-    ).distinct()
-    return (
-        hosts.join(credit, "host", "left")
-        .join(robots.select("host", "crawl_delay_s"), "host", "left")
-        .select(
-            "host",
-            (F.coalesce(F.col("credit"), F.lit(0.0)) + F.lit(cfg.round_budget_s)).alias(
-                "credit0"
-            ),
-            F.when(
-                F.col("crawl_delay_s").isNull()
-                | F.isnan("crawl_delay_s")  # NaN evades <=0; robots.py
-                | (F.col("crawl_delay_s") <= 0),  # rejects it, external
-                F.lit(cfg.default_crawl_delay_s),  # tables might not
-            )
-            .otherwise(F.col("crawl_delay_s"))
-            .alias("delay"),
-        )
-        .withColumn("k", F.floor(F.col("credit0") / F.col("delay")).cast("int"))
-    )
 
 
 def _fused_schedule(
@@ -258,9 +261,10 @@ def _fused_schedule(
     filter_df: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Single-shuffle scheduling round:
-    canonicalize -> seen-prune -> union frontier -> robots-flag ->
-    tie/salt -> repartition(host, salt) -> in-partition merge-dedupe ->
-    in-partition exact rank -> checkpoint.
+    canonicalize -> seen-prune -> union frontier -> tie/salt ->
+    repartition(host, salt) -> in-partition merge-dedupe -> politeness
+    join (robots flag, delay, credit, k) -> in-partition exact rank ->
+    checkpoint.
 
     Because host and salt are pure functions of the url, ONE hash
     repartition on (host, salt) co-locates every duplicate of a url AND
@@ -268,7 +272,14 @@ def _fused_schedule(
     exchange-free hash aggregation and the salted rank window follows in
     the same stage (HashPartitioning(host, salt) satisfies both
     operators' clustering requirement): the frontier is shuffled once
-    per round, not once per url merge, robots flag and rank window.
+    per round, not once per url merge and rank window.
+
+    Two per-host tables are broadcast-joined: the hot-host splits before
+    the shuffle (the salt needs them) and the politeness table of
+    :func:`_with_politeness` after the dedupe, where the robots flag is
+    evaluated once per unique url. The flag is a function of the url, so
+    flagging after the dedupe is exact, and neither it nor the matched
+    path rides the shuffle.
     Differential-tested against the pure-Python oracle's one-round
     :func:`cc_dbp_spark.oracle.scheduler.step` (flagged rows, schedule
     and carried frontier).
@@ -331,17 +342,14 @@ def _fused_schedule(
 
     # The frontier is scanned exactly ONCE per round (the main schedule
     # job): budgets derive from the politeness state tables alone
-    # (:func:`_budgets_from_state` — defaults coalesce in at the join),
-    # and hot-host detection is a cheap count over raw-url hosts below.
+    # (:func:`_with_politeness`), and hot-host detection is a cheap
+    # count over raw-url hosts below.
     # The previous design cached the canonicalized candidate set
     # (localCheckpoint) to share it between a budget/hot-stats pass and
     # the schedule job — at 10^10 urls that cache write is petabytes of
     # memory traffic per round, and it was the measured non-scaling
     # component of the whole round (cache build + GC does not speed up
     # with cores the way the CPU-bound canonicalize/rank pipeline does).
-    budgets = _budgets_from_state(credit, robots, cfg)
-    default_k = int(cfg.round_budget_s // cfg.default_crawl_delay_s)
-    default_delay = float(cfg.default_crawl_delay_s)
 
     # hot-host detection: raw-host counts over a deterministic 1-in-8
     # url-hash sample of candidates + carried frontier. Counts feed ONLY
@@ -387,20 +395,18 @@ def _fused_schedule(
             F.pmod(F.xxhash64("url"), F.col("num_splits")).cast("int")
         ).alias("salt"),
     )
-    src = _with_denied(src, robots)
 
     part = src.repartition("host", "salt")
     # merge-dedupe = hash aggregation with NO further exchange
     # (HashPartitioning(host, salt) satisfies the groupBy's clustering —
-    # same url, same salt). tie/denied are functions of the url, so
-    # first() is exact. Frontier and candidate occurrences of a url merge
-    # here: min depth, summed link contributions, earliest round_added.
+    # same url, same salt). tie is a function of the url, so first() is
+    # exact. Frontier and candidate occurrences of a url merge here: min
+    # depth, summed link contributions, earliest round_added.
     dedup = part.groupBy("host", "salt", "url").agg(
         F.min("depth").alias("depth"),
         F.sum("lc_contrib").alias("link_count"),
         F.min("round_added").alias("round_added"),
         F.first("tie").alias("tie"),
-        F.first("denied").alias("denied"),
     )
     # the salted rank runs BEFORE the checkpoint (localCheckpoint does not
     # preserve partitioning, so a post-checkpoint window would re-shuffle).
@@ -410,14 +416,11 @@ def _fused_schedule(
         F.col("denied").asc(), F.col("priority").desc(),
         F.col("tie").asc(), F.col("url").asc(),
     )
+    # the broadcast join keeps the aggregate's (host, salt) partitioning,
+    # so the window adds no exchange
     flagged = (
-        dedup.withColumn("priority", priority_col("depth", "link_count"))
-        .join(F.broadcast(budgets.select("host", "k", "delay", "credit0")), "host", "left")
-        .withColumn("k", F.coalesce(F.col("k"), F.lit(default_k)))
-        .withColumn("delay", F.coalesce(F.col("delay"), F.lit(default_delay)))
-        .withColumn(
-            "credit0", F.coalesce(F.col("credit0"), F.lit(float(cfg.round_budget_s)))
-        )
+        _with_politeness(dedup, robots, credit, cfg)
+        .withColumn("priority", priority_col("depth", "link_count"))
         .withColumn("r1", F.row_number().over(w1))
     )
     flagged = flagged.localCheckpoint(eager=False)
@@ -480,9 +483,10 @@ def run_round(
     # and broadcast stages upstream of it when it is CALLED; only the
     # final stage waits for the first action. Every checkpoint is
     # therefore a driver barrier. The round keeps four: `flagged` (inside
-    # _fused_schedule: hot-host and budget aggregates, robots broadcast,
-    # the (host, salt) shuffle), `ranked` (the per-host rank), the
-    # per-host table and `fetched` (offsets windows, docs broadcast).
+    # _fused_schedule: the hot-host and politeness aggregates and their
+    # broadcasts, the (host, salt) shuffle), `ranked` (the per-host
+    # rank), the per-host table and `fetched` (offsets windows, docs
+    # broadcast).
     # Every other output is a narrow projection of them.
     flagged, scheduled, deferred = _fused_schedule(
         candidates, frontier, seen, robots, credit, rnd, cfg,
@@ -506,7 +510,7 @@ def run_round(
         )
         .withColumn(
             "scheduled",
-            F.least(F.col("candidates"), F.greatest(F.col("k"), F.lit(0)).cast("bigint")),
+            F.least(F.col("candidates"), F.greatest(F.col("k"), F.lit(0))),
         )
     ).localCheckpoint(eager=False)
 
@@ -603,28 +607,11 @@ def run_round(
         (F.col("candidates") - F.col("scheduled")).alias("deferred"),
     )
 
-    # per-partition lineage: which partition of the materialized fetch
-    # batch holds which rows / how many fetches vs misses — the rebuild's
-    # analogue of the reference's per-thread finished-N.txt progress
-    # ledgers (SaveCommonCrawlBase.java:219,238)
-    lineage = (
-        fetched.groupBy(F.spark_partition_id().alias("part_id"))
-        .agg(
-            F.count("*").alias("rows"),
-            F.count(F.when(F.col("fetch_status") == "fetched", 1)).alias("fetched"),
-            F.count(F.when(F.col("fetch_status") == "miss", 1)).alias("missed"),
-            F.min("position").alias("min_position"),
-            F.max("position").alias("max_position"),
-        )
-        .withColumn("round", F.lit(rnd))
-    )
-
     return {
         "frontier": deferred,
         "seen": new_seen,
         "credit": new_credit,
         "filter": new_filter,
-        "lineage": lineage,
         "fetch_batch": fetch_batch,
         "emitted": fetched.filter(F.col("fetch_status") == "fetched").select(
             "round", "position", "url", "spans"
@@ -724,7 +711,7 @@ class CrawlDriver:
         d.mkdir(parents=True, exist_ok=True)
         st = self.state
         tables = {k: st[k] for k in ("frontier", "credit", "filter")}
-        tables |= {k: out[k] for k in ("audit", "fetch_batch", "lineage")}
+        tables |= {k: out[k] for k in ("audit", "fetch_batch")}
         tables["next_candidates"] = out["outlinks"]
         for name, df in tables.items():
             # filter: None without a filter; resume reloads the snapshot

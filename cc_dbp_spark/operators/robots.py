@@ -146,7 +146,7 @@ def _rule_matches(path: str, pattern: str) -> bool:
 
 def is_allowed(path: str, deny_prefixes: list[str], allow_prefixes: list[str]) -> bool:
     """RFC-9309 longest-match rule evaluation (pure-Python twin of the
-    scheduler's native expression in ``frontier._with_denied``): the
+    scheduler's native expression in ``frontier._with_politeness``): the
     most specific (longest, by pattern octet length) matching rule
     wins; equal lengths -> allow; no match on either list -> allowed.
     Patterns may carry `*` and trailing `$` wildcards."""

@@ -152,7 +152,8 @@ def step(
         delay = rules.get(host, {}).get("crawl_delay_s", cfg.default_crawl_delay_s)
         # a rules dict straight from parse_robots_body carries None
         # for missing/invalid Crawl-delay — substitute the default
-        # exactly as Spark's _budgets_from_state null-coalesce does
+        # exactly as the Spark round's politeness join
+        # (frontier._with_politeness) does
         if delay is None or delay <= 0:
             delay = cfg.default_crawl_delay_s
         st.credit[host] = st.credit.get(host, 0.0) + cfg.round_budget_s

@@ -90,12 +90,83 @@ def test_credit_matches_oracle(oracle_result, spark_result):
     assert got == oracle_result.credit
 
 
+def _assert_crawl_equals_oracle(res, want):
+    """A finished crawl's schedule order, seen set and carried credit
+    equal the oracle's."""
+    got = [
+        (r["round"], r["position"], r["url"])
+        for r in res["schedule"].orderBy("round", "position").collect()
+    ]
+    assert got == want.schedule_log
+    st = res["state"]
+    assert {r["url"]: r["round_seen"] for r in st["seen"].collect()} == want.seen
+    assert {r["host"]: r["credit"] for r in st["credit"].collect()} == want.credit
+
+
+def test_long_crawl_with_large_budget_matches_oracle(spark, fixture_dir):
+    """Unspent credit grows round over round; with a large budget the
+    per-host budget k = floor(credit0 / delay) passes the int range
+    within a few rounds, and the crawl must carry it (the oracle has no
+    bound) rather than fail on the cast."""
+    import pyarrow.parquet as pq
+
+    from cc_dbp_spark import fixtures
+
+    fd = fixtures.write_fixtures(fixture_dir.parent / "n60", n_docs=60)
+    names = ("documents_spans.parquet", "seeds.parquet", "robots_rules.parquet")
+    docs, seeds, robots = (spark.read.parquet(str(fd / f)) for f in names)
+    res = fr.CrawlDriver(
+        spark, robots, docs, fr.CrawlConfig(round_budget_s=1e9, max_rounds=30)
+    ).run(seeds)
+
+    doc_rows, seed_rows, robot_rows = (pq.read_table(fd / f).to_pylist() for f in names)
+    want = orc.run_oracle(
+        [s["url"] for s in seed_rows],
+        {canonicalize_py(d["doc_id"]): d["spans"] for d in doc_rows},
+        robot_rows,
+        orc.CrawlConfig(round_budget_s=1e9, max_rounds=30),
+    )
+    assert max(want.credit.values()) > 2**31  # the int range is passed
+    _assert_crawl_equals_oracle(res, want)
+
+
+@pytest.mark.parametrize("conf", [
+    {"spark.sql.adaptive.enabled": "false"},
+    {"spark.sql.shuffle.partitions": "1"},
+], ids=["aqe-off", "shuffle-partitions-1"])
+def test_crawl_independent_of_session_settings(spark, fixture_dir, oracle_result, conf):
+    """The schedule must not depend on how the round executes: with AQE
+    off (no runtime join or partition rewrites) or one shuffle partition
+    (every host in one partition), the fixture crawl still equals the
+    oracle's."""
+    docs = spark.read.parquet(str(fixture_dir / "documents_spans.parquet"))
+    seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
+    robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
+    cfg = fr.CrawlConfig(round_budget_s=3.0, max_rounds=4,
+                         bloom_capacity=1 << 14, bloom_partitions=4)
+    old = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        res = fr.CrawlDriver(spark, robots, docs, cfg).run(seeds)
+        _assert_crawl_equals_oracle(res, oracle_result)
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
 # jobs of one first fixture round (run_round + advance_round_state), as
 # Spark's status tracker counts them: every exchange is its own job under
 # AQE, and a localCheckpoint runs its upstream exchanges when called. The
 # count is deterministic for a fixed plan and input, so the bound has no
 # margin: one re-added branch aggregate or checkpoint adds a job.
-ROUND0_JOBS = 18
+ROUND0_JOBS = 16
+# py4j calls (ClientServerConnection.send_command) that the same round's
+# CrawlDriver.step makes to build and run its plans. The commands that
+# release JVM object references are not counted: they follow when Python
+# collects its proxies (1.2k-1.4k per step, varying run to run), while the
+# counted calls are the same on every run, so the bound has no margin.
+ROUND0_PY4J_CALLS = 5369
 
 
 def test_round_job_count_and_visible_empty_state(spark, fixture_dir):
@@ -127,6 +198,33 @@ def test_round_job_count_and_visible_empty_state(spark, fixture_dir):
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert res["schedule"].count() > 0
     assert n_jobs <= ROUND0_JOBS, n_jobs
+
+
+def test_round_py4j_call_ceiling(spark, fixture_dir, monkeypatch):
+    """Every DataFrame call crosses into the JVM; a round that builds more
+    plan pieces per step shows up as more py4j calls."""
+    from py4j.clientserver import ClientServerConnection
+
+    docs = spark.read.parquet(str(fixture_dir / "documents_spans.parquet"))
+    seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
+    robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
+    cfg = fr.CrawlConfig(round_budget_s=3.0, max_rounds=1,
+                         bloom_capacity=1 << 14, bloom_partitions=4)
+    drv = fr.CrawlDriver(spark, robots, docs, cfg)
+    candidates = seeds.select("url", F.col("depth").cast("int"))
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        # "m\nd\n" releases a JVM reference: not counted (see above)
+        calls.append(not command.startswith("m\nd\n"))
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    _, counts = drv.step(candidates, 0)
+    monkeypatch.undo()
+    assert counts.get("sched", 0) > 0
+    assert 0 < sum(calls) <= ROUND0_PY4J_CALLS, sum(calls)
 
 
 def test_denied_host_never_scheduled(spark_result):
@@ -318,6 +416,23 @@ def test_fused_round_equals_oracle_step(spark, fixture_dir, monkeypatch, probe):
     )
     flt.release_probe_broadcast()
     assert len(broadcasts) == (probe == "bloom-broadcast")
+
+
+def test_fused_round_default_budget_matches_oracle(spark, fixture_dir):
+    """A host with no robots row and no carried credit gets the default
+    budget from the same k = floor(credit0 / delay) as every other host:
+    floor(1.0 / 0.1) is 10, where Python's 1.0 // 0.1 is 9.0."""
+    robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
+    host = "norobots.example.org"
+    assert robots.filter(F.col("host") == host).count() == 0
+    raw = [(f"http://{host}/page/{i}", 1) for i in range(14)]
+    frontier_rows = [("http://host3.example.com/carried/1", "host3.example.com", 1, 4, 1)]
+    cfg = fr.CrawlConfig(round_budget_s=1.0, default_crawl_delay_s=0.1,
+                         filter_kind="none")
+    _assert_fused_round_equals_oracle_step(
+        spark, raw, frontier_rows, [canonicalize_py(raw[0][0])], robots,
+        [("host3.example.com", 0.5)], 1, cfg,
+    )
 
 
 def test_probe_broadcast_released_after_every_step(spark, fixture_dir, oracle_result,

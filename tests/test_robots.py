@@ -100,11 +100,14 @@ def test_is_allowed_wildcard_specificity():
 
 
 def test_spark_denied_matches_python_twin_with_wildcards(spark):
-    """Differential: frontier._with_denied's native LIKE translation ==
-    robots.is_allowed on a grid of wildcard patterns x paths."""
+    """Differential: the round's politeness join
+    (frontier._with_politeness, here with no carried credit) flags with
+    its native LIKE translation exactly what robots.is_allowed denies, on
+    a grid of wildcard patterns x paths."""
     from pyspark.sql import functions as F
 
     from cc_dbp_spark.operators import frontier as fr
+    from cc_dbp_spark.session import empty_df
 
     rules = [
         (["/private/"], ["/private/ok/"]),
@@ -135,7 +138,9 @@ def test_spark_denied_matches_python_twin_with_wildcards(spark):
     )
     got = {
         (r.host, r.url): r.denied
-        for r in fr._with_denied(urls, robots_df).collect()
+        for r in fr._with_politeness(
+            urls, robots_df, empty_df(spark, fr.CREDIT_SCHEMA), fr.CrawlConfig()
+        ).collect()
     }
     assert got == want
 
