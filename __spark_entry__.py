@@ -358,7 +358,8 @@ def q_crawl_round_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cfg = frontier.CrawlConfig(round_budget_s=1e9, filter_kind="none")
     state = frontier.empty_state(spark)
-    out = frontier.run_round(spark, candidates, state, robots, docs_spans, 0, cfg)
+    rules = frontier.translate_robots(robots)
+    out = frontier.run_round(spark, candidates, state, rules, docs_spans, 0, cfg)
     return out["fetch_batch"].select("url", "host", "depth", "link_count")
 
 

@@ -1,29 +1,32 @@
-"""Partitioned approximate-membership filters (bloom + cuckoo) for the
-URL-seen set, built and probed inside Arrow-vectorized UDFs.
+"""Approximate-membership filters for the URL-seen set: a register-
+blocked bloom made of Spark's own functions, and a partitioned cuckoo
+filter built and probed in grouped pandas kernels.
 
 The reference's membership test is an exact in-memory ``Set.contains``
 (``kbp/.../CreateTsvDataset.java:64,172-175``); at 10^10 URLs that
-becomes a partitioned filter + exact confirm:
+becomes a filter + exact confirm:
 
 * filters PRUNE: "definitely new" URLs skip the expensive anti-join
   against the seen table; "maybe seen" URLs go through the exact
   anti-join, so false positives can never corrupt the seen set
   (SURVEY.md §7 risk note — filters advisory, decision exact).
-* state: one row per hash partition ``(pid, bitmap binary)``,
-  snapshotted to parquet each round -> resumable.
+* bloom: register-blocked (Putze, Sanders and Singler, WEA 2007): all k
+  bits of a key sit in ONE 64-bit word, ``word = pmod(url_hash, W)``,
+  chosen by the 6-bit fields of a second hash ``xxhash64(url_hash)``.
+  Its state is the table of non-zero words ``(word, bits)`` plus the
+  sizing ``(words, k)`` it was built under; build and update are one
+  ``groupBy(word)`` ``bit_or``, the probe one left equi-join on the word
+  whose strategy (broadcast or shuffle) Spark's join selection picks.
+  Every step is a JVM expression: no Python worker, no driver collect.
+* cuckoo: one row per hash partition ``(pid, table, saturated)``, built,
+  updated and probed by numpy kernels in grouped and cogrouped
+  ``applyInPandas`` (insertion order matters, so each partition's
+  filter is one sequential kernel).
+* both snapshot to parquet each round -> resumable.
 
 The crawl round decides nothing about the filter: it carries a snapshot
 or ``None`` and calls :class:`SeenFilter`, which holds the kind and the
-sizing (from the ``CrawlConfig``), picks the probe and steps the
-snapshot. The bloom probe broadcasts the whole filter (narrow, no
-shuffle) while it fits :data:`BROADCAST_MAX_BYTES`; beyond that, and
-always for cuckoo, the probe is a cogrouped ``applyInPandas`` in which
-each partition's filter row meets its candidate group once. The probe
-broadcast stays in one module slot until :func:`release_probe_broadcast`,
-which ``CrawlDriver.step`` calls after each round's count job.
-
-All probe/build math is numpy over int64 ``xxhash64(url)`` columns —
-no per-row Python.
+sizing (from the ``CrawlConfig``), probes and steps the snapshot.
 """
 
 from __future__ import annotations
@@ -34,15 +37,12 @@ import pathlib
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
 _MIX = np.uint64(0xFF51AFD7ED558CCD)
 
 # the seen-filter kinds a CrawlConfig may name ("none": exact anti-join only)
 FILTER_KINDS = ("bloom", "cuckoo", "none")
-# whole-filter bytes up to which the bloom probe is a broadcast (bits for
-# 10^7 urls at 1% fpr ~ 12 MB); 10^10-scale filters are GBs and must meet
-# each candidate partition once, cogrouped, never be broadcast whole
-BROADCAST_MAX_BYTES = 64 << 20
 
 
 def _per_partition(capacity: int, num_partitions: int) -> int:
@@ -50,228 +50,123 @@ def _per_partition(capacity: int, num_partitions: int) -> int:
     return max(1024, capacity // num_partitions)
 
 
-def _h2(h: np.ndarray) -> np.ndarray:
-    """Second hash derived from the primary via a 64-bit finalizer mix."""
-    x = h.astype(np.uint64, copy=True)
-    x ^= x >> np.uint64(33)
-    x *= _MIX
-    x ^= x >> np.uint64(33)
-    return x
-
-
 class BloomSpec:
-    """Sizing for a partitioned bloom filter."""
+    """Sizing for the blocked bloom: ``words`` 64-bit words (W) and
+    ``num_hashes`` bits per key (k). The bits follow the classic rule
+    per filter partition (members per partition, bits per member from
+    ``fpr``, rounded up to a power of two); k is the classic optimum,
+    capped at the ten 6-bit fields of one 64-bit hash."""
 
     def __init__(self, capacity: int, fpr: float = 0.01, num_partitions: int = 16):
-        self.num_partitions = num_partitions
         per_part = _per_partition(capacity, num_partitions)
         bits = int(-per_part * math.log(fpr) / (math.log(2) ** 2))
-        self.bits_per_partition = 1 << max(13, (bits - 1).bit_length())
-        self.num_hashes = max(1, round(self.bits_per_partition / per_part * math.log(2)))
+        bits_per_partition = 1 << max(13, (bits - 1).bit_length())
+        self.words = num_partitions * bits_per_partition // 64
+        k = round(bits_per_partition / per_part * math.log(2))
+        self.num_hashes = min(64 // 6, max(1, k))
 
-    def _positions(self, hashes: np.ndarray) -> np.ndarray:
-        """(n, k) bit positions within a partition's bitmap."""
-        h1 = hashes.astype(np.uint64)
-        h2 = _h2(h1) | np.uint64(1)
-        i = np.arange(self.num_hashes, dtype=np.uint64)
-        with np.errstate(over="ignore"):
-            pos = (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(self.bits_per_partition)
-        return pos
+    def word(self, hash_col: str):
+        """The key's word: ``pmod(hash, W)``."""
+        return F.pmod(F.col(hash_col), F.lit(self.words))
 
-    def build_bitmap(self, hashes: np.ndarray) -> bytes:
-        """Bitmap bytes for ONE partition from its member hashes."""
-        bits = np.zeros(self.bits_per_partition // 8, dtype=np.uint8)
-        if len(hashes):
-            pos = self._positions(np.asarray(hashes, dtype=np.int64)).ravel()
-            np.bitwise_or.at(bits, (pos // 8).astype(np.int64), (1 << (pos % 8)).astype(np.uint8))
-        return bits.tobytes()
+    def mask(self, hash_col: str):
+        """The key's k bits within its word, as ONE SQL expression: bit
+        ``i`` is the i-th 6-bit field of ``xxhash64(hash)``."""
+        return F.expr(
+            f"aggregate(sequence(0, {self.num_hashes - 1}), 0L, (acc, i) -> acc | "
+            f"shiftleft(1L, cast(shiftright(xxhash64(`{hash_col}`), 6 * i) & 63 as int)))"
+        )
 
-    def probe(self, hashes: np.ndarray, bitmap: bytes) -> np.ndarray:
-        """Boolean 'maybe seen' per hash against ONE partition bitmap."""
-        if len(hashes) == 0:
-            return np.zeros(0, dtype=bool)
-        bits = np.frombuffer(bitmap, dtype=np.uint8)
-        if len(bits) * 8 != self.bits_per_partition:
-            # a snapshot built under a DIFFERENT BloomSpec (config drift
-            # across a resume) would probe the wrong bit positions and
-            # report seen urls as definitely-new — silent seen-set
-            # divergence. Crash loudly instead.
-            raise ValueError(
-                f"bloom bitmap is {len(bits) * 8} bits but this spec expects "
-                f"{self.bits_per_partition} — the filter snapshot was built "
-                "under a different bloom_capacity/fpr; resume with the "
-                "original config or rebuild the filter from the seen set"
-            )
-        pos = self._positions(np.asarray(hashes, dtype=np.int64))
-        hit = (bits[(pos // 8).astype(np.int64)] >> (pos % 8).astype(np.uint8)) & 1
-        return hit.all(axis=1).astype(bool)
-
-
-def _with_pid(df, hash_col: str, num_partitions: int):
-    """``df`` + ``pid``, the filter partition of each row's hash."""
-    from pyspark.sql import functions as F
-
-    return df.withColumn("pid", F.pmod(F.col(hash_col), F.lit(num_partitions)).cast("int"))
-
-
-def build_bloom_df(seen_df, spec: BloomSpec, hash_col: str = "url_hash"):
-    """Distributed bloom build: groupBy(pid) -> one bitmap row per partition.
-
-    Returns DataFrame (pid int, bitmap binary). Partitions with no members
-    are absent (probe treats absent as all-miss).
-    """
-    # the grouped/cogrouped kernels in this module carry no type hints:
-    # applyInPandas warns on every call when it finds partial ones
-    def _build(key, pdf):
-        bm = spec.build_bitmap(pdf[hash_col].to_numpy(dtype=np.int64))
-        return pd.DataFrame({"pid": [key[0]], "bitmap": [bm]})
-
-    with_pid = _with_pid(seen_df, hash_col, spec.num_partitions)
-    return with_pid.groupBy("pid").applyInPandas(_build, "pid int, bitmap binary")
+    def rows(self, bloom_df):
+        """``bloom_df``'s ``(word, bits)`` rows. A snapshot built under a
+        DIFFERENT sizing (config drift across a resume) would probe the
+        wrong words and bits and report seen urls as definitely-new —
+        silent seen-set divergence — so reading any of its rows fails
+        the job loudly instead."""
+        same = (F.col("words") == F.lit(self.words)) & (F.col("k") == F.lit(self.num_hashes))
+        err = (
+            f"bloom snapshot rows were not built for {self.words} words and "
+            f"k={self.num_hashes} — the filter snapshot was built under a different "
+            "bloom_capacity/fpr/partitions; resume with the original config or "
+            "rebuild the filter from the seen set"
+        )
+        return bloom_df.select(
+            F.when(same, F.col("word")).otherwise(F.raise_error(F.lit(err))).alias("word"),
+            "bits",
+        )
 
 
 def _split(flagged, cols):
     """(definitely_new, maybe_seen) rows of a flagged frame, in ``cols``."""
-    from pyspark.sql import functions as F
-
     return (
         flagged.filter(~F.col("maybe_seen")).select(*cols),
         flagged.filter(F.col("maybe_seen")).select(*cols),
     )
 
 
-def _prune_cogrouped(candidates_df, filter_df, num_partitions: int, hash_col: str, kernel):
-    """Split candidates into (definitely_new, maybe_seen) via a cogrouped
-    probe: each partition's filter row meets its candidate group exactly
-    once (cogroup on pid) — no whole-filter broadcast, no shuffle of the
-    seen table itself. ``kernel(hashes, filter_pdf)`` flags one
-    partition's hashes against its one filter row; a partition without
-    a row has no members, so its candidates are all new."""
-    cand = _with_pid(candidates_df, hash_col, num_partitions)
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in cand.schema.fields)
-    out_schema += ", maybe_seen boolean"
-
-    def _probe(key, cand_pdf, filter_pdf):
-        if len(cand_pdf) == 0:
-            return cand_pdf.assign(maybe_seen=pd.Series([], dtype=bool))
-        hashes = cand_pdf[hash_col].to_numpy(dtype=np.int64)
-        if len(filter_pdf) == 0:
-            maybe = np.zeros(len(hashes), dtype=bool)
-        else:
-            maybe = kernel(hashes, filter_pdf)
-        return cand_pdf.assign(maybe_seen=maybe)
-
-    probed = (
-        cand.groupBy("pid")
-        .cogroup(filter_df.groupBy("pid"))
-        .applyInPandas(_probe, out_schema)
-    )
-    return _split(probed, candidates_df.columns)
-
-
-def prune_with_bloom(candidates_df, bloom_df, spec: BloomSpec, hash_col: str = "url_hash"):
-    """Split candidates into (definitely_new, maybe_seen) via the
-    cogrouped bloom probe: the scale path, for bitmaps too large to
-    broadcast whole."""
-    return _prune_cogrouped(
-        candidates_df, bloom_df, spec.num_partitions, hash_col,
-        lambda hashes, pdf: spec.probe(hashes, pdf["bitmap"].iloc[0]),
-    )
-
-
 def update_bloom_df(prev_bloom_df, new_seen_df, spec: BloomSpec,
                     hash_col: str = "url_hash"):
-    """Incremental snapshot update: OR-merge the previous partitioned
-    bitmaps with bitmaps built from ONLY the newly-seen urls.
-
-    OR(bitmap(A), bitmap(B)) == bitmap(A ∪ B), so the incremental filter
-    is bit-identical to a full rebuild (tested) — but each round costs
-    O(new urls), not O(entire seen set). This is the filter-snapshot
-    lifecycle the round loop checkpoints and resumes from.
+    """The bloom snapshot of ``prev_bloom_df``'s members (``None``: no
+    previous snapshot) plus ``new_seen_df``'s: ONE ``groupBy(word)``
+    ``bit_or`` over the previous rows and the new keys' masks, so a
+    round masks only its newly-seen urls. OR is associative, so the
+    incremental snapshot is exactly the rebuild from all members
+    (tested); the build is this function with no previous snapshot.
     """
-    fresh = build_bloom_df(new_seen_df, spec, hash_col=hash_col)
-    both = prev_bloom_df.unionByName(fresh)
-
-    def _or(key, pdf):
-        acc = np.frombuffer(pdf["bitmap"].iloc[0], dtype=np.uint8)
-        for b in pdf["bitmap"].iloc[1:]:
-            acc = acc | np.frombuffer(b, dtype=np.uint8)
-        return pd.DataFrame({"pid": [key[0]], "bitmap": [acc.tobytes()]})
-
-    return both.groupBy("pid").applyInPandas(_or, "pid int, bitmap binary")
+    rows = new_seen_df.select(
+        spec.word(hash_col).alias("word"), spec.mask(hash_col).alias("bits")
+    )
+    if prev_bloom_df is not None:
+        rows = spec.rows(prev_bloom_df).unionByName(rows)
+    return rows.groupBy("word").agg(F.bit_or("bits").alias("bits")).select(
+        "word", "bits",
+        F.lit(spec.words).cast("bigint").alias("words"),
+        F.lit(spec.num_hashes).alias("k"),
+    )
 
 
 def empty_bloom_df(spark):
     from cc_dbp_spark.session import empty_df
 
-    return empty_df(spark, "pid int, bitmap binary")
+    return empty_df(spark, "word bigint, bits bigint, words bigint, k int")
 
 
-# The round's probe broadcast, one STRONG slot. Strong because the
-# pandas UDF closure does not retain the Python Broadcast wrapper after
-# planning — a weakref dies the moment flag_with_broadcast_bloom returns
-# (measured), so its unpersist would be a no-op. CrawlDriver.step empties
-# it after every round; a module global only because callers outside a
-# round (perfbench's filter probe) release it by name.
-_last_probe_broadcast = None
+def flag_with_bloom(candidates_df, bloom_df, spec: BloomSpec, hash_col: str = "url_hash"):
+    """``candidates_df`` + ``maybe_seen``, true when all k bits of the key
+    are set in its word: a left equi-join of the candidates on their
+    word with the snapshot rows (Spark's join selection broadcasts or
+    shuffles it), then one bitwise test; a word with no row has no
+    members."""
+    snap = spec.rows(bloom_df).toDF("__word", "__bits")
+    hit = F.bitwise_not(F.col("__bits")).bitwiseAND(spec.mask(hash_col)) == 0
+    return candidates_df.join(snap, spec.word(hash_col) == F.col("__word"), "left").select(
+        *candidates_df.columns, F.coalesce(hit, F.lit(False)).alias("maybe_seen")
+    )
+
+
+# perfbench's filter probe calls these two by name; they go with the
+# benchmark change that fixes its filter_layer
+flag_with_broadcast_bloom = flag_with_bloom
 
 
 def release_probe_broadcast() -> None:
-    """Unpersist the probe broadcast's executor copies and drop the
-    driver-side reference; a second call is a no-op. Safe at any point:
-    ``unpersist`` keeps the broadcast re-broadcastable from the driver
-    JVM, so a still-lazy plan that probes it re-ships the value on
-    execution. ``CrawlDriver.step`` calls this after the round's count
-    job, the barrier after which no plan of the round reads the probe."""
-    global _last_probe_broadcast
-    prev, _last_probe_broadcast = _last_probe_broadcast, None
-    if prev is not None:
-        try:
-            prev.unpersist(False)
-        except Exception:
-            pass  # its context already shut down
+    """No-op: the bloom probe holds no broadcast of its own. Kept for
+    perfbench's filter probe, which calls it by name; it goes with the
+    benchmark change that fixes perfbench's ``filter_layer``."""
 
 
-def flag_with_broadcast_bloom(candidates_df, bloom_df, spec: BloomSpec,
-                              hash_col: str = "url_hash",
-                              flag_col: str = "maybe_seen"):
-    """NARROW bloom probe: ship the whole partitioned filter to every task
-    via a Spark broadcast and flag candidates in place — no shuffle at all.
-
-    For filters within :data:`BROADCAST_MAX_BYTES`; the cogrouped
-    :func:`prune_with_bloom` remains the 10^10-scale path where bitmaps
-    are GBs and must meet each candidate partition exactly once instead
-    of being broadcast whole. The broadcast stays in the module slot
-    until :func:`release_probe_broadcast`.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import BooleanType
-
-    global _last_probe_broadcast
-    sc = candidates_df.sparkSession.sparkContext
-    parts = {int(r["pid"]): bytes(r["bitmap"]) for r in bloom_df.collect()}
-    bparts = _last_probe_broadcast = sc.broadcast(parts)
-
-    @F.pandas_udf(BooleanType())
-    def _probe(h: pd.Series) -> pd.Series:
-        hs = h.to_numpy(dtype=np.int64)
-        pid = (hs % spec.num_partitions + spec.num_partitions) % spec.num_partitions
-        out = np.zeros(len(hs), dtype=bool)
-        for p in np.unique(pid):
-            bm = bparts.value.get(int(p))
-            if bm is not None:
-                m = pid == p
-                out[m] = spec.probe(hs[m], bm)
-        return pd.Series(out)
-
-    return candidates_df.withColumn(flag_col, _probe(F.col(hash_col)))
+def _with_pid(df, hash_col: str, num_partitions: int):
+    """``df`` + ``pid``, the filter partition of each row's hash."""
+    return df.withColumn("pid", F.pmod(F.col(hash_col), F.lit(num_partitions)).cast("int"))
 
 
 def build_cuckoo_df(seen_df, capacity_per_partition: int, num_partitions: int = 16,
                     hash_col: str = "url_hash"):
     """Distributed partitioned cuckoo build: groupBy(pid) -> one serialized
     filter row per hash partition (same lifecycle as the bloom: snapshot
-    to parquet, reload, cogroup-probe). Returns (pid int, table binary)."""
+    to parquet, reload, probe). Returns (pid int, table binary)."""
+    # the grouped/cogrouped kernels in this module carry no type hints:
+    # applyInPandas warns on every call when it finds partial ones
     def _build(key, pdf):
         cf = CuckooFilter(capacity_per_partition)
         failed = cf.insert(pdf[hash_col].to_numpy(dtype=np.int64))
@@ -325,18 +220,36 @@ def empty_cuckoo_df(spark):
 def prune_with_cuckoo(candidates_df, cuckoo_df, num_partitions: int = 16,
                       hash_col: str = "url_hash"):
     """Split candidates into (definitely_new, maybe_seen) via cogrouped
-    cuckoo probe — advisory exactly like the bloom path: false positives
-    fall through to the exact anti-join, so the seen-set decision stays
-    exact. Unlike bloom, the cuckoo filter also supports delete (URL
-    re-crawl eviction) on the snapshot."""
-    def _kernel(hashes, ck_pdf):
-        if bool(ck_pdf["saturated"].iloc[0]):
+    cuckoo probe: each partition's filter row meets its candidate group
+    exactly once (cogroup on pid), and a partition without a row has no
+    members, so its candidates are all new. Advisory exactly like the
+    bloom path: false positives fall through to the exact anti-join, so
+    the seen-set decision stays exact. Unlike bloom, the cuckoo filter
+    also supports delete (URL re-crawl eviction) on the snapshot."""
+    cand = _with_pid(candidates_df, hash_col, num_partitions)
+    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in cand.schema.fields)
+    out_schema += ", maybe_seen boolean"
+
+    def _probe(key, cand_pdf, ck_pdf):
+        if len(cand_pdf) == 0:
+            return cand_pdf.assign(maybe_seen=pd.Series([], dtype=bool))
+        hashes = cand_pdf[hash_col].to_numpy(dtype=np.int64)
+        if len(ck_pdf) == 0:
+            maybe = np.zeros(len(hashes), dtype=bool)
+        elif bool(ck_pdf["saturated"].iloc[0]):
             # overflowed partition: filter may have dropped entries (false
             # negatives) -> everything goes to the exact anti-join
-            return np.ones(len(hashes), dtype=bool)
-        return CuckooFilter.from_bytes(ck_pdf["table"].iloc[0]).contains(hashes)
+            maybe = np.ones(len(hashes), dtype=bool)
+        else:
+            maybe = CuckooFilter.from_bytes(ck_pdf["table"].iloc[0]).contains(hashes)
+        return cand_pdf.assign(maybe_seen=maybe)
 
-    return _prune_cogrouped(candidates_df, cuckoo_df, num_partitions, hash_col, _kernel)
+    probed = (
+        cand.groupBy("pid")
+        .cogroup(cuckoo_df.groupBy("pid"))
+        .applyInPandas(_probe, out_schema)
+    )
+    return _split(probed, candidates_df.columns)
 
 
 @dataclasses.dataclass(frozen=True)
@@ -356,14 +269,11 @@ class SeenFilter:
 
     def split(self, candidates_df, snapshot, hash_col: str = "url_hash"):
         """(definitely_new, maybe_seen) candidates against ``snapshot``;
-        an exact anti-join must confirm the maybe rows. Bloom probes by
-        broadcast while the whole filter fits BROADCAST_MAX_BYTES."""
+        an exact anti-join must confirm the maybe rows."""
         if self.kind == "cuckoo":
             return prune_with_cuckoo(candidates_df, snapshot, self.partitions, hash_col)
         spec = BloomSpec(self.capacity, self.fpr, self.partitions)
-        if spec.num_partitions * spec.bits_per_partition // 8 > BROADCAST_MAX_BYTES:
-            return prune_with_bloom(candidates_df, snapshot, spec, hash_col)
-        flagged = flag_with_broadcast_bloom(candidates_df, snapshot, spec, hash_col)
+        flagged = flag_with_bloom(candidates_df, snapshot, spec, hash_col)
         return _split(flagged, candidates_df.columns)
 
     def advance(self, snapshot, seen_hashes, new_hashes):
@@ -379,16 +289,20 @@ class SeenFilter:
                 return build_cuckoo_df(seen_hashes, per_part, self.partitions)
             return update_cuckoo_df(snapshot, new_hashes, per_part, self.partitions)
         spec = BloomSpec(self.capacity, self.fpr, self.partitions)
-        if snapshot is None:
-            return build_bloom_df(seen_hashes, spec)
-        return update_bloom_df(snapshot, new_hashes, spec)
+        return update_bloom_df(snapshot, seen_hashes if snapshot is None else new_hashes, spec)
 
     def load(self, spark, path):
         """The snapshot checkpointed at ``path``; ``None`` when there is
-        none or the kind is "none"."""
+        none, the kind is "none", or it is a bloom snapshot of the earlier
+        per-partition bitmap layout ``(pid, bitmap)``: that round then
+        runs the exact anti-join alone and rebuilds the snapshot from the
+        seen set."""
         if self.kind == "none" or not pathlib.Path(path).exists():
             return None
-        return spark.read.parquet(str(path))
+        snapshot = spark.read.parquet(str(path))
+        if self.kind == "bloom" and "word" not in snapshot.columns:
+            return None
+        return snapshot
 
 
 # ------------------------------------------------------------------ cuckoo

@@ -21,7 +21,8 @@ set is not written, since it is the union of the fetch batches.
 Politeness is one per-host table (:func:`_with_politeness`: robots
 rules, crawl delay, credit and the budget k), broadcast-joined once per
 round after the merge-dedupe, so the robots flag is evaluated once per
-unique url and does not ride the shuffle.
+unique url and does not ride the shuffle. Its robots half is translated
+once per crawl (:func:`translate_robots`, in :class:`CrawlDriver`).
 
 Semantics are defined by the pure-Python oracle
 (:mod:`cc_dbp_spark.oracle.scheduler`); differential tests assert the
@@ -43,9 +44,10 @@ Scale design (10^10-URL frontier, SURVEY.md §7):
   snapshots -> resumable from any round (the reference's output-exists
   resume, ``spark/.../RelexBuildDataset.java:72-93``).
 
-Python in the round runs only in the seen-filter kernels (the grouped
-and broadcast bloom/cuckoo UDFs of :mod:`.filters`); priority, tie draw
-and salt are native columns, and every other expression is JVM/codegen.
+Python in the round runs only in the cuckoo filter's kernels (its
+grouped build and update and cogrouped probe in :mod:`.filters`); the
+bloom filter, priority, tie draw and salt are native columns, and every
+other expression is JVM/codegen.
 
 Scale deployment notes (10^10 frontier, 1000 executors):
 * per-round costs are O(candidates) + O(bloom "maybe" confirm): the
@@ -142,21 +144,12 @@ def empty_state(spark: SparkSession) -> dict:
     }
 
 
-def _with_politeness(
-    df: DataFrame, robots: DataFrame, credit: DataFrame, cfg: CrawlConfig
-) -> DataFrame:
-    """df (must carry url + host) + the host's politeness: a ``denied``
-    flag, the crawl ``delay``, ``credit0`` (the carried credit after this
-    round's accrual) and the round budget ``k = floor(credit0 / delay)``.
-
-    ONE per-host table holds everything politeness reads: the translated
-    robots rules, the raw crawl delay and the carried credit, over the
-    hosts with a robots row or carried credit (a union + groupBy, so no
-    join of the two and no distinct). It is broadcast-joined once. Hosts
-    with no row get NULL rules, delay and credit, and the expressions
-    below turn those into the defaults, so every host's budget comes
-    from the one ``k`` expression (a bigint: unspent credit keeps
-    growing on a long crawl)."""
+def translate_robots(robots: DataFrame) -> DataFrame:
+    """The robots table as politeness reads it: ``(host, __allow,
+    __deny, crawl_delay_s)``, each rule a struct of its LIKE pattern,
+    its length, the raw rule and a wildcard flag. A lazy projection (no
+    job): :class:`CrawlDriver` builds it once per crawl and every round
+    joins it through :func:`_with_politeness`."""
     # RFC-9309 longest-match: the most specific (longest, by pattern
     # octet length) matching rule among deny+allow decides; ties go to
     # allow; matching neither list (or no robots row at all) -> allowed.
@@ -188,14 +181,31 @@ def _with_politeness(
 
         return F.transform(F.col(col_name), to_struct)
 
+    return robots.select(
+        "host",
+        _like_rules("allow_prefixes").alias("__allow"),
+        _like_rules("deny_prefixes").alias("__deny"),
+        "crawl_delay_s",
+    )
+
+
+def _with_politeness(
+    df: DataFrame, rules: DataFrame, credit: DataFrame, cfg: CrawlConfig
+) -> DataFrame:
+    """df (must carry url + host) + the host's politeness: a ``denied``
+    flag, the crawl ``delay``, ``credit0`` (the carried credit after this
+    round's accrual) and the round budget ``k = floor(credit0 / delay)``.
+
+    ONE per-host table holds everything politeness reads: the robots
+    ``rules`` of :func:`translate_robots` and the carried credit, over
+    the hosts with a robots row or carried credit (a union + groupBy, so
+    no join of the two and no distinct). It is broadcast-joined once.
+    Hosts with no row get NULL rules, delay and credit, and the
+    expressions below turn those into the defaults, so every host's
+    budget comes from the one ``k`` expression (a bigint: unspent credit
+    keeps growing on a long crawl)."""
     table = (
-        robots.select(
-            "host",
-            _like_rules("allow_prefixes").alias("__allow"),
-            _like_rules("deny_prefixes").alias("__deny"),
-            "crawl_delay_s",
-        )
-        .unionByName(credit.select("host", "credit"), allowMissingColumns=True)
+        rules.unionByName(credit.select("host", "credit"), allowMissingColumns=True)
         .groupBy("host")
         .agg(*(
             F.first(c, ignorenulls=True).alias(c)
@@ -252,7 +262,7 @@ def _fused_schedule(
     candidates: DataFrame,
     frontier: DataFrame,
     seen: DataFrame,
-    robots: DataFrame,
+    rules: DataFrame,
     credit: DataFrame,
     rnd: int,
     cfg: CrawlConfig,
@@ -276,10 +286,11 @@ def _fused_schedule(
 
     Two per-host tables are broadcast-joined: the hot-host splits before
     the shuffle (the salt needs them) and the politeness table of
-    :func:`_with_politeness` after the dedupe, where the robots flag is
-    evaluated once per unique url. The flag is a function of the url, so
-    flagging after the dedupe is exact, and neither it nor the matched
-    path rides the shuffle.
+    :func:`_with_politeness` (over ``rules``, the robots table as
+    :func:`translate_robots` returns it) after the dedupe, where the
+    robots flag is evaluated once per unique url. The flag is a function
+    of the url, so flagging after the dedupe is exact, and neither it
+    nor the matched path rides the shuffle.
     Differential-tested against the pure-Python oracle's one-round
     :func:`cc_dbp_spark.oracle.scheduler.step` (flagged rows, schedule
     and carried frontier).
@@ -289,7 +300,7 @@ def _fused_schedule(
     candidate rows contribute 1 link each (0 in the seed round). The
     seen-set test applies to candidates only (frontier rows are unseen
     by invariant). With a carried ``filter_df`` snapshot the filter
-    prunes (:class:`.filters.SeenFilter` picks the probe) and an exact
+    prunes (:class:`.filters.SeenFilter` probes it) and an exact
     anti-join over the surviving "maybe" rows confirms. Without one the
     exact anti-join runs alone: the filter is only a pre-check, so the
     answer is the same.
@@ -419,7 +430,7 @@ def _fused_schedule(
     # the broadcast join keeps the aggregate's (host, salt) partitioning,
     # so the window adds no exchange
     flagged = (
-        _with_politeness(dedup, robots, credit, cfg)
+        _with_politeness(dedup, rules, credit, cfg)
         .withColumn("priority", priority_col("depth", "link_count"))
         .withColumn("r1", F.row_number().over(w1))
     )
@@ -465,7 +476,7 @@ def run_round(
     spark: SparkSession,
     candidates: DataFrame,
     state: dict,
-    robots: DataFrame,
+    rules: DataFrame,
     docs: DataFrame,
     rnd: int,
     cfg: CrawlConfig,
@@ -473,6 +484,8 @@ def run_round(
     """Run one scheduling round over a complete round state (see
     :func:`empty_state`, whose counts say which tables are empty);
     returns the next state's tables + outputs.
+
+    rules: the robots table as :func:`translate_robots` returns it.
 
     docs: the interleaved documents table
     (doc_id string, spans array<struct<kind,text,media_ref,offset>>).
@@ -484,12 +497,13 @@ def run_round(
     # final stage waits for the first action. Every checkpoint is
     # therefore a driver barrier. The round keeps four: `flagged` (inside
     # _fused_schedule: the hot-host and politeness aggregates and their
-    # broadcasts, the (host, salt) shuffle), `ranked` (the per-host
+    # broadcasts, the seen-filter probe's join when a snapshot is
+    # carried, the (host, salt) shuffle), `ranked` (the per-host
     # rank), the per-host table and `fetched` (offsets windows, docs
     # broadcast).
     # Every other output is a narrow projection of them.
     flagged, scheduled, deferred = _fused_schedule(
-        candidates, frontier, seen, robots, credit, rnd, cfg,
+        candidates, frontier, seen, rules, credit, rnd, cfg,
         state["n_seen"] > 0, state["n_frontier"] > 0,
         filter_df=state["filter"],
     )
@@ -628,8 +642,8 @@ def advance_round_state(out: dict, n_seen_prev: int) -> tuple[dict, dict]:
     row counts, and is missing a key whose count is 0.
 
     Only the two wide state outputs are checkpointed: credit (an
-    anti-join against the carried table) and the filter snapshot
-    (grouped UDFs). Under AQE each ``localCheckpoint(eager=False)`` runs
+    anti-join against the carried table) and the filter snapshot (a
+    grouped aggregate). Under AQE each ``localCheckpoint(eager=False)`` runs
     its upstream shuffle stages when it is called, so each one is a
     barrier; their last stage runs in the next job that reads them.
     Every other output is a narrow projection of the round's own
@@ -675,7 +689,8 @@ class CrawlDriver:
         state_dir: str | pathlib.Path | None = None,
     ):
         self.spark = spark
-        self.robots = robots
+        # the robots rules never change during a crawl: translated once
+        self.rules = translate_robots(robots)
         self.docs = docs
         self.cfg = cfg
         self.state_dir = pathlib.Path(state_dir) if state_dir else None
@@ -688,14 +703,12 @@ class CrawlDriver:
         round's candidates."""
         # module globals, looked up per call so wrappers can time them
         out = run_round(
-            self.spark, candidates, self.state, self.robots, self.docs, rnd, self.cfg
+            self.spark, candidates, self.state, self.rules, self.docs, rnd, self.cfg
         )
         # the checkpoints of the wide state tables truncate their lineage
         # (without them the logical plan grows per round and analysis
         # dominates runtime)
         self.state, counts = advance_round_state(out, self.state["n_seen"])
-        # the count job was the round's last read of its probe broadcast
-        flt.release_probe_broadcast()
         self._ckpt(rnd, out)
         return out, counts
 

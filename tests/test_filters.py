@@ -1,8 +1,9 @@
-"""Unit tests for the partitioned bloom + cuckoo membership filters."""
+"""Unit tests for the blocked bloom and partitioned cuckoo membership filters."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
 from cc_dbp_spark.operators.filters import BloomSpec, CuckooFilter
 
@@ -12,26 +13,41 @@ def _hashes(n, seed):
     return rng.integers(-(2**63), 2**63 - 1, size=n, dtype=np.int64)
 
 
-def test_bloom_no_false_negatives():
+def _hash_df(spark, hashes):
+    return spark.createDataFrame(pd.DataFrame({"url_hash": hashes}), "url_hash bigint")
+
+
+def _maybe(spark, spec, members, probes):
+    """maybe_seen per probe hash against a bloom built from members."""
+    from cc_dbp_spark.operators import filters as flt
+
+    bloom = flt.update_bloom_df(None, _hash_df(spark, members), spec)
+    flagged = flt.flag_with_bloom(_hash_df(spark, probes), bloom, spec)
+    return np.array([r["maybe_seen"] for r in flagged.collect()], dtype=bool)
+
+
+def test_bloom_no_false_negatives(spark):
     spec = BloomSpec(capacity=50_000, fpr=0.01, num_partitions=4)
     members = _hashes(20_000, 1)
-    bm = spec.build_bitmap(members)
-    assert spec.probe(members, bm).all()
+    assert _maybe(spark, spec, members, members).all()
 
 
-def test_bloom_fpr_within_budget():
+def test_bloom_fpr_within_budget(spark):
     spec = BloomSpec(capacity=50_000, fpr=0.01, num_partitions=4)
-    members = _hashes(12_500, 2)  # one partition's share
-    bm = spec.build_bitmap(members)
+    members = _hashes(50_000, 2)  # at capacity
     probes = _hashes(50_000, 3)
-    fpr = spec.probe(probes, bm).mean()
+    fpr = _maybe(spark, spec, members, probes).mean()
     assert fpr < 0.03, fpr  # 3x headroom over configured 1%
 
 
-def test_bloom_empty():
+def test_bloom_empty(spark):
+    from cc_dbp_spark.operators import filters as flt
+
     spec = BloomSpec(capacity=1000)
-    bm = spec.build_bitmap(np.array([], dtype=np.int64))
-    assert not spec.probe(_hashes(100, 4), bm).any()
+    empty = _hash_df(spark, np.array([], dtype=np.int64))
+    bloom = flt.update_bloom_df(flt.empty_bloom_df(spark), empty, spec)
+    assert bloom.count() == 0
+    assert not _maybe(spark, spec, np.array([], dtype=np.int64), _hashes(100, 4)).any()
 
 
 def test_cuckoo_roundtrip_and_delete():
@@ -63,7 +79,7 @@ def test_bloom_spark_build_and_prune(spark):
     from cc_dbp_spark.operators import filters as flt
     from pyspark.sql import functions as F
 
-    spec = BloomSpec(capacity=4096, fpr=0.01, num_partitions=4)
+    bloom_filter = flt.SeenFilter("bloom", capacity=4096, fpr=0.01, partitions=4)
     seen = spark.createDataFrame(
         [(f"http://seen{i}.com",) for i in range(500)], "url string"
     ).withColumn("url_hash", F.xxhash64("url"))
@@ -73,8 +89,9 @@ def test_bloom_spark_build_and_prune(spark):
         "url string",
     ).withColumn("url_hash", F.xxhash64("url"))
 
-    bloom = flt.build_bloom_df(seen, spec)
-    new, maybe = flt.prune_with_bloom(cands, bloom, spec)
+    hashes = seen.select("url_hash")
+    bloom = bloom_filter.advance(None, hashes, hashes)
+    new, maybe = bloom_filter.split(cands, bloom)
     new_urls = {r.url for r in new.collect()}
     maybe_urls = {r.url for r in maybe.collect()}
     # every truly-seen candidate must land in maybe (no false negatives)
@@ -87,23 +104,22 @@ def test_bloom_spark_build_and_prune(spark):
 
 
 def test_incremental_bloom_equals_rebuild(spark):
-    """OR-merged incremental snapshot is bit-identical to a full rebuild."""
+    """The OR-merged incremental snapshot is row-identical to a full
+    rebuild."""
     from cc_dbp_spark.operators import filters as flt
 
     spec = BloomSpec(capacity=10_000, fpr=0.01, num_partitions=4)
     a = _hashes(3_000, 11)
     b = _hashes(2_000, 12)
-    df_a = spark.createDataFrame([(int(h),) for h in a], "url_hash bigint")
-    df_b = spark.createDataFrame([(int(h),) for h in b], "url_hash bigint")
-    df_ab = df_a.unionByName(df_b)
+    df_a, df_b = _hash_df(spark, a), _hash_df(spark, b)
 
     incr = flt.update_bloom_df(
         flt.update_bloom_df(flt.empty_bloom_df(spark), df_a, spec), df_b, spec
     )
-    full = flt.build_bloom_df(df_ab, spec)
-    got = {r["pid"]: bytes(r["bitmap"]) for r in incr.collect()}
-    want = {r["pid"]: bytes(r["bitmap"]) for r in full.collect()}
-    assert got == want
+    full = flt.update_bloom_df(None, df_a.unionByName(df_b), spec)
+    got = sorted(tuple(r) for r in incr.collect())
+    want = sorted(tuple(r) for r in full.collect())
+    assert got == want and len(want) > 0
 
 
 def test_incremental_cuckoo_no_false_negatives(spark):
@@ -142,7 +158,7 @@ def test_cuckoo_saturation_degrades_to_maybe(spark):
 
 
 def test_update_bloom_df_forwards_hash_col(spark):
-    """update_bloom_df must build the fresh bitmaps from the CALLER'S
+    """update_bloom_df must build the fresh words from the CALLER'S
     hash column (it used to silently assume 'url_hash', producing false
     negatives when the new-seen frame named it differently)."""
     from cc_dbp_spark.operators import filters as flt
@@ -151,90 +167,42 @@ def test_update_bloom_df_forwards_hash_col(spark):
     df = spark.createDataFrame([(i * 7919,) for i in range(50)], "h bigint")
     bloom = flt.update_bloom_df(flt.empty_bloom_df(spark), df, spec, hash_col="h")
     probe = spark.createDataFrame([(i * 7919,) for i in range(50)], "h bigint")
-    _, maybe = flt.prune_with_bloom(probe, bloom, spec, hash_col="h")
-    assert maybe.count() == 50  # every inserted hash reports maybe-seen
+    flagged = flt.flag_with_bloom(probe, bloom, spec, hash_col="h")
+    assert flagged.filter("maybe_seen").count() == 50  # every inserted hash
 
 
 def test_bloom_probe_rejects_mismatched_spec(spark):
     """A filter snapshot built under a different BloomSpec must crash
-    the probe loudly (silently probing wrong bit positions would report
-    seen urls as definitely-new — seen-set divergence on resume)."""
+    the probe and the update loudly (silently probing wrong words and
+    bits would report seen urls as definitely-new — seen-set divergence
+    on resume)."""
     import pytest as _pt
 
     from cc_dbp_spark.operators import filters as flt
 
     big = flt.BloomSpec(1 << 22, num_partitions=4)
     small = flt.BloomSpec(1 << 14, num_partitions=4)
-    assert big.bits_per_partition != small.bits_per_partition
-    bitmap = big.build_bitmap(np.arange(10, dtype=np.int64))
-    with _pt.raises(ValueError, match="different bloom_capacity"):
-        small.probe(np.arange(10, dtype=np.int64), bitmap)
-
-
-def test_broadcast_bloom_slot_survives_and_rotates(spark):
-    """The module-level probe-broadcast slot must hold a STRONG reference
-    (r5 review: a weakref dies the moment flag_with_broadcast_bloom
-    returns — the pandas UDF closure does not retain the Python Broadcast
-    wrapper — so the per-round unpersist was dead code and every round's
-    executor copies stayed pinned) and must rotate: a second call
-    installs its own broadcast, and the first call's lazy plan still
-    executes."""
-    from cc_dbp_spark.operators import filters as flt
-
-    spec = flt.BloomSpec(1 << 12, num_partitions=4)
-    seen = spark.createDataFrame([(i * 104729,) for i in range(40)], "h bigint")
-    bloom = flt.update_bloom_df(flt.empty_bloom_df(spark), seen, spec, hash_col="h")
-    cand = spark.createDataFrame([(i * 104729,) for i in range(80)], "h bigint")
-
-    flt._last_probe_broadcast = None
-    flagged1 = flt.flag_with_broadcast_bloom(cand, bloom, spec, hash_col="h")
-    b1 = flt._last_probe_broadcast
-    assert b1 is not None, "slot empty right after the call"
-    assert b1.value is not None  # strong ref: value alive after return
-
-    # round 2: slot rotates to the new broadcast, and round 1's LAZY
-    # plan still executes correctly afterwards
-    flagged2 = flt.flag_with_broadcast_bloom(cand, bloom, spec, hash_col="h")
-    slot2 = flt._last_probe_broadcast
-    assert slot2 is not None and slot2 is not b1
-    assert flagged2.filter("maybe_seen").count() == 40
-    assert flagged1.filter("maybe_seen").count() == 40
-
-
-def test_release_probe_broadcast_drops_slot_and_is_idempotent(spark):
-    """Round-end release: the slot empties, the flagged plan still
-    executes afterwards (unpersist keeps the broadcast re-shippable
-    from the driver JVM), and a second release is a no-op."""
-    from cc_dbp_spark.operators import filters as flt
-
-    spec = flt.BloomSpec(1 << 12, num_partitions=4)
-    seen = spark.createDataFrame([(i * 104729,) for i in range(40)], "h bigint")
-    bloom = flt.update_bloom_df(flt.empty_bloom_df(spark), seen, spec, hash_col="h")
-    cand = spark.createDataFrame([(i * 104729,) for i in range(80)], "h bigint")
-
-    flagged = flt.flag_with_broadcast_bloom(cand, bloom, spec, hash_col="h")
-    assert flt._last_probe_broadcast is not None
-    flt.release_probe_broadcast()
-    assert flt._last_probe_broadcast is None
-    flt.release_probe_broadcast()  # idempotent
-    assert flagged.filter("maybe_seen").count() == 40  # lazy plan survives
+    assert (big.words, big.num_hashes) != (small.words, small.num_hashes)
+    keys = spark.createDataFrame([(i,) for i in range(10)], "url_hash bigint")
+    snapshot = flt.update_bloom_df(None, keys, big)
+    with _pt.raises(Exception, match="different bloom_capacity"):
+        flt.flag_with_bloom(keys, snapshot, small).collect()
+    with _pt.raises(Exception, match="different bloom_capacity"):
+        flt.update_bloom_df(snapshot, keys, small).collect()
 
 
 def test_grouped_filter_kernels_raise_no_warnings(spark):
-    """The applyInPandas kernels carry no partial type hints, so building,
-    updating and probing either filter warns about nothing (a partial
+    """The cuckoo's applyInPandas kernels carry no partial type hints,
+    so building, updating and probing it warns about nothing (a partial
     hint makes PySpark warn that it cannot infer the eval type)."""
     import warnings
 
     from cc_dbp_spark.operators import filters as flt
 
-    spec = BloomSpec(capacity=4_000, fpr=0.01, num_partitions=4)
     df = spark.createDataFrame([(int(h),) for h in _hashes(500, 21)], "url_hash bigint")
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        bloom = flt.update_bloom_df(flt.empty_bloom_df(spark), df, spec)
         cuckoo = flt.build_cuckoo_df(df, 1024, 4)
         cuckoo = flt.update_cuckoo_df(cuckoo, df, 1024, 4)
-        _, maybe_b = flt.prune_with_bloom(df, bloom, spec)
         _, maybe_c = flt.prune_with_cuckoo(df, cuckoo, 4)
-        assert maybe_b.count() == maybe_c.count() == 500
+        assert maybe_c.count() == 500

@@ -101,9 +101,10 @@ def test_is_allowed_wildcard_specificity():
 
 def test_spark_denied_matches_python_twin_with_wildcards(spark):
     """Differential: the round's politeness join
-    (frontier._with_politeness, here with no carried credit) flags with
-    its native LIKE translation exactly what robots.is_allowed denies, on
-    a grid of wildcard patterns x paths."""
+    (frontier._with_politeness over the rules of frontier.translate_robots,
+    here with no carried credit) flags with its native LIKE translation
+    exactly what robots.is_allowed denies, on a grid of wildcard
+    patterns x paths."""
     from pyspark.sql import functions as F
 
     from cc_dbp_spark.operators import frontier as fr
@@ -139,7 +140,8 @@ def test_spark_denied_matches_python_twin_with_wildcards(spark):
     got = {
         (r.host, r.url): r.denied
         for r in fr._with_politeness(
-            urls, robots_df, empty_df(spark, fr.CREDIT_SCHEMA), fr.CrawlConfig()
+            urls, fr.translate_robots(robots_df), empty_df(spark, fr.CREDIT_SCHEMA),
+            fr.CrawlConfig(),
         ).collect()
     }
     assert got == want

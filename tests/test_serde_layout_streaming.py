@@ -242,7 +242,7 @@ def test_streaming_crawl_rounds_match_batch(spark, tmp_path):
         cand = spark.createDataFrame(parts[rnd], ingest.CANDIDATE_SCHEMA)
         if carried is not None:
             cand = cand.unionByName(carried)
-        out = fr.run_round(spark, cand, state, robots, docs, rnd, cfg)
+        out = fr.run_round(spark, cand, state, fr.translate_robots(robots), docs, rnd, cfg)
         state, _ = fr.advance_round_state(out, state["n_seen"])
         carried = out["outlinks"]
         want.extend(

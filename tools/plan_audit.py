@@ -103,7 +103,7 @@ def main() -> None:
     credit = spark.createDataFrame([], fr.CREDIT_SCHEMA)
     audit_cfg = fr.CrawlConfig(filter_kind="none", round_budget_s=50.0)
     _, scheduled, _ = fr._fused_schedule(
-        cand, None, None, robots, credit, 0, audit_cfg,
+        cand, None, None, fr.translate_robots(robots), credit, 0, audit_cfg,
         seen_nonempty=False, frontier_nonempty=False,
     )
     import re as _re
