@@ -381,12 +381,30 @@ def _assert_fused_round_equals_oracle_step(
     assert rows(deferred, *fr.FRONTIER_COLS) == sorted(want.frontier)
 
 
-@pytest.mark.parametrize("kind", ["none", "bloom", "cuckoo"])
-def test_fused_round_equals_oracle_step(spark, fixture_dir, kind):
+@pytest.mark.parametrize("kind, conf", [
+    ("none", {}),
+    ("bloom", {}),
+    ("bloom", {"spark.sql.autoBroadcastJoinThreshold": "-1"}),
+    ("cuckoo", {}),
+], ids=["none", "bloom-broadcast", "bloom-cogroup", "cuckoo"])
+def test_fused_round_equals_oracle_step(spark, fixture_dir, kind, conf):
     """The single-shuffle fused round on a carried frontier + seen state
     must give the oracle's flagged set, schedule and carried frontier
     (the fast-vs-naive differential pattern), with no filter, the bloom
-    or the cuckoo filter."""
+    or the cuckoo filter. The bloom probe is one equi-join on the word:
+    Spark broadcasts the small snapshot by default, and with automatic
+    broadcast joins off it shuffles both sides to the same partitions."""
+    old = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        _fused_round_on_fixture_state(spark, fixture_dir, kind)
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def _fused_round_on_fixture_state(spark, fixture_dir, kind):
     seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
     robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
     cfg = fr.CrawlConfig(round_budget_s=3.0, filter_kind=kind,
