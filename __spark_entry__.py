@@ -110,7 +110,7 @@ _RAW_URL_SQL = """
     END
 """
 
-# DuckDB transliteration of cc_dbp_spark.functions.urlnorm.canonicalize_col
+# DuckDB transliteration of cc_dbp_spark.functions.urlnorm.with_canonical
 # (same rule order; DuckDB regexp_replace needs the explicit 'g' flag where
 # Spark's is global by default).
 _CANON_SQL = """

@@ -2,10 +2,12 @@
 URI-normalization regexp chains (``kb/.../conversion/ConvertDBpedia.java:161-176``).
 
 Two implementations of ONE spec, kept in lock-step by differential tests
-(tests/test_urlnorm.py):
+(tests/test_urlnorm.py, and the fuzz batches in tests/test_properties.py
+and tests/test_deep_fuzz.py):
 
-* :func:`canonicalize_col` — native Spark Column expressions (JVM-side,
-  whole-stage codegen; no Python in the plan).
+* :func:`with_canonical` — native Spark column projections (JVM-side,
+  whole-stage codegen; no Python in the plan), the canonicalizer every
+  Spark path runs.
 * :func:`canonicalize_py` — pure-Python, used by the single-threaded
   oracle scheduler the crawl ordering is judged against.
 
@@ -43,73 +45,26 @@ TRIM_CHARS = " \t\n\r\x0b\x0c"
 _BIG = 1 << 30  # "rest of string" length for Column.substr
 
 
-def canonicalize_col(url: Column) -> Column:
-    """Canonical URL as a native Column expression chain.
-
-    Built from UTF8String primitives (substring_index/substr/length)
-    instead of a regexp chain — on the hot path every regexp costs ~µs/row
-    across 10^10 URLs; only three regex ops remain (scheme sniff, port
-    digits, ``//+`` collapse). Semantics identical to
-    :func:`canonicalize_py` (differential-tested)."""
-    u = F.btrim(url, F.lit(TRIM_CHARS))
-    u = F.substring_index(u, "#", 1)  # fragment strip (everything after first '#')
-    u = F.when(u.rlike(_SCHEME_RE), u).otherwise(F.concat(F.lit("http://"), u))
-    # scheme = chars before the FIRST '://' (the rlike guard guarantees
-    # this equals the regex capture)
-    scheme = F.lower(F.substring_index(u, "://", 1))
-    rest = u.substr(F.length(scheme) + 4, F.lit(_BIG))
-    hostport = F.substring_index(F.substring_index(rest, "/", 1), "?", 1)
-    pathq = rest.substr(F.length(hostport) + 1, F.lit(_BIG))
-    port = F.regexp_extract(hostport, r":([0-9]+)$", 1)
-    host = F.lower(
-        F.when(
-            port != "",
-            hostport.substr(F.lit(1), F.length(hostport) - F.length(port) - 1),
-        ).otherwise(hostport)
-    )
-    keep_port = (
-        (port != "")
-        & ~((scheme == "http") & (port == "80"))
-        & ~((scheme == "https") & (port == "443"))
-    )
-    return _assemble(scheme, host, port, keep_port, pathq)
-
-
-def _assemble(scheme: Column, host: Column, port: Column, keep_port: Column, pathq: Column) -> Column:
-    path = F.substring_index(pathq, "?", 1)
-    has_q = pathq.contains("?")
-    query = pathq.substr(F.length(path) + 2, F.lit(_BIG))
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-    path = F.regexp_replace(path, r"//+", "/")
-    path = F.when(
-        (F.length(path) > 1) & path.endswith("/"),
-        path.substr(F.lit(1), F.length(path) - 1),
-    ).otherwise(path)
-    base = F.concat(
-        scheme,
-        F.lit("://"),
-        host,
-        F.when(keep_port, F.concat(F.lit(":"), port)).otherwise(F.lit("")),
-        path,
-    )
-    return F.when(has_q, F.concat(base, F.lit("?"), query)).otherwise(base)
-
-
 def with_canonical(df, src, out: str = "url", host: str | None = None,
                    path: str | None = None):
     """Staged canonicalization: adds canonical column ``out`` (plus optional
     ``host`` incl. non-default port, and ``path``) to ``df``.
 
-    Same spec as :func:`canonicalize_col`, but built as a chain of
-    ``withColumn`` projections instead of one Column tree. A single Column
-    tree duplicates every shared subtree (``u`` -> ``scheme`` -> ``rest`` ->
-    ``hostport`` ...), so composed uses (canonical + host in one select)
-    overflow Janino's 64 KB generated-method limit and fall out of
-    whole-stage codegen into per-row interpreted eval. Aliasing each
-    intermediate as a real column blocks Catalyst's CollapseProject from
-    re-inlining any non-cheap expression referenced more than once, so each
-    step is computed once per row and the generated code stays small.
-    Use this on hot paths; ``canonicalize_col`` remains for one-off columns.
+    Built from UTF8String primitives (substring_index/substr/length)
+    instead of a regexp chain: on the hot path every regexp costs ~µs/row
+    across 10^10 URLs; only three regex ops remain (scheme sniff, port
+    digits, ``//+`` collapse). Semantics identical to
+    :func:`canonicalize_py` (differential-tested).
+
+    The spec is a chain of ``withColumn`` projections, not one Column
+    tree. A single tree duplicates every shared subtree (``u`` ->
+    ``scheme`` -> ``rest`` -> ``hostport`` ...), so canonical + host in
+    one select overflows Janino's 64 KB generated-method limit and falls
+    out of whole-stage codegen into per-row interpreted eval. Aliasing
+    each intermediate as a real column blocks Catalyst's CollapseProject
+    from re-inlining any non-cheap expression referenced more than once,
+    so each step is computed once per row and the generated code stays
+    small.
     """
     c = F.col
     clash = [col for col in df.columns if col.startswith("__cn_")]
@@ -236,7 +191,7 @@ def path_col(canon_url: Column) -> Column:
 # ---------------------------------------------------------------- python side
 
 def canonicalize_py(url: str) -> str:
-    """Pure-Python twin of :func:`canonicalize_col` (same spec)."""
+    """Pure-Python twin of :func:`with_canonical` (same spec)."""
     import re
 
     u = url.strip(TRIM_CHARS)

@@ -367,7 +367,9 @@ class CuckooFilter:
         Common path is fully vectorized (bulk first-empty placement into
         i1, then i2 for the remainder); only items whose both buckets
         are full fall into the per-element cuckoo kick loop — at normal
-        load factors that is a vanishing fraction of a batch.
+        load factors that is a vanishing fraction of a batch. The loop
+        stops at the first failed item and counts every remaining one as
+        failed.
         """
         h = np.asarray(hashes, dtype=np.int64)
         fps, i1s = self._fp(h), self._i1(h)
@@ -378,22 +380,22 @@ class CuckooFilter:
             placed2 = np.zeros(len(h), dtype=bool)
             placed2[rest] = self._bulk_place(i2s[rest], fps[rest])
             rest &= ~placed2
-        failed = 0
-        for fp, i1, i2 in zip(fps[rest], i1s[rest], i2s[rest]):
+        n_rest = int(rest.sum())
+        for n, (fp, i1, i2) in enumerate(zip(fps[rest], i1s[rest], i2s[rest])):
             # kick
             i = int(i1 if self.rng.integers(2) else i2)
             cur = np.uint16(fp)
-            ok = False
             for _ in range(self.MAX_KICKS):
                 slot = int(self.rng.integers(self.SLOTS))
                 cur, self.table[i, slot] = self.table[i, slot], cur
                 i = int(self._i2(np.array([i]), np.array([cur]))[0])
                 if self._try_put(i, cur):
-                    ok = True
                     break
-            if not ok:
-                failed += 1
-        return failed
+            else:
+                # one failure saturates the partition (every probe then
+                # answers "maybe"), so the rest need no kicking
+                return n_rest - n
+        return 0
 
     def _try_put(self, bucket: int, fp: np.uint16) -> bool:
         row = self.table[bucket]

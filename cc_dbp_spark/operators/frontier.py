@@ -7,11 +7,12 @@ DataFrame ops (the north-rule pipeline):
 A round is not one Spark job. Under AQE, ``localCheckpoint(eager=False)``
 runs the shuffle and broadcast stages upstream of it when it is called,
 so every checkpoint is a driver barrier and every exchange its own small
-job. A first round on 4 cores runs 16 jobs: :func:`run_round`
+job. A first round on 4 cores runs 13 jobs: :func:`run_round`
 checkpoints the flagged rows, the per-host rank, ONE per-host table
-(audit, credit and fetch-order offsets all derive from it) and the
-fetched rows; :func:`advance_round_state` checkpoints the credit and
-filter tables and runs one count job. Every other output is a narrow
+(audit, credit and fetch-order offsets all derive from it; the offsets
+are one running sum over it) and the fetched rows;
+:func:`advance_round_state` checkpoints the credit and filter tables
+and runs one count job. Every other output is a narrow
 projection of those checkpoints. With a state dir,
 :meth:`CrawlDriver.step` then writes the carried frontier, credit and
 filter snapshot and the round's fetch batch, audit and next
@@ -80,7 +81,7 @@ from pyspark.sql import functions as F
 
 from cc_dbp_spark.functions import parity
 from cc_dbp_spark.functions import urlnorm
-from cc_dbp_spark.functions.urlnorm import host_col, pathq_col, with_canonical
+from cc_dbp_spark.functions.urlnorm import pathq_col, with_canonical
 from cc_dbp_spark.operators import filters as flt
 from cc_dbp_spark.session import empty_df
 
@@ -315,8 +316,7 @@ def _fused_schedule(
     deferred holds the allowed rows that were not scheduled, in the
     frontier's columns.
     """
-    canon = with_canonical(candidates, "url", out="url").select("url", "depth")
-    canon = canon.withColumn("host", host_col(F.col("url")))
+    canon = with_canonical(candidates, "url", out="url", host="host")
 
     contrib = F.lit(0 if rnd == 0 else 1).cast("bigint")  # seeds carry no in-links
     # round_added enters the HEAVY stage as a round-INVARIANT sentinel
@@ -499,8 +499,8 @@ def run_round(
     # _fused_schedule: the hot-host and politeness aggregates and their
     # broadcasts, the seen-filter probe's join when a snapshot is
     # carried, the (host, salt) shuffle), `ranked` (the per-host
-    # rank), the per-host table and `fetched` (offsets windows, docs
-    # broadcast).
+    # rank), the per-host table and `fetched` (the offsets window over
+    # the per-host table, the docs broadcast).
     # Every other output is a narrow projection of them.
     flagged, scheduled, deferred = _fused_schedule(
         candidates, frontier, seen, rules, credit, rnd, cfg,
@@ -529,38 +529,15 @@ def run_round(
     ).localCheckpoint(eager=False)
 
     # global deterministic crawl order: host ASC, per-host rank ASC.
-    # position = host_offset + rank - 1, with offsets from a two-level
-    # cumulative sum over the per-host scheduled counts: level 1 runs
-    # within the 2-char host prefix (a true prefix, so global host-ASC
-    # order == (bucket ASC, host ASC)); level 2 over the per-bucket
-    # totals, a table bounded by the prefix alphabet (~2k rows at ANY
-    # frontier scale), so no window spans an unbounded single partition.
-    # The bucket totals aggregate the level-1 output, which is already
-    # partitioned by bucket, so they add no shuffle.
-    w_in = (
-        Window.partitionBy("bkt")
-        .orderBy(F.col("host").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow - 1)
+    # position = host_offset + rank - 1, where host_offset is the running
+    # sum of the scheduled counts of the hosts before it. The window runs
+    # over `hosts`, one row per active host, never over the scheduled
+    # rows: its single partition holds O(active hosts) rows.
+    w_hosts = Window.orderBy("host").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow - 1
     )
-    # partition key is a constant-per-row NON-FOLDABLE expression: a
-    # literal would be constant-folded into an empty partition spec
-    # (same execution, but it would read as an unbounded global window —
-    # this one is bounded by the prefix alphabet by construction)
-    w_bkt = (
-        Window.partitionBy(F.substring("bkt", 1, 0))
-        .orderBy(F.col("bkt").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow - 1)
-    )
-    within = hosts.select(
-        "host", "scheduled", F.substring("host", 1, 2).alias("bkt")
-    ).withColumn("within", F.coalesce(F.sum("scheduled").over(w_in), F.lit(0)))
-    bkt_off = (
-        within.groupBy("bkt")
-        .agg(F.sum("scheduled").alias("btot"))
-        .select("bkt", F.coalesce(F.sum("btot").over(w_bkt), F.lit(0)).alias("bkt_off"))
-    )
-    offsets = within.join(F.broadcast(bkt_off), "bkt").select(
-        "host", (F.col("bkt_off") + F.col("within")).alias("host_offset")
+    offsets = hosts.select(
+        "host", F.coalesce(F.sum("scheduled").over(w_hosts), F.lit(0)).alias("host_offset")
     )
 
     # fetch = join against the documents table (sandbox stand-in for the
@@ -608,9 +585,12 @@ def run_round(
     new_credit_active = hosts.select(
         "host", (F.col("credit0") - F.col("scheduled") * F.col("delay")).alias("credit")
     )
-    new_credit = credit.join(new_credit_active.select("host"), "host", "left_anti").unionByName(
-        new_credit_active
-    )
+    # broadcast like the round's other per-host joins: the carried credit
+    # is a checkpoint without size statistics, so unhinted this plans as
+    # a sort-merge join that AQE demotes only after shuffling both sides
+    new_credit = credit.join(
+        F.broadcast(new_credit_active.select("host")), "host", "left_anti"
+    ).unionByName(new_credit_active)
 
     audit = hosts.select(
         F.lit(rnd).alias("round"),

@@ -16,7 +16,8 @@ confidence sweeps:
   chars) — hashCode (both impls), SHA1-head nextDouble, the
   learning-curve draw, and nextInt(8)/nextInt(7), all bit-exact
   (requires ``javac``; skipped when absent);
-* the native-column URL canonicalizer vs its pure-Python twin over
+* the native-column URL canonicalizer (``with_canonical``, url and
+  host, as the crawl round runs it) vs its pure-Python twin over
   50,000 adversarial piece-concatenated URLs (10 seeds x 5000 —
   the suite's batch test uses 500);
 * BOTH connected-components implementations (min-label propagation
@@ -77,9 +78,7 @@ def test_gazetteer_index_vs_naive_wide():
 
 
 def test_canonicalizer_native_vs_twin_wide(spark):
-    from pyspark.sql import functions as F
-
-    from cc_dbp_spark.functions.urlnorm import canonicalize_col, canonicalize_py
+    from cc_dbp_spark.functions.urlnorm import canonicalize_py, host_py, with_canonical
 
     pieces = [
         "http://", "HTTPS://", "", "  ", "a b", "Host.COM", ":8080", ":80",
@@ -92,8 +91,8 @@ def test_canonicalizer_native_vs_twin_wide(spark):
         rng = random.Random(seed)
         urls = ["".join(rng.choices(pieces, k=rng.randint(1, 8))) for _ in range(5000)]
         df = spark.createDataFrame([(u,) for u in urls], "url string")
-        got = [r.c for r in df.select(canonicalize_col(F.col("url")).alias("c")).collect()]
-        want = [canonicalize_py(u) for u in urls]
+        got = [(r.c, r.h) for r in with_canonical(df, "url", out="c", host="h").collect()]
+        want = [(c, host_py(c)) for c in map(canonicalize_py, urls)]
         mism = [(u, g, w) for u, g, w in zip(urls, got, want) if g != w]
         assert not mism, (seed, mism[:5])
 

@@ -162,13 +162,17 @@ def test_crawl_independent_of_session_settings(spark, fixture_dir, oracle_result
 # AQE, and a localCheckpoint runs its upstream exchanges when called. The
 # count is deterministic for a fixed plan and input, so the bound has no
 # margin: one re-added branch aggregate or checkpoint adds a job.
-ROUND0_JOBS = 16
+ROUND0_JOBS = 13
 # py4j calls (ClientServerConnection.send_command) that the same round's
 # CrawlDriver.step makes to build and run its plans. The commands that
 # release JVM object references are not counted: they follow when Python
 # collects its proxies (1.2k-1.4k per step, varying run to run), while the
 # counted calls are the same on every run, so the bound has no margin.
-ROUND0_PY4J_CALLS = 4961
+ROUND0_PY4J_CALLS = 4668
+# jobs of the second fixture step, with the first step's bloom snapshot
+# carried, so the seen-filter probe, the exact confirm and the credit
+# update join carried state. Exact, like ROUND0_JOBS.
+ROUND1_JOBS = 19
 
 
 def test_round_job_count_and_visible_empty_state(spark, fixture_dir):
@@ -200,6 +204,29 @@ def test_round_job_count_and_visible_empty_state(spark, fixture_dir):
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert res["schedule"].count() > 0
     assert n_jobs <= ROUND0_JOBS, n_jobs
+
+
+def test_round1_job_count(spark, fixture_dir):
+    """A round >= 1 reads carried state: a join against it that plans as
+    a shuffle (no size statistics on a checkpoint) shows up as extra jobs."""
+    docs = spark.read.parquet(str(fixture_dir / "documents_spans.parquet"))
+    seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
+    robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
+    cfg = fr.CrawlConfig(round_budget_s=3.0, max_rounds=2, filter_kind="bloom",
+                         bloom_capacity=1 << 14, bloom_partitions=4)
+    drv = fr.CrawlDriver(spark, robots, docs, cfg)
+    out, _ = drv.step(seeds.select("url", F.col("depth").cast("int")), 0)
+    assert drv.state["filter"] is not None
+    sc = spark.sparkContext
+    group = "test-round1-job-count"
+    sc.setJobGroup(group, "second fixture crawl round")
+    try:
+        _, counts = drv.step(out["outlinks"], 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert counts.get("sched", 0) > 0
+    assert n_jobs <= ROUND1_JOBS, n_jobs
 
 
 def test_round_py4j_call_ceiling(spark, fixture_dir, monkeypatch):

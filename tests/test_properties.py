@@ -60,10 +60,9 @@ def test_group_salt_in_range(strings, nsplits):
 
 
 def test_spark_python_canonicalizer_equivalence_batch(spark):
-    """One Spark job over a fuzz batch: canonicalize_col == canonicalize_py."""
-    from pyspark.sql import functions as F
-
-    from cc_dbp_spark.functions.urlnorm import canonicalize_col
+    """One Spark job over a fuzz batch: with_canonical (url and host) ==
+    canonicalize_py and host_py."""
+    from cc_dbp_spark.functions.urlnorm import host_py, with_canonical
 
     rng = random.Random(99)
     pieces = ["http://", "HTTPS://", "", "  ", "a b", "Host.COM", ":8080", ":80",
@@ -72,8 +71,8 @@ def test_spark_python_canonicalizer_equivalence_batch(spark):
     urls = ["".join(rng.choices(pieces, k=rng.randint(1, 6))) for _ in range(500)]
     urls += ["", " ", "#", "?q", "http://", "a"]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
-    got = [r.c for r in df.select(canonicalize_col(F.col("url")).alias("c")).collect()]
-    want = [canonicalize_py(u) for u in urls]
+    got = [(r.c, r.h) for r in with_canonical(df, "url", out="c", host="h").collect()]
+    want = [(c, host_py(c)) for c in map(canonicalize_py, urls)]
     mism = [(u, g, w) for u, g, w in zip(urls, got, want) if g != w]
     assert not mism, mism[:5]
 
