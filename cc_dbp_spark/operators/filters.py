@@ -1,6 +1,7 @@
-"""Approximate-membership filters for the URL-seen set: a register-
-blocked bloom made of Spark's own functions, and a partitioned cuckoo
-filter built and probed in grouped pandas kernels.
+"""The URL-seen test of a crawl round: an exact anti-join against the
+seen set, pre-checked by an approximate-membership filter (a register-
+blocked bloom made of Spark's own functions, or a partitioned cuckoo
+filter built and probed in grouped pandas kernels).
 
 The reference's membership test is an exact in-memory ``Set.contains``
 (``kbp/.../CreateTsvDataset.java:64,172-175``); at 10^10 URLs that
@@ -13,25 +14,31 @@ becomes a filter + exact confirm:
 * bloom: register-blocked (Putze, Sanders and Singler, WEA 2007): all k
   bits of a key sit in ONE 64-bit word, ``word = pmod(url_hash, W)``,
   chosen by the 6-bit fields of a second hash ``xxhash64(url_hash)``.
-  Its state is the table of non-zero words ``(word, bits)`` plus the
-  sizing ``(words, k)`` it was built under; build and update are one
-  ``groupBy(word)`` ``bit_or``, the probe one left equi-join on the word
-  whose strategy (broadcast or shuffle) Spark's join selection picks.
-  Every step is a JVM expression: no Python worker, no driver collect.
-* cuckoo: one row per hash partition ``(pid, table, saturated)``, built,
-  updated and probed by numpy kernels in grouped and cogrouped
-  ``applyInPandas`` (insertion order matters, so each partition's
-  filter is one sequential kernel).
-* both snapshot to parquet each round -> resumable.
+  W and k are the smallest power of two and the best k <= 10 whose
+  blocked false-positive rate at capacity meets ``fpr``. Its state is
+  the table of non-zero words ``(word, bits)`` plus the sizing
+  ``(words, k)`` it was built under; build and update are one
+  ``groupBy(word)`` ``bit_or``, the probe one left equi-join on the
+  word. Every step is a JVM expression: no Python worker, no driver
+  collect.
+* cuckoo: one row per hash partition ``(pid, table, saturated)``,
+  updated and probed by numpy kernels in cogrouped ``applyInPandas``
+  (insertion order matters, so each partition's filter is one
+  sequential kernel).
+* both build by updating no snapshot, and both snapshot to parquet each
+  round -> resumable.
 
-The crawl round decides nothing about the filter: it carries a snapshot
-or ``None`` and calls :class:`SeenFilter`, which holds the kind and the
-sizing (from the ``CrawlConfig``), probes and steps the snapshot.
+The crawl round decides nothing about the seen test: it carries the
+seen set ``(url, round_seen)`` and a snapshot or ``None``, and calls
+:class:`SeenFilter`, which holds the kind and the sizing (from the
+``CrawlConfig``), hashes the urls, probes, confirms and steps the
+snapshot.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import functools
 import math
 import pathlib
 
@@ -44,26 +51,57 @@ _MIX = np.uint64(0xFF51AFD7ED558CCD)
 # the seen-filter kinds a CrawlConfig may name ("none": exact anti-join only)
 FILTER_KINDS = ("bloom", "cuckoo", "none")
 
+_WORD_BITS = 64
+_MAX_HASHES = _WORD_BITS // 6  # the 6-bit fields of one 64-bit hash
+
 
 def _per_partition(capacity: int, num_partitions: int) -> int:
     """Members each filter partition is sized for (bloom and cuckoo)."""
     return max(1024, capacity // num_partitions)
 
 
+@functools.lru_cache(maxsize=None)
+def _blocked_sizing(members: int, fpr: float) -> tuple[int, int]:
+    """``(W, k)``: the smallest power-of-two word count W, and the k <= 10
+    that minimizes the rate at it, whose blocked false-positive rate
+    with ``members`` keys is at most ``fpr``.
+
+    The rate is the Poisson-weighted sum, over j keys in the probed
+    word (mean ``members / W``), of the chance that a probe's k uniform
+    bit picks all land on bits set by the j*k picks of those keys. The
+    picks are drawn with replacement, so the set bits follow the
+    occupancy distribution of j*k picks over 64 bits. The search starts
+    at the unblocked bound ``members * ln(1/fpr) / ln(2)^2`` bits, below
+    which no bloom meets ``fpr``."""
+    s = np.arange(_WORD_BITS + 1)
+    bound = members * -math.log(fpr) / math.log(2) ** 2 / _WORD_BITS
+    words = 1 << max(0, int(bound).bit_length() - 1)
+    while True:
+        lam = members / words
+        js = np.arange(int(lam + 12 * math.sqrt(lam) + 12))
+        pois = np.exp(js * math.log(lam) - lam - np.array([math.lgamma(j + 1) for j in js]))
+        # occ[m, s]: chance that m uniform picks set exactly s distinct bits
+        occ = np.zeros((len(js) * _MAX_HASHES, _WORD_BITS + 1))
+        occ[0, 0] = 1.0
+        for m in range(1, len(occ)):
+            occ[m] = occ[m - 1] * s / _WORD_BITS
+            occ[m, 1:] += occ[m - 1, :-1] * (1 - s[:-1] / _WORD_BITS)
+        rates = [pois @ occ[js * k] @ (s / _WORD_BITS) ** k for k in range(1, _MAX_HASHES + 1)]
+        k = int(np.argmin(rates)) + 1
+        if rates[k - 1] <= fpr:
+            return words, k
+        words *= 2
+
+
 class BloomSpec:
     """Sizing for the blocked bloom: ``words`` 64-bit words (W) and
-    ``num_hashes`` bits per key (k). The bits follow the classic rule
-    per filter partition (members per partition, bits per member from
-    ``fpr``, rounded up to a power of two); k is the classic optimum,
-    capped at the ten 6-bit fields of one 64-bit hash."""
+    ``num_hashes`` bits per key (k), for ``num_partitions`` times the
+    members per partition at false-positive rate ``fpr`` (see
+    :func:`_blocked_sizing`)."""
 
     def __init__(self, capacity: int, fpr: float = 0.01, num_partitions: int = 16):
-        per_part = _per_partition(capacity, num_partitions)
-        bits = int(-per_part * math.log(fpr) / (math.log(2) ** 2))
-        bits_per_partition = 1 << max(13, (bits - 1).bit_length())
-        self.words = num_partitions * bits_per_partition // 64
-        k = round(bits_per_partition / per_part * math.log(2))
-        self.num_hashes = min(64 // 6, max(1, k))
+        members = num_partitions * _per_partition(capacity, num_partitions)
+        self.words, self.num_hashes = _blocked_sizing(members, fpr)
 
     def word(self, hash_col: str):
         """The key's word: ``pmod(hash, W)``."""
@@ -96,14 +134,6 @@ class BloomSpec:
         )
 
 
-def _split(flagged, cols):
-    """(definitely_new, maybe_seen) rows of a flagged frame, in ``cols``."""
-    return (
-        flagged.filter(~F.col("maybe_seen")).select(*cols),
-        flagged.filter(F.col("maybe_seen")).select(*cols),
-    )
-
-
 def update_bloom_df(prev_bloom_df, new_seen_df, spec: BloomSpec,
                     hash_col: str = "url_hash"):
     """The bloom snapshot of ``prev_bloom_df``'s members (``None``: no
@@ -134,9 +164,8 @@ def empty_bloom_df(spark):
 def flag_with_bloom(candidates_df, bloom_df, spec: BloomSpec, hash_col: str = "url_hash"):
     """``candidates_df`` + ``maybe_seen``, true when all k bits of the key
     are set in its word: a left equi-join of the candidates on their
-    word with the snapshot rows (Spark's join selection broadcasts or
-    shuffles it), then one bitwise test; a word with no row has no
-    members."""
+    word with the snapshot rows, then one bitwise test; a word with no
+    row has no members."""
     snap = spec.rows(bloom_df).toDF("__word", "__bits")
     hit = F.bitwise_not(F.col("__bits")).bitwiseAND(spec.mask(hash_col)) == 0
     return candidates_df.join(snap, spec.word(hash_col) == F.col("__word"), "left").select(
@@ -160,38 +189,20 @@ def _with_pid(df, hash_col: str, num_partitions: int):
     return df.withColumn("pid", F.pmod(F.col(hash_col), F.lit(num_partitions)).cast("int"))
 
 
-def build_cuckoo_df(seen_df, capacity_per_partition: int, num_partitions: int = 16,
-                    hash_col: str = "url_hash"):
-    """Distributed partitioned cuckoo build: groupBy(pid) -> one serialized
-    filter row per hash partition (same lifecycle as the bloom: snapshot
-    to parquet, reload, probe). Returns (pid int, table binary)."""
-    # the grouped/cogrouped kernels in this module carry no type hints:
-    # applyInPandas warns on every call when it finds partial ones
-    def _build(key, pdf):
-        cf = CuckooFilter(capacity_per_partition)
-        failed = cf.insert(pdf[hash_col].to_numpy(dtype=np.int64))
-        # overflow would create FALSE NEGATIVES (seen url reported
-        # definitely-new -> re-crawled -> seen-set divergence); a
-        # saturated partition instead degrades every probe to "maybe",
-        # falling back to the exact anti-join for that hash range
-        return pd.DataFrame(
-            {"pid": [key[0]], "table": [cf.to_bytes()], "saturated": [failed > 0]}
-        )
-
-    return _with_pid(seen_df, hash_col, num_partitions).groupBy("pid").applyInPandas(
-        _build, "pid int, table binary, saturated boolean"
-    )
-
-
 def update_cuckoo_df(prev_cuckoo_df, new_seen_df, capacity_per_partition: int,
                      num_partitions: int = 16, hash_col: str = "url_hash"):
-    """Incremental cuckoo snapshot update: cogroup the previous
-    per-partition tables with ONLY the newly-seen urls and insert.
+    """The cuckoo snapshot of ``prev_cuckoo_df``'s members (``None``: no
+    previous snapshot, the build) plus ``new_seen_df``'s: cogroup the
+    previous per-partition tables with ONLY the new keys and insert.
     A partition that ever overflows stays saturated (all probes "maybe",
     exact anti-join decides) — correctness never depends on the filter.
     """
+    if prev_cuckoo_df is None:
+        prev_cuckoo_df = empty_cuckoo_df(new_seen_df.sparkSession)
     new = _with_pid(new_seen_df, hash_col, num_partitions).select("pid", hash_col)
 
+    # the cogrouped kernels in this module carry no type hints:
+    # applyInPandas warns on every call when it finds partial ones
     def _upd(key, prev_pdf, new_pdf):
         if len(prev_pdf):
             cf = CuckooFilter.from_bytes(prev_pdf["table"].iloc[0])
@@ -200,6 +211,11 @@ def update_cuckoo_df(prev_cuckoo_df, new_seen_df, capacity_per_partition: int,
             cf = CuckooFilter(capacity_per_partition)
             sat = False
         if len(new_pdf):
+            # overflow would create FALSE NEGATIVES (seen url reported
+            # definitely-new -> re-crawled -> seen-set divergence); a
+            # saturated partition instead degrades every probe to
+            # "maybe", falling back to the exact anti-join for that
+            # hash range
             failed = cf.insert(new_pdf[hash_col].to_numpy(dtype=np.int64))
             sat = sat or failed > 0
         return pd.DataFrame({"pid": [key[0]], "table": [cf.to_bytes()], "saturated": [sat]})
@@ -217,15 +233,15 @@ def empty_cuckoo_df(spark):
     return empty_df(spark, "pid int, table binary, saturated boolean")
 
 
-def prune_with_cuckoo(candidates_df, cuckoo_df, num_partitions: int = 16,
-                      hash_col: str = "url_hash"):
-    """Split candidates into (definitely_new, maybe_seen) via cogrouped
-    cuckoo probe: each partition's filter row meets its candidate group
-    exactly once (cogroup on pid), and a partition without a row has no
-    members, so its candidates are all new. Advisory exactly like the
-    bloom path: false positives fall through to the exact anti-join, so
-    the seen-set decision stays exact. Unlike bloom, the cuckoo filter
-    also supports delete (URL re-crawl eviction) on the snapshot."""
+def flag_with_cuckoo(candidates_df, cuckoo_df, num_partitions: int = 16,
+                     hash_col: str = "url_hash"):
+    """``candidates_df`` + ``maybe_seen``, by a cogrouped cuckoo probe:
+    each partition's filter row meets its candidate group exactly once
+    (cogroup on pid), and a partition without a row has no members, so
+    its candidates are all new. Advisory exactly like the bloom: false
+    positives fall through to the exact anti-join, so the seen-set
+    decision stays exact. Unlike bloom, the cuckoo filter also supports
+    delete (URL re-crawl eviction) on the snapshot."""
     cand = _with_pid(candidates_df, hash_col, num_partitions)
     out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in cand.schema.fields)
     out_schema += ", maybe_seen boolean"
@@ -249,14 +265,21 @@ def prune_with_cuckoo(candidates_df, cuckoo_df, num_partitions: int = 16,
         .cogroup(cuckoo_df.groupBy("pid"))
         .applyInPandas(_probe, out_schema)
     )
-    return _split(probed, candidates_df.columns)
+    return probed.select(*candidates_df.columns, "maybe_seen")
+
+
+def _url_hash():
+    """``xxhash64(url)``, the ``url_hash`` key both filter kinds probe
+    and insert."""
+    return F.xxhash64(F.col("url"))
 
 
 @dataclasses.dataclass(frozen=True)
 class SeenFilter:
-    """The seen filter as a crawl round uses it: its kind, its sizing,
-    its probe and its snapshot step. Built only from a ``CrawlConfig``
-    (:meth:`of`); the round carries its snapshot, or ``None``."""
+    """The seen test as a crawl round uses it: its kind, its sizing, the
+    exact test of candidates against the seen set, and the snapshot
+    step. Built only from a ``CrawlConfig`` (:meth:`of`); the round
+    carries its snapshot, or ``None``."""
 
     kind: str
     capacity: int
@@ -267,29 +290,48 @@ class SeenFilter:
     def of(cls, cfg) -> "SeenFilter":
         return cls(cfg.filter_kind, cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_partitions)
 
-    def split(self, candidates_df, snapshot, hash_col: str = "url_hash"):
-        """(definitely_new, maybe_seen) candidates against ``snapshot``;
-        an exact anti-join must confirm the maybe rows."""
-        if self.kind == "cuckoo":
-            return prune_with_cuckoo(candidates_df, snapshot, self.partitions, hash_col)
-        spec = BloomSpec(self.capacity, self.fpr, self.partitions)
-        flagged = flag_with_bloom(candidates_df, snapshot, spec, hash_col)
-        return _split(flagged, candidates_df.columns)
+    def _bloom_spec(self) -> BloomSpec:
+        return BloomSpec(self.capacity, self.fpr, self.partitions)
 
-    def advance(self, snapshot, seen_hashes, new_hashes):
+    def unseen(self, candidates_df, seen_df, snapshot):
+        """The rows of ``candidates_df`` whose ``url`` is not in
+        ``seen_df``, exactly. With no ``snapshot`` that is one left-anti
+        join. With one, the candidates are hashed and probed; the
+        "definitely new" rows skip the anti-join and only the "maybe
+        seen" rows go through it."""
+        known = seen_df.select("url")
+        if snapshot is None:
+            return candidates_df.join(known, "url", "left_anti")
+        hashed = candidates_df.withColumn("url_hash", _url_hash())
+        if self.kind == "cuckoo":
+            flagged = flag_with_cuckoo(hashed, snapshot, self.partitions)
+        else:
+            flagged = flag_with_bloom(hashed, snapshot, self._bloom_spec())
+        # both branches below read `flagged`, and across branches Spark
+        # reuses only exchanges. In a round >= 1 the bloom join plans as
+        # a shuffle of the candidates by word (the carried snapshot is a
+        # checkpoint without size statistics; AQE demotes the join to a
+        # broadcast only after that shuffle ran), and that reused
+        # exchange keeps the canonicalization upstream of it from
+        # running once per branch. A probe broadcast from the start
+        # would have no candidate-side exchange and canonicalize twice.
+        cols = candidates_df.columns
+        definitely_new = flagged.filter(~F.col("maybe_seen")).select(*cols)
+        maybe = flagged.filter(F.col("maybe_seen")).select(*cols)
+        return definitely_new.unionByName(maybe.join(known, "url", "left_anti"))
+
+    def advance(self, snapshot, seen_df, new_df):
         """The snapshot after a round (``None`` for kind "none"): built
-        from ``seen_hashes``, the whole seen set, when the round carried
-        none; else ``snapshot`` updated from ``new_hashes``, the round's
-        newly scheduled urls — O(new), not O(seen)."""
+        from the urls of ``seen_df``, the whole seen set, when the round
+        carried none; else ``snapshot`` updated from ``new_df``'s, the
+        round's newly scheduled urls — O(new), not O(seen)."""
         if self.kind == "none":
             return None
+        hashes = (seen_df if snapshot is None else new_df).select(_url_hash().alias("url_hash"))
         if self.kind == "cuckoo":
             per_part = _per_partition(self.capacity, self.partitions)
-            if snapshot is None:
-                return build_cuckoo_df(seen_hashes, per_part, self.partitions)
-            return update_cuckoo_df(snapshot, new_hashes, per_part, self.partitions)
-        spec = BloomSpec(self.capacity, self.fpr, self.partitions)
-        return update_bloom_df(snapshot, seen_hashes if snapshot is None else new_hashes, spec)
+            return update_cuckoo_df(snapshot, hashes, per_part, self.partitions)
+        return update_bloom_df(snapshot, hashes, self._bloom_spec())
 
     def load(self, spark, path):
         """The snapshot checkpointed at ``path``; ``None`` when there is

@@ -32,10 +32,11 @@ schedule order, seen set, and emitted span sequences match exactly.
 Scale design (10^10-URL frontier, SURVEY.md §7):
 * everything is DataFrame ops — scans prune columns, filters push down,
   joins are broadcast where one side is per-host metadata;
-* the seen-set membership test is pre-checked by a partitioned filter
-  (:class:`.filters.SeenFilter` owns its kind, sizing and probe; the
-  round carries only its snapshot) with an exact left-anti join
-  confirming the "maybe" subset, so the decision stays exact;
+* the seen set is ``(url, round_seen)``, and the seen test is one call
+  (:meth:`.filters.SeenFilter.unseen`): the filter module hashes the
+  urls, pre-checks them against the carried filter snapshot and
+  confirms the filter-positive ones with an exact left-anti join, so
+  the decision stays exact; the round carries only the snapshot;
 * per-host top-k uses two-phase salted windows for hot hosts — the
   reference's gsplits skew pattern (detect ``RelexTsvDataset.java:100-118``,
   salt D5 ``RelexMention.java:127-132``) applied to hosts, because AQE
@@ -46,12 +47,12 @@ Scale design (10^10-URL frontier, SURVEY.md §7):
   resume, ``spark/.../RelexBuildDataset.java:72-93``).
 
 Python in the round runs only in the cuckoo filter's kernels (its
-grouped build and update and cogrouped probe in :mod:`.filters`); the
+cogrouped update and probe in :mod:`.filters`); the
 bloom filter, priority, tie draw and salt are native columns, and every
 other expression is JVM/codegen.
 
 Scale deployment notes (10^10 frontier, 1000 executors):
-* per-round costs are O(candidates) + O(bloom "maybe" confirm): the
+* per-round costs are O(candidates) + O(filter-positive confirm): the
   membership filters update incrementally from newly-scheduled urls
   (never rebuilt from the seen set) and the whole schedule derives from
   ONE (host, salt)-keyed shuffle of the round's rows;
@@ -59,7 +60,7 @@ Scale deployment notes (10^10 frontier, 1000 executors):
   for filter-positive candidates. In deployment the seen table should
   be a bucketed+sorted-by-url table (Iceberg or Hive-bucketed parquet,
   append-only: one new file per bucket per round): the anti-join then
-  shuffles only the "maybe" rows and streams each seen bucket once,
+  shuffles only the filter-positive rows and streams each seen bucket once,
   with no exchange of the seen side. This layout is IMPLEMENTED and
   plan-asserted in-session (``plans/layout.write_bucketed_snapshot`` +
   ``bucketed_anti_join``; tests/test_serde_layout_streaming asserts
@@ -67,7 +68,7 @@ Scale deployment notes (10^10 frontier, 1000 executors):
   scan as ``state["seen"]`` to use it in the round loop. The sandbox's
   in-memory catalog cannot persist bucket metadata across sessions, so
   cross-session checkpoints remain plain parquet and the confirm relies
-  on the filters keeping "maybe" small (fpr * candidates + re-links).
+  on the filters keeping the positives few (fpr * candidates + re-links).
 """
 
 from __future__ import annotations
@@ -92,13 +93,11 @@ class CrawlConfig:
     default_crawl_delay_s: float = 1.0
     max_rounds: int = 10
     # seen-set pre-check, one of filters.FILTER_KINDS: "bloom" | "cuckoo"
-    # (advisory, prune-only) | "none"; filters.SeenFilter sizes and probes it
+    # (advisory, prune-only) | "none"; filters.SeenFilter runs the seen test
     filter_kind: str = "bloom"
     bloom_capacity: int = 1 << 20
     bloom_fpr: float = 0.01
     bloom_partitions: int = 16
-    hot_host_threshold: int = 10_000  # counts above this get salted top-k
-    hot_host_cap: int = 5_000  # target rows per salt split
 
     def __post_init__(self):
         if self.filter_kind not in flt.FILTER_KINDS:
@@ -107,8 +106,12 @@ class CrawlConfig:
 
 FRONTIER_SCHEMA = "url string, host string, depth int, link_count bigint, round_added int"
 FRONTIER_COLS = ("url", "host", "depth", "link_count", "round_added")
-SEEN_SCHEMA = "url string, url_hash bigint, round_seen int"
+SEEN_SCHEMA = "url string, round_seen int"
 CREDIT_SCHEMA = "host string, credit double"
+
+# rows per salt split of a hot host: a host with more (sampled) raw rows
+# gets ceil(rows / HOT_HOST_ROWS) splits in its top-k
+HOT_HOST_ROWS = 5_000
 
 # round-invariant placeholder for "added this round" inside the heavy
 # scheduling stage (see _fused_schedule); always sorts above real rounds
@@ -300,11 +303,9 @@ def _fused_schedule(
     rows contribute their accumulated link_count / earliest round_added,
     candidate rows contribute 1 link each (0 in the seed round). The
     seen-set test applies to candidates only (frontier rows are unseen
-    by invariant). With a carried ``filter_df`` snapshot the filter
-    prunes (:class:`.filters.SeenFilter` probes it) and an exact
-    anti-join over the surviving "maybe" rows confirms. Without one the
-    exact anti-join runs alone: the filter is only a pre-check, so the
-    answer is the same.
+    by invariant) and is :meth:`.filters.SeenFilter.unseen` against the
+    carried ``filter_df`` snapshot, or against none: the filter is only
+    a pre-check, so the answer is the same.
 
     Hot-host detection uses RAW (pre-dedupe) counts: the active-host set
     is dedupe-invariant, and salting never changes the schedule (it only
@@ -332,15 +333,8 @@ def _fused_schedule(
         contrib.alias("lc_contrib"),
         F.lit(_ROUND_SENTINEL).alias("round_added"),
     )
-    if seen_nonempty and filter_df is None:
-        cand_rows = cand_rows.join(seen.select("url"), "url", "left_anti")
-    elif seen_nonempty:
-        # filter_df: the incrementally-maintained snapshot (updated from
-        # newly-seen urls each round, O(new) not O(seen))
-        cand_rows = cand_rows.withColumn("url_hash", F.xxhash64(F.col("url")))
-        definitely_new, maybe = flt.SeenFilter.of(cfg).split(cand_rows, filter_df)
-        confirmed_new = maybe.join(seen.select("url"), "url", "left_anti")
-        cand_rows = definitely_new.unionByName(confirmed_new).drop("url_hash")
+    if seen_nonempty:
+        cand_rows = flt.SeenFilter.of(cfg).unseen(cand_rows, seen, filter_df)
 
     if frontier_nonempty:
         all_rows = frontier.select(
@@ -384,10 +378,10 @@ def _fused_schedule(
         .select(_raw_host_col(F.col("url")).alias("host"))
         .groupBy("host")
         .agg((F.count("*") * _S).alias("n_raw"))
-        .filter(F.col("n_raw") > cfg.hot_host_threshold)
+        .filter(F.col("n_raw") > HOT_HOST_ROWS)
         .select(
             "host",
-            F.ceil(F.col("n_raw") / F.lit(cfg.hot_host_cap)).cast("int").alias("num_splits"),
+            F.ceil(F.col("n_raw") / F.lit(HOT_HOST_ROWS)).cast("int").alias("num_splits"),
         )
     )
     src = all_rows.join(F.broadcast(hot_df), "host", "left")
@@ -473,7 +467,6 @@ def _fused_schedule(
 
 
 def run_round(
-    spark: SparkSession,
     candidates: DataFrame,
     state: dict,
     rules: DataFrame,
@@ -567,20 +560,12 @@ def run_round(
         .select(F.col("s.media_ref").alias("url"), (F.col("depth") + 1).alias("depth"))
     )
 
-    new_seen = seen.unionByName(
-        fetch_batch.select(
-            "url", F.xxhash64(F.col("url")).alias("url_hash"), F.lit(rnd).alias("round_seen")
-        )
-    )
+    new_seen = seen.unionByName(fetch_batch.select("url", F.lit(rnd).alias("round_seen")))
     # filter-snapshot step: O(newly scheduled urls) per round. With no
     # carried snapshot (fresh start, or a resume from a checkpoint without
     # one) it is built from the updated seen set once; every later round
     # is incremental.
-    new_filter = flt.SeenFilter.of(cfg).advance(
-        state["filter"],
-        new_seen.select("url_hash"),
-        fetch_batch.select(F.xxhash64(F.col("url")).alias("url_hash")),
-    )
+    new_filter = flt.SeenFilter.of(cfg).advance(state["filter"], new_seen, fetch_batch)
 
     new_credit_active = hosts.select(
         "host", (F.col("credit0") - F.col("scheduled") * F.col("delay")).alias("credit")
@@ -682,9 +667,7 @@ class CrawlDriver:
         :func:`advance_round_state`). ``out["outlinks"]`` are the next
         round's candidates."""
         # module globals, looked up per call so wrappers can time them
-        out = run_round(
-            self.spark, candidates, self.state, self.rules, self.docs, rnd, self.cfg
-        )
+        out = run_round(candidates, self.state, self.rules, self.docs, rnd, self.cfg)
         # the checkpoints of the wide state tables truncate their lineage
         # (without them the logical plan grows per round and analysis
         # dominates runtime)
@@ -735,8 +718,7 @@ class CrawlDriver:
         # a url is seen in the round that fetched it
         state["seen"] = self.spark.read.parquet(*(
             str(self.state_dir / f"round_{i:04d}" / "fetch_batch") for i in range(rnd + 1)
-        )).select("url", F.xxhash64(F.col("url")).alias("url_hash"),
-                  F.col("round").alias("round_seen"))
+        )).select("url", F.col("round").alias("round_seen"))
         state["filter"] = flt.SeenFilter.of(self.cfg).load(self.spark, d / "filter")
         commit = json.loads((d / "COMMIT").read_text())
         for key, table in (("n_seen", "seen"), ("n_frontier", "frontier")):

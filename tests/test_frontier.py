@@ -168,7 +168,7 @@ ROUND0_JOBS = 13
 # release JVM object references are not counted: they follow when Python
 # collects its proxies (1.2k-1.4k per step, varying run to run), while the
 # counted calls are the same on every run, so the bound has no margin.
-ROUND0_PY4J_CALLS = 4668
+ROUND0_PY4J_CALLS = 4626
 # jobs of the second fixture step, with the first step's bloom snapshot
 # carried, so the seen-filter probe, the exact confirm and the credit
 # update join carried state. Exact, like ROUND0_JOBS.
@@ -276,18 +276,28 @@ def test_slow_host_deferred(spark_result, oracle_result):
     assert not any("host45" in u for u in oracle_result.seen)
 
 
-def test_salted_topk_equals_plain(spark, fixture_dir):
+def test_salted_topk_equals_plain(spark, fixture_dir, monkeypatch):
     """Hot-host salting must not change results (two-phase == single-phase)."""
     docs = spark.read.parquet(str(fixture_dir / "documents_spans.parquet"))
     seeds = spark.read.parquet(str(fixture_dir / "seeds.parquet"))
     robots = spark.read.parquet(str(fixture_dir / "robots_rules.parquet"))
-    base = dict(round_budget_s=3.0, max_rounds=2, filter_kind="none")
-    plain = fr.CrawlDriver(
-        spark, robots, docs, fr.CrawlConfig(**base, hot_host_threshold=10**9)
-    ).run(seeds)
-    salted = fr.CrawlDriver(
-        spark, robots, docs, fr.CrawlConfig(**base, hot_host_threshold=5, hot_host_cap=5)
-    ).run(seeds)
+    cfg = fr.CrawlConfig(round_budget_s=3.0, max_rounds=2, filter_kind="none")
+    monkeypatch.setattr(fr, "HOT_HOST_ROWS", 10**9)
+    plain = fr.CrawlDriver(spark, robots, docs, cfg).run(seeds)
+    monkeypatch.setattr(fr, "HOT_HOST_ROWS", 5)
+    # the flagged rows of each salted round, to see that some host split
+    flagged = []
+    schedule = fr._fused_schedule
+
+    def recorded(*args, **kwargs):
+        out = schedule(*args, **kwargs)
+        flagged.append(out[0])
+        return out
+
+    monkeypatch.setattr(fr, "_fused_schedule", recorded)
+    salted = fr.CrawlDriver(spark, robots, docs, cfg).run(seeds)
+    monkeypatch.undo()
+    assert any(f.filter(F.col("salt") > 0).count() > 0 for f in flagged)
     p = [(r["round"], r["position"], r["url"]) for r in plain["schedule"].orderBy("round", "position").collect()]
     s = [(r["round"], r["position"], r["url"]) for r in salted["schedule"].orderBy("round", "position").collect()]
     assert p == s
@@ -366,13 +376,8 @@ def _assert_fused_round_equals_oracle_step(
     from cc_dbp_spark.operators import filters as flt
 
     cand = spark.createDataFrame(raw, "url string, depth int")
-    # seen rows keep run_round's invariant url_hash = xxhash64(url): the
-    # membership filters are built from it
-    seen = spark.createDataFrame(
-        [(u, 0) for u in seen_urls], "url string, round_seen int"
-    ).select("url", F.xxhash64("url").alias("url_hash"), "round_seen")
-    hashes = seen.select("url_hash")
-    filter_df = flt.SeenFilter.of(cfg).advance(None, hashes, hashes)
+    seen = spark.createDataFrame([(u, 0) for u in seen_urls], fr.SEEN_SCHEMA)
+    filter_df = flt.SeenFilter.of(cfg).advance(None, seen, seen)
     flagged, scheduled, deferred = fr._fused_schedule(
         cand,
         spark.createDataFrame(frontier_rows, fr.FRONTIER_SCHEMA),
@@ -589,7 +594,7 @@ def test_unknown_filter_kind_raises():
 
 
 @pytest.mark.parametrize("seed", [3, 17])
-def test_fused_randomized_differential(spark, seed):
+def test_fused_randomized_differential(spark, seed, monkeypatch):
     """Randomized fast-vs-naive: fused single-shuffle round == the
     oracle's one-round step over random frontiers, seen sets, robots,
     credits, filter settings and hot-host settings."""
@@ -622,9 +627,8 @@ def test_fused_randomized_differential(spark, seed):
         round_budget_s=rng.choice([2.0, 5.0]),
         filter_kind="bloom" if rng.random() < 0.5 else "none",
         bloom_capacity=1 << 12, bloom_partitions=4,
-        hot_host_threshold=rng.choice([10, 10**9]),
-        hot_host_cap=5,
     )
+    monkeypatch.setattr(fr, "HOT_HOST_ROWS", rng.choice([5, 10**9]))
     rnd = rng.randint(1, 3)
     _assert_fused_round_equals_oracle_step(
         spark, raw, frontier_rows, seen_urls, robots, credit_rows, rnd, cfg
@@ -646,7 +650,7 @@ def test_bucketed_seen_state_equals_plain(spark, fixture_dir, tmp_path_factory):
 
     rules = fr.translate_robots(robots)
     out0 = fr.run_round(
-        spark, seeds.select("url", F.col("depth").cast("int")),
+        seeds.select("url", F.col("depth").cast("int")),
         fr.empty_state(spark), rules, docs, 0, cfg,
     )
     seen = out0["seen"].localCheckpoint(eager=True)
@@ -663,7 +667,7 @@ def test_bucketed_seen_state_equals_plain(spark, fixture_dir, tmp_path_factory):
 
     def round1(seen_df):
         out = fr.run_round(
-            spark, cand1, {**carried, "seen": seen_df}, rules, docs, 1, cfg
+            cand1, {**carried, "seen": seen_df}, rules, docs, 1, cfg
         )
         batch = out["fetch_batch"]
         return [(r["position"], r["url"]) for r in batch.orderBy("position").collect()]
