@@ -27,6 +27,15 @@ Canonical form:
 
 Plus host/path extraction (politeness grouping key) and a numpy
 xxhash64 (Spark-compatible, seed 42) for the filter path.
+
+Lowercasing (step 4) is Unicode-version dependent. The engine session
+(``session.ENGINE_CONF``) lowercases through the JVM; checked over every
+code point, JDK 17's mapping differs from Python 3.11's ``str.lower`` on
+40 code points, all Unicode 14 additions the JDK does not know (ICU 77,
+Spark's default, differs on 27, all Unicode 15/16 additions Python does
+not know). The Python twin and Spark agree on all text that both Unicode
+versions know, non-ASCII hosts included (tests/test_urlnorm.py
+``CASES``).
 """
 
 from __future__ import annotations

@@ -2,7 +2,8 @@
 
 Tuned for correctness-first determinism plus scale-minded defaults:
 AQE on (runtime re-plan, skew-join splitting), Arrow pandas UDFs on,
-shuffle partitions proportional to parallelism so two-parallelism
+case mapping through the JVM rather than ICU (``ENGINE_CONF``), shuffle
+partitions proportional to parallelism so two-parallelism
 scaling comparisons are honest (SURVEY.md §7 risks).
 """
 
@@ -12,6 +13,31 @@ import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+
+# The engine's settings for every session that crawls: `get_spark` and
+# the spark-submit job (tools/run_crawl.py) both apply this dict, so a
+# cluster crawl plans and lowercases as the tests do. Local-mode tuning
+# (partition count, UI, driver memory, shuffle compression) stays in
+# `get_spark`.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
+    "spark.sql.session.timeZone": "UTC",
+    # `lower`/`upper` through the JVM (`UTF8String.toLowerCase`), not
+    # ICU. With ICU on, the first `lower` in a JVM runs the static
+    # initializer of `CollationAwareUTF8String`, which title-cases all
+    # 1,114,112 code points through ICU: about 1.2-1.5 s per JVM, on the
+    # first crawl round's critical path, and 200-400 MB of peak RSS
+    # (`frontier_bulk`, 4 cores).
+    # Both paths take the same ASCII fast path; on non-ASCII text they
+    # differ from Python's `str.lower` only on recent Unicode additions
+    # (see the `urlnorm` module docstring).
+    "spark.sql.icu.caseMappings.enabled": "false",
+}
 
 
 def get_spark(
@@ -28,16 +54,10 @@ def get_spark(
         # compute and absorb stragglers (measured ~25-40% on the 8M-URL
         # scheduling round at both 2 and 8 cores)
         shuffle_partitions = max(cores * 3, 6)
-    b = (
+    return (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         # local mode: driver == executor. 8g is deliberate: benchmarks
         # clear persisted localCheckpoint blocks between reps
@@ -54,10 +74,9 @@ def get_spark(
         # two lines are local-mode-only; tools/submit.sh does not set them).
         .config("spark.shuffle.compress", "false")
         .config("spark.shuffle.spill.compress", "false")
+        .config(map=ENGINE_CONF | (extra_conf or {}))
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        b = b.config(k, v)
-    return b.getOrCreate()
 
 
 def empty_df(spark: SparkSession, schema: str) -> DataFrame:

@@ -29,6 +29,16 @@ CASES = [
     "http://host.example.com/p?q=UPPER#X",
     "http://a.b.c.example.com:80/%7Euser/page",
     "http://example.com/?",
+    # uppercase non-ASCII hosts: the session lowercases through the JVM,
+    # which must still match Python's str.lower
+    "http://\u212aELVIN.example.com/A",  # Kelvin sign -> ASCII k
+    "http://ÀÉÎ.FR:80/Path",
+    "https://МОСКВА.рф/",
+    "http://ΣΊΣΥΦΟΣ.gr",  # sigma before '.' stays non-final
+    "http://İSTANBUL.com/x",  # dotted capital I -> i + combining dot
+    "HTTP://Straße.DE/",
+    "http://Ǉ.x",
+    "http://ᾼ.com:443/",
 ]
 
 
@@ -83,6 +93,22 @@ def test_with_canonical_codegen_compiles(spark):
         assert out.count() == 100
     finally:
         spark.conf.set("spark.sql.codegen.fallback", "true")
+
+
+def test_canonicalizer_lowercases_without_icu(spark, capsys):
+    """The engine session lowercases through the JVM
+    (``UTF8String.toLowerCase``), not ICU: ICU's first ``lower`` in a JVM
+    builds a title-case table over every code point, about a second of
+    the first crawl round."""
+    from cc_dbp_spark.operators import frontier
+
+    df = spark.createDataFrame([(u,) for u in CASES], "url string")
+    capsys.readouterr()
+    urlnorm.with_canonical(df, "url", out="c", host="h").explain(mode="codegen")
+    df.select(frontier._raw_host_col(F.col("url"))).explain(mode="codegen")
+    out = capsys.readouterr().out
+    assert "Lower.execBinary(" in out
+    assert "execBinaryICU" not in out
 
 
 def test_canonicalize_idempotent():

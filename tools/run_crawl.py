@@ -14,6 +14,7 @@ import argparse
 
 from pyspark.sql import SparkSession
 
+from cc_dbp_spark import session
 from cc_dbp_spark.operators import filters, frontier
 
 
@@ -32,9 +33,7 @@ def main() -> None:
 
     spark = (
         SparkSession.builder.appName("cc-dbp-spark-crawl")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=session.ENGINE_CONF)
         .getOrCreate()
     )
     cfg = frontier.CrawlConfig(
